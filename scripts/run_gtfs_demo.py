@@ -44,11 +44,9 @@ def main() -> None:
     feed = parse_feed_json(spark.createDataFrame(
         [(s,) for s in fixtures_gtfs.make_feed_snapshots()], "feed_json string"))
     headers, stops = flatten_trip_updates(feed)
-    wh.append("bronze", "trip_updates_raw", headers)
-    wh.append("bronze", "trip_stop_times", stops)
-    wh.append("bronze", "vehicle_positions_raw", flatten_vehicle_positions(feed))
-    print({t: wh.table("bronze", t).count()
-           for t in ("trip_updates_raw", "trip_stop_times", "vehicle_positions_raw")})
+    print({t: wh.append("bronze", t, df) for t, df in (
+        ("trip_updates_raw", headers), ("trip_stop_times", stops),
+        ("vehicle_positions_raw", flatten_vehicle_positions(feed)))})
 
     print("== silver refresh (1st) ==")
     print(refresh_silver(wh))

@@ -27,18 +27,22 @@ from tests.oracle_harness import compare, duck_connection
 # every rows-only registration names its value-oracled twin query or
 # byte-exact pytest reference here; the twin is printed next to the
 # ROWS-ONLY line so a reviewer never has to hunt for the compensating
-# check.  Adding a rows-only query WITHOUT an entry here fails the
+# check.  A pytest reference is a `tests/<module>.py[::<test>]` token;
+# tests/test_entry_contract.py pins that each one runs in the default
+# tier.  Adding a rows-only query WITHOUT an entry here fails the
 # startup assert below.
 ROWS_ONLY_TWINS: dict[str, str] = {
     "b23_approx_sketches": "exact twins b17/b20/b22 (value-oracled)",
     "c06f_minhash_neardup_fast":
         "twin c06 (portable-hash banding oracle) + "
-        "tests/test_round10.py::test_c06f_recall_contract",
+        "tests/test_rows_only_references.py::test_c06f_recall_contract",
     "c07f_simhash_neardup_fast":
-        "twin c07 (exact all-pairs spec) + multi-table recall pytest",
+        "twin c07 (exact all-pairs spec) + tests/test_operators_extra.py"
+        "::test_simhash_multitable_full_recall_vs_brute_force",
     "c18_kmeans_ivf_ann":
         "twin c09 (fixed-centroid IVF, value-oracled) + "
-        "tests/test_operators_extra.py full-probe==brute-force",
+        "tests/test_operators_extra.py"
+        "::test_kmeans_ivf_full_probe_equals_brute_force",
     "c32_pagerank_centrality":
         "twin c104_pagerank_int (integer-ppm, driver-green r04)",
     "c26_pq_ann": "twin c26c_pq_adc_int (int-grid PQ/ADC, value-oracled)",
@@ -48,9 +52,14 @@ ROWS_ONLY_TWINS: dict[str, str] = {
     "b49_sliding_distinct_sketch": "twin b154_sliding_hll_distinct",
     "c44_mllib_tfidf": "twin c14_tfidf_top_terms (exact-integer tf-idf)",
     "c59_compression_ratio":
-        "tests/test_round5.py byte-exact python-zlib reference",
+        "tests/test_rows_only_references.py"
+        "::test_compression_ratio_matches_python_zlib_exactly "
+        "(byte-exact python-zlib reference)",
     "c66_quality_classifier":
-        "tests/test_round5.py class-separation + determinism pins",
+        "tests/test_rows_only_references.py"
+        "::test_c66_classifier_separates_weak_classes + "
+        "tests/test_rows_only_references.py"
+        "::test_c66_rerun_is_deterministic",
     "c82b_bpe_learn_merges":
         "tests/test_bpe.py exact sequential Sennrich reference",
     "c83_bpe_token_frequencies": "tests/test_bpe.py (same merge loop)",

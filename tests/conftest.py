@@ -37,14 +37,8 @@ def round_half_up(x: float, digits: int) -> float:
 
 @pytest.fixture(scope="session")
 def spark():
-    # 48g heap: the suite has grown to ~640 tests / ~13k Spark stages
-    # in ONE long-lived local-mode JVM; at the 24g default the driver
-    # eventually died mid-suite (py4j ConnectionRefused cascade) from
-    # accumulated codegen/listener/checkpoint state.  The box has
-    # 125 GiB; the env var still overrides.
     s = get_spark("tests", extra_conf={
         "spark.sql.shuffle.partitions": "8",
-        "spark.driver.memory": "48g",
     })
     yield s
 
@@ -80,7 +74,7 @@ def _module_gc():
 _FULL_ONLY_MODULES = {
     "test_properties", "test_qdigest_properties",
     "test_round13_properties", "test_round15_properties",
-    "test_partition_invariance", "test_bpe", "test_gtfs_pb",
+    "test_partition_invariance", "test_gtfs_pb",
     "test_window_references", "test_r07_window_references",
     "test_r08_window_references", "test_sketch_references",
     "test_curation_references", "test_lsh_banding_references",
@@ -103,6 +97,13 @@ _FULL_ONLY_TESTS = {
 }
 
 
+def full_tier_only(nodeid: str) -> bool:
+    """True when the default tier skips the test `nodeid`
+    (`tests/<module>.py::<test>`)."""
+    mod = nodeid.split("::")[0].rsplit("/", 1)[-1].removesuffix(".py")
+    return mod in _FULL_ONLY_MODULES or nodeid in _FULL_ONLY_TESTS
+
+
 def pytest_collection_modifyitems(config, items):
     import os
 
@@ -112,8 +113,5 @@ def pytest_collection_modifyitems(config, items):
         reason="full-tier (SPARK_GRAFT_FULL_TESTS=1 runs it; round-close "
                "gate — see tests/conftest.py)")
     for item in items:
-        mod = item.nodeid.split("::")[0].rsplit("/", 1)[-1]
-        if mod.endswith(".py"):
-            mod = mod[:-3]
-        if mod in _FULL_ONLY_MODULES or item.nodeid in _FULL_ONLY_TESTS:
+        if full_tier_only(item.nodeid):
             item.add_marker(skip)

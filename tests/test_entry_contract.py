@@ -5,7 +5,10 @@ not-yet-verified queries first is load-bearing — pin it."""
 
 from __future__ import annotations
 
+import re
+
 import __spark_entry__ as entry
+from tests.conftest import full_tier_only
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import REGISTRY
 
 
@@ -129,6 +132,30 @@ def test_rows_only_set_is_pinned():
             if tok in REGISTRY:
                 assert REGISTRY[tok].oracle, \
                     f"declared twin {tok} is itself rows-only"
+    # every pytest reference (`tests/<module>.py[::<test>]`; a bare
+    # module means all its tests) is collected and runs in the default
+    # tier — a reference that only the full tier runs checks nothing
+    refs = re.findall(r"tests/(test_\w+)\.py(?:::(test_\w+))?",
+                      " ".join(vr.ROWS_ONLY_TWINS.values()))
+    assert refs
+    for mod_name, test_name in refs:
+        mod = importlib.import_module(f"tests.{mod_name}")
+        names = [test_name] if test_name else \
+            [n for n in vars(mod) if n.startswith("test_")]
+        assert names, f"tests/{mod_name}.py has no tests"
+        for name in names:
+            nodeid = f"tests/{mod_name}.py::{name}"
+            fn = getattr(mod, name, None)
+            assert callable(fn), f"{nodeid} does not exist"
+            assert not full_tier_only(nodeid), f"{nodeid} is full-tier only"
+            marks = [m for obj in (mod, fn)
+                     for m in _as_list(getattr(obj, "pytestmark", []))]
+            assert not any(m.name in ("skip", "skipif", "xfail")
+                           for m in marks), f"{nodeid} is marked {marks}"
+
+
+def _as_list(marks):
+    return marks if isinstance(marks, list) else [marks]
 
 
 def test_back_bucket_is_staleness_ordered():

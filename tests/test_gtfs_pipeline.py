@@ -4,6 +4,8 @@ reference DAGs (cites in module docstrings)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -115,3 +117,47 @@ def test_silver_picks_up_new_bronze_rows(wh, spark):
     appended = refresh_silver(wh)
     assert appended["routes_static_silver"] == 1
     assert wh.table("silver", "routes_static_silver").count() == before + 1
+
+
+# ------------------------------------------- loads count their own rows
+
+def test_append_returns_rows_in_table(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path))
+    routes = spark.createDataFrame(
+        [(f"R{i}", "LA", f"route {i}") for i in range(3)],
+        "route_id string, agency_id string, route_long_name string")
+    # the first append creates the table
+    assert wh.append("bronze", "routes_static", routes) == 3
+    assert wh.append("bronze", "routes_static", routes.limit(2)) == 2
+    assert wh.table("bronze", "routes_static").count() == 5
+    vehicles = spark.createDataFrame(
+        [(f"T{i}", f"V{i}", 1700000000 + i) for i in range(4)],
+        "trip_id string, vehicle_id string, timestamp_epoch long")
+    assert wh.append_epoch("bronze", "vehicle_positions_raw", vehicles,
+                           epoch_id=1) == 4
+    assert wh.table("bronze", "vehicle_positions_raw").count() == 4
+
+
+def test_second_static_ingest_returns_rows_appended(spark, tmp_path,
+                                                    gtfs_dir):
+    wh = Warehouse(spark, str(tmp_path))
+    first = ingest_static(spark, gtfs_dir, wh)
+    assert first["routes_static"] == fixtures_gtfs.N_ROUTES
+    assert first["stop_times_static"] == (fixtures_gtfs.N_TRIPS
+                                          * fixtures_gtfs.STOPS_PER_TRIP)
+    # COPY's "rows loaded": this run's rows, not the doubled totals
+    assert ingest_static(spark, gtfs_dir, wh) == first
+    assert {t: wh.table("bronze", t).count() for t in first} == \
+        {t: 2 * n for t, n in first.items()}
+
+
+def test_noop_refresh_writes_no_silver_files(wh):
+    refresh_silver(wh)
+    silver = os.path.join(wh.root, "silver")
+
+    def files():
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(silver)
+                      for f in fs)
+    before = files()
+    assert not any(refresh_silver(wh).values())
+    assert files() == before

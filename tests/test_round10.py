@@ -7,17 +7,9 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMALL
-from tests.oracle_harness import duck_connection
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import REGISTRY
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duck_connection(SF_SMALL)
 
 
 def _events(spark, tmp_path, rows):
@@ -119,25 +111,3 @@ def test_c131_purity_tie_goes_to_smallest_label(spark, tmp_path):
     assert out[7]["purity_ppm"] == 500000
     assert out[0]["top_label"] == 5
     assert out[0]["purity_ppm"] == 666666  # 2/3 truncating ppm
-
-
-def test_c06f_recall_contract(spark, duck):
-    """c06f went rows-only after the sf0.1 sweep measured an LSH
-    recall miss (255/256, J=0.980 pair) — this pins the contract that
-    replaces the retired exact-set oracle: emitted pairs are a SUBSET
-    of the exact Jaccard >= 0.5 set, emitted jaccard values are EXACT
-    (hash-independent verify), and recall is total at the gate scale.
-    A sf0.1-style miss would trip only the recall clause, never
-    subset/value-exactness — those are deterministic guarantees."""
-    from tp_airflow_gtfs_snowflake_spark.plans.driver_queries_ext import (
-        C06F_EXACT_PAIRS_SQL)
-
-    got = {(r["d1"], r["d2"]): r["jaccard"] for r in
-           REGISTRY["c06f_minhash_neardup_fast"].fn(spark, SF_SMALL)
-           .collect()}
-    exact = {(int(r.d1), int(r.d2)): float(r.jaccard) for r in
-             duck.sql(C06F_EXACT_PAIRS_SQL).df().itertuples()}
-    assert set(got) <= set(exact), "emitted a pair outside the exact set"
-    for pair, j in got.items():
-        assert abs(j - exact[pair]) < 1e-12, (pair, j, exact[pair])
-    assert set(got) == set(exact), "recall < 1.0 at gate scale"

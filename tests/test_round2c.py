@@ -1,4 +1,4 @@
-"""Round-2c batch: blocked fuzzy matching, observe() metrics, the
+"""Round-2c batch: blocked fuzzy matching, mergeable sketches, the
 Spark 4 Python DataSource, and the transformWithState odometer twin."""
 
 from __future__ import annotations
@@ -10,8 +10,6 @@ from pyspark.sql import functions as F
 
 from tests import fixtures_gtfs
 from tests.conftest import SF_ORACLE
-from tp_airflow_gtfs_snowflake_spark.observability import (load_audit_metrics,
-                                                           observed)
 from tp_airflow_gtfs_snowflake_spark.operators import fuzzy
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import _t
 
@@ -72,22 +70,6 @@ def test_hll_union_of_partials_equals_single_shot(spark):
     exact = ev.select("user_id").distinct().count()
     assert merged == single
     assert abs(merged - exact) / exact < 0.05
-
-
-# ---------------------------------------------------------- observe()
-
-def test_observed_metrics_ride_the_write(spark, tmp_path):
-    ev = _t(spark, SF_ORACLE, "events").select("event_id", "user_id", "ts")
-    df, obs = observed(ev, "load",
-                       **load_audit_metrics(ev, key_col="event_id",
-                                            ts_col="ts"))
-    df.write.mode("overwrite").parquet(str(tmp_path / "out"))
-    got = obs.get
-    assert got["n_rows"] == ev.count()
-    assert got["null_keys"] == 0
-    assert got["max_ts"] == ev.agg(F.max("ts")).first()[0]
-    assert got["min_ts"] <= got["max_ts"]
-    assert got["distinct_keys_approx"] > 0
 
 
 # ------------------------------------------------- python data source

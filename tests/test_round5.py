@@ -1,48 +1,14 @@
 """Round-5 batch: ordered listagg, lossless banded fuzzy join,
-discrete quantiles, DoD growth, zlib compression ratio, exact-
-substring decontamination."""
+discrete quantiles, DoD growth, exact-substring decontamination."""
 
 from __future__ import annotations
-
-import zlib
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
-from tp_airflow_gtfs_snowflake_spark.functions.compression import (
-    ZLIB_LEVEL, with_compression_ratio)
 from tp_airflow_gtfs_snowflake_spark.plans import (
     driver_queries_round5 as r5)
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import _t
-
-
-# ----------------------------------------------------- c59 compression
-
-def test_compression_ratio_matches_python_zlib_exactly(spark):
-    """Every sf0.001 doc: comp_bytes == len(zlib.compress(utf8)),
-    ratio_ppm == comp*1e6 // raw (the determinism contract)."""
-    docs = _t(spark, SF_SMALL, "documents")
-    got = with_compression_ratio(docs).select(
-        "doc_id", "text", "comp_bytes", "ratio_ppm").collect()
-    assert len(got) > 0
-    for r in got:
-        raw = (r.text or "").encode("utf-8")
-        cb = len(zlib.compress(raw, ZLIB_LEVEL))
-        assert r.comp_bytes == cb
-        exp = (cb * 1_000_000) // len(raw) if raw else 1_000_000
-        assert r.ratio_ppm == exp
-
-
-def test_compression_ratio_band_semantics(spark):
-    rows = [(1, "a" * 500),                      # boilerplate: tiny ratio
-            (2, "kq9x7zj2vw8m3fp1hy6tn0bd5rc4"),  # noisy: high ratio
-            (3, "")]                              # empty: pinned 1e6
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r.ratio_ppm
-           for r in with_compression_ratio(df).collect()}
-    assert out[1] < 300_000
-    assert out[2] > 900_000
-    assert out[3] == 1_000_000
 
 
 # ------------------------------------------------------ b74 fuzzy join
@@ -373,29 +339,6 @@ def test_c65_duplicate_tokens_discounted(spark, tmp_path):
     # raw 3+3+2=8, effective 3+2=5 -> 625000 ppm
     assert (r.n_docs, r.raw_tokens, r.effective_tokens,
             r.yield_ppm) == (3, 8, 5, 625000)
-
-
-# ---------------------------------------------- c66 quality classifier
-
-def test_c66_classifier_separates_weak_classes(spark):
-    from tests.conftest import SF_ORACLE
-    out = {r.lang: r for r in
-           r5.c66_quality_classifier(spark, SF_ORACLE).collect()}
-    assert len(out) == 5
-    en = out["en"].mean_quality_prob
-    others = [r.mean_quality_prob for lg, r in out.items() if lg != "en"]
-    assert en > max(others), "model fails to separate the weak label"
-    for r in out.values():
-        assert 0.0 <= r.mean_quality_prob <= 1.0
-        assert 0 <= r.n_pred_quality <= r.n_docs
-
-
-def test_c66_rerun_is_deterministic(spark):
-    a = sorted(map(tuple, r5.c66_quality_classifier(
-        spark, SF_SMALL).collect()))
-    b = sorted(map(tuple, r5.c66_quality_classifier(
-        spark, SF_SMALL).collect()))
-    assert a == b
 
 
 # ---------------------------------------------- b87 top-k plus other

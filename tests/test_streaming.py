@@ -96,22 +96,27 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
         "trip_id string, route_id string, vehicle_id string, "
         "latitude double, longitude double, bearing double, "
         "stop_id string, timestamp_epoch long")
-    wh.append_epoch("bronze", "vehicle_positions_raw", rows, epoch_id=7)
+    # each write returns the rows it wrote: the replay's, not the
+    # table's
+    assert wh.append_epoch("bronze", "vehicle_positions_raw", rows,
+                           epoch_id=7) == 2
     assert wh.table("bronze", "vehicle_positions_raw").count() == 2
 
     # full replay of the same epoch: count unchanged
-    wh.append_epoch("bronze", "vehicle_positions_raw", rows, epoch_id=7)
+    assert wh.append_epoch("bronze", "vehicle_positions_raw", rows,
+                           epoch_id=7) == 2
     assert wh.table("bronze", "vehicle_positions_raw").count() == 2
 
     # partial-crash replay: epoch 7 replays with MORE rows (e.g. the
     # first attempt died after writing a subset) -> end state is the
     # replay's rows, not the union
-    wh.append_epoch("bronze", "vehicle_positions_raw",
-                    rows.limit(1), epoch_id=7)
+    assert wh.append_epoch("bronze", "vehicle_positions_raw",
+                           rows.limit(1), epoch_id=7) == 1
     assert wh.table("bronze", "vehicle_positions_raw").count() == 1
 
     # a different epoch appends
-    wh.append_epoch("bronze", "vehicle_positions_raw", rows, epoch_id=8)
+    assert wh.append_epoch("bronze", "vehicle_positions_raw", rows,
+                           epoch_id=8) == 2
     assert wh.table("bronze", "vehicle_positions_raw").count() == 3
     # and rows carry their epoch + derived event_date partition keys
     got = wh.table("bronze", "vehicle_positions_raw")

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -45,6 +45,14 @@ def paris_now() -> F.Column:
     (gtfs_static_daily.py:58, gtfs_silver.py:15)."""
     return F.from_utc_timestamp(F.current_timestamp(), "Europe/Paris").cast(
         T.TimestampNTZType())
+
+
+def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """df with a row count attached to its next action: the write job
+    itself counts what it writes, so no second pass re-reads the data
+    and the count cannot disagree with the files."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 class Warehouse:
@@ -97,19 +105,23 @@ class Warehouse:
             self.path(layer, name))
 
     def append(self, layer: str, name: str, df: DataFrame,
-               stamp_insert_date: bool = True) -> None:
+               stamp_insert_date: bool = True) -> int:
         """Append with schema alignment + insert_date injection (A8/A9/A23).
 
         Columns are matched by name and cast to the declared type
         (mirrors the reference's positional COPY column list +
         Snowflake implicit casts); missing columns become NULL.
+        Creates the table if it does not exist.  Returns the rows
+        written, counted by the write job (COPY's "rows loaded").
         """
-        out = self._aligned(layer, name, df, stamp_insert_date)
+        out, obs = _observe_rows(
+            self._aligned(layer, name, df, stamp_insert_date))
         writer = out.write.mode("append")
         parts = self.partition_cols.get(name)
         if parts:
             writer = writer.partitionBy(*parts)
         writer.parquet(self.path(layer, name))
+        return obs.get["rows"]
 
     def _aligned(self, layer: str, name: str, df: DataFrame,
                  stamp_insert_date: bool = True) -> DataFrame:
@@ -133,21 +145,22 @@ class Warehouse:
         return out
 
     def append_epoch(self, layer: str, name: str, df: DataFrame,
-                     epoch_id: int) -> None:
+                     epoch_id: int) -> int:
         """Idempotent micro-batch append: rows are stamped with
         `ingest_epoch` and written with DYNAMIC partition overwrite, so
         a replayed epoch (foreachBatch is at-least-once after a crash
         mid-batch) overwrites exactly its own partition directories
         instead of duplicating rows.  Requires ingest_epoch among the
-        table's partition columns."""
+        table's partition columns.  Returns the rows written, counted
+        by the write job; an empty frame writes no file."""
         parts = self.partition_cols.get(name) or []
         if "ingest_epoch" not in parts:
             raise ValueError(
                 f"append_epoch needs ingest_epoch in partition_cols of "
                 f"{name!r}; got {parts}")
-        out = self._aligned(layer, name,
-                            df.withColumn("ingest_epoch",
-                                          F.lit(int(epoch_id)).cast("long")))
+        out, obs = _observe_rows(self._aligned(
+            layer, name,
+            df.withColumn("ingest_epoch", F.lit(int(epoch_id)).cast("long"))))
         # Midnight-replay hole: event_date defaults to wall-clock
         # paris_now(), so a crash-replay of epoch N after midnight
         # writes under a DIFFERENT event_date — dynamic overwrite
@@ -177,6 +190,7 @@ class Warehouse:
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy(*parts)
          .parquet(table_path))
+        return obs.get["rows"]
 
     def register_views(self, prefix: str = "") -> None:
         """Register every existing table as a temp view so the SQL API

@@ -51,27 +51,29 @@ def incremental_append(
 ) -> int:
     """Append transform(src rows newer than dst watermark) to dst.
 
-    Returns the number of appended rows.  `transform` is the
-    declarative silver select-list; the watermark filter is applied on
-    the *source* before the transform so Catalyst pushes it into the
-    source scan (partition pruning when src is date-partitioned).
+    Returns the number of appended rows, counted by the write job.
+    `transform` is the declarative silver select-list; the watermark
+    filter is applied on the *source* before the transform so Catalyst
+    pushes it into the source scan (partition pruning when src is
+    date-partitioned).
     """
     wm = destination_watermark(wh, dst_layer, dst_name, watermark_col)
-    fresh = src.filter(F.col(watermark_col) > F.lit(wm))
-    out = transform(fresh)
-    n = out.count()
-    if n:
-        # DELIBERATE DEVIATION: carry the BRONZE insert_date into
-        # silver.  The reference's silver INSERTs omit insert_date, so
-        # the column DEFAULT stamps silver-load time
-        # (gtfs_silver.py:126-213) — but then a bronze row committed
-        # between a silver run's watermark read and its insert could be
-        # skipped forever (watermark already advanced past it).  Keying
-        # the watermark on the carried bronze timestamp removes that
-        # missed-row race; consumers reading silver insert_date get
-        # bronze-ingest recency, not silver-load recency.
-        wh.append(dst_layer, dst_name, out, stamp_insert_date=False)
-    return n
+    out = transform(src.filter(F.col(watermark_col) > F.lit(wm)))
+    # an empty append still writes a schema-only part file into an
+    # unpartitioned table, so a no-op refresh must not write at all;
+    # isEmpty stops at the first row of the pushed-down scan
+    if out.isEmpty():
+        return 0
+    # DELIBERATE DEVIATION: carry the BRONZE insert_date into
+    # silver.  The reference's silver INSERTs omit insert_date, so
+    # the column DEFAULT stamps silver-load time
+    # (gtfs_silver.py:126-213) — but then a bronze row committed
+    # between a silver run's watermark read and its insert could be
+    # skipped forever (watermark already advanced past it).  Keying
+    # the watermark on the carried bronze timestamp removes that
+    # missed-row race; consumers reading silver insert_date get
+    # bronze-ingest recency, not silver-load recency.
+    return wh.append(dst_layer, dst_name, out, stamp_insert_date=False)
 
 
 def incremental_rollup_refresh(

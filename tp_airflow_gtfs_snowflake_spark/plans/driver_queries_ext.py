@@ -1226,7 +1226,8 @@ def q06_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Exact Jaccard >= 0.5 pair set: the COMPLETENESS reference for the
 # LSH fast path.  Not c06f's driver oracle (see note below) — it is
-# the ground truth tests/test_round10.py::test_c06f_recall_contract
+# the ground truth that
+# tests/test_rows_only_references.py::test_c06f_recall_contract
 # audits recall/subset/value-exactness against.
 C06F_EXACT_PAIRS_SQL = f"""
     WITH t AS (SELECT doc_id, {_duck_toks()} AS toks FROM documents),
@@ -1263,7 +1264,7 @@ C06F_EXACT_PAIRS_SQL = f"""
     "itself, misses included.  The compensating checks: emitted "
     "pairs are always a SUBSET of the exact set with EXACT jaccard "
     "values, and recall==1.0 at both test scales "
-    "(tests/test_round10.py::test_c06f_recall_contract vs "
+    "(tests/test_rows_only_references.py::test_c06f_recall_contract vs "
     "C06F_EXACT_PAIRS_SQL)",
 )
 def c06f_minhash_neardup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:

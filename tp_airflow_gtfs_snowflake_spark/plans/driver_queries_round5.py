@@ -29,8 +29,8 @@ Curation (c59-c60):
 - c59: zlib compression-ratio quality signal (Gopher-family filter:
   near-incompressible text is noise/markup/random, ultra-compressible
   text is boilerplate/repetition).  DuckDB has no zlib, so the
-  registry entry is rows-only; tests/test_round5.py checks the
-  mapInPandas output byte-exactly against direct python zlib on every
+  registry entry is rows-only; tests/test_rows_only_references.py
+  checks the mapInPandas output byte-exactly against direct python zlib on every
   sf0.001 doc.
 - c60: exact-substring decontamination (the GPT-3/PaLM appendix
   method: drop training docs sharing a long exact substring with an
@@ -257,7 +257,8 @@ def b76_dod_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     "level pinned for determinism, text never leaves the executor; "
     "per-(lang, source) aggregate of ppm ratios + band counts.  "
     "Rows-only in the driver gate (no zlib in SQL); "
-    "tests/test_round5.py pins the per-doc bytes against direct "
+    "tests/test_rows_only_references.py pins the per-doc bytes "
+    "against direct "
     "python zlib at sf0.001.  Narrow map + one hash agg — scales",
 )
 def c59_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:

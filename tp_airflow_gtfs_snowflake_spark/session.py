@@ -12,6 +12,9 @@ Config choices (scale rationale):
   applied explicitly with convert_timezone in the GTFS layer instead
   of via session state.
 - Arrow on: every Pandas-UDF / toPandas path is Arrow-batched.
+- driver heap sized from the host (SPARK_DRIVER_MEMORY overrides):
+  a local-mode heap past physical RAM ends in the OOM killer on a
+  host without swap, long before the collector would reclaim it.
 """
 
 from __future__ import annotations
@@ -19,6 +22,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory(meminfo: str | None = None) -> str:
+    """min(24g, 3/4 of MemTotal) from /proc/meminfo text (read from
+    the host when not given); 24g where MemTotal is unknown."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo") as f:
+                meminfo = f.read()
+        except OSError:
+            return "24g"
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            total_mb = int(line.split()[1]) // 1024
+            return f"{min(24 * 1024, total_mb * 3 // 4)}m"
+    return "24g"
 
 
 def get_spark(app_name: str = "tp_airflow_gtfs_snowflake_spark",
@@ -34,7 +53,8 @@ def get_spark(app_name: str = "tp_airflow_gtfs_snowflake_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_DRIVER_MEMORY") or _default_driver_memory())
         # Local-mode liveness hardening: one long driver stall (GC or
         # host hiccup) past the default timeouts marks the in-process
         # executor's BlockManager dead, and local mode cannot

@@ -13,10 +13,10 @@ are already NULL after parsing, which reproduces the reference's
 
 Parse layer options:
 - JSON feed snapshots -> `parse_feed_json` (from_json, fully native).
-- Protobuf bytes -> `parse_feed_protobuf`: gtfs-realtime-bindings when
-  installed, else the minimal pure-Python wire decoder in
-  `sources/gtfs_rt_pb.py` (public gtfs-realtime.proto field numbers).
-  Both are Arrow-batched mapInPandas, never per-row Python.
+- Protobuf bytes -> `parse_feed_protobuf`: the minimal pure-Python
+  wire decoder in `sources/gtfs_rt_pb.py` (public gtfs-realtime.proto
+  field numbers), run as an Arrow-batched mapInPandas, never per-row
+  Python.
 """
 
 from __future__ import annotations
@@ -80,45 +80,27 @@ def parse_feed_protobuf(spark: SparkSession, df: DataFrame,
     """Protobuf FeedMessage bytes -> nested rows (A4, the reference's
     actual wire format: gtfs_rt_minutely.py:37-41,79,137).
 
-    Prefers gtfs-realtime-bindings when installed (byte-faithful to
-    the reference); otherwise decodes with the minimal pure-Python
-    wire-format parser in sources/gtfs_rt_pb.py (public field numbers
-    from gtfs-realtime.proto — covers exactly the subset the reference
-    reads).  Either way the decode is an Arrow-batched mapInPandas,
-    never per-row Python UDF, and the downstream flatten is shared
-    with the JSON path.
+    Decodes with the minimal pure-Python wire-format parser in
+    sources/gtfs_rt_pb.py (public field numbers from
+    gtfs-realtime.proto — covers exactly the subset the reference
+    reads) and emits the snake_case JSON that `FEED_MESSAGE` reads.
+    The decode is an Arrow-batched mapInPandas, never a per-row
+    Python UDF, and the downstream flatten is shared with the JSON
+    path.
     """
-    try:
-        from google.transit import gtfs_realtime_pb2  # noqa: F401
-        have_bindings = True
-    except ImportError:
-        have_bindings = False
-
     import pandas as pd
 
     out_schema = T.StructType([T.StructField("feed_json", T.StringType())])
 
-    if have_bindings:  # pragma: no cover - env without bindings
-        def decode(batches):
-            from google.protobuf.json_format import MessageToJson
-            from google.transit import gtfs_realtime_pb2
-            for pdf in batches:
-                msgs = []
-                for raw in pdf[pb_col]:
-                    m = gtfs_realtime_pb2.FeedMessage()
-                    m.ParseFromString(bytes(raw))
-                    msgs.append(MessageToJson(m))
-                yield pd.DataFrame({"feed_json": msgs})
-    else:
-        def decode(batches):
-            import json
+    def decode(batches):
+        import json
 
-            from tp_airflow_gtfs_snowflake_spark.sources.gtfs_rt_pb import (
-                decode_feed_message)
-            for pdf in batches:
-                msgs = [json.dumps(decode_feed_message(bytes(raw)))
-                        for raw in pdf[pb_col]]
-                yield pd.DataFrame({"feed_json": msgs})
+        from tp_airflow_gtfs_snowflake_spark.sources.gtfs_rt_pb import (
+            decode_feed_message)
+        for pdf in batches:
+            msgs = [json.dumps(decode_feed_message(bytes(raw)))
+                    for raw in pdf[pb_col]]
+            yield pd.DataFrame({"feed_json": msgs})
 
     return parse_feed_json(df.mapInPandas(decode, out_schema))
 

@@ -9,11 +9,12 @@ wire types below come from the public gtfs-realtime.proto spec
 This is NOT a general protobuf implementation: it understands the four
 standard wire types, decodes only the fields listed in the schema
 tables, and skips everything else (forward-compatible, like real
-proto2 readers).  It exists so the engine can ingest real `.pb` feed
-payloads in a container without gtfs-realtime-bindings; when the
-bindings ARE installed, sources/gtfs_rt.py prefers them.
+proto2 readers).  It is the engine's only protobuf decoder:
+sources/gtfs_rt.py's `parse_feed_protobuf` runs it on real `.pb` feed
+payloads.
 
-Output shape matches MessageToJson + sources.gtfs_rt.FEED_MESSAGE:
+Output shape matches sources.gtfs_rt.FEED_MESSAGE (snake_case proto
+field names, integers as JSON numbers):
 a dict {"entity": [{"id", "trip_update": {...}, "vehicle": {...}}]}
 with absent optional fields absent from the dict (-> NULL after
 from_json), mirroring the reference's HasField guards.

@@ -65,12 +65,9 @@ def load_static_table(spark: SparkSession, data_dir: str, table: str) -> DataFra
 
 def ingest_static(spark: SparkSession, data_dir: str, wh: Warehouse) -> dict[str, int]:
     """The gtfs_static_daily pipeline body: land all four static tables
-    in bronze with insert_date stamping."""
+    in bronze with insert_date stamping.  Returns the rows each COPY
+    loaded (this run's appends, not the table totals)."""
     check_static_files(data_dir)
-    counts = {}
-    for table in STATIC_FILES:
-        df = load_static_table(spark, data_dir, table)
-        wh.create_if_not_exists("bronze", table)
-        wh.append("bronze", table, df)
-        counts[table] = wh.table("bronze", table).count()
-    return counts
+    return {table: wh.append("bronze", table,
+                             load_static_table(spark, data_dir, table))
+            for table in STATIC_FILES}

@@ -21,8 +21,6 @@ by the watermark horizon.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -71,12 +69,11 @@ def start_bronze_ingest(spark: SparkSession, landing_dir: str, wh: Warehouse,
         spark, landing_dir, max_files_per_trigger=max_files_per_trigger)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        # materialize the parsed feed ONCE: the emptiness probe plus
-        # three table writes would otherwise re-read and re-JSON-parse
-        # every snapshot file per write (4x I/O on the hot 2-minute
-        # cadence path)
+        # a stateless file-source query runs foreachBatch only for
+        # batches with data, so there is nothing to probe.  Materialize
+        # the parsed feed ONCE: the three table writes would otherwise
+        # re-read and re-JSON-parse every snapshot file per write (3x
+        # I/O on the hot 2-minute cadence path)
         feed = parse_feed_json(batch_df).localCheckpoint(eager=True)
         headers, stops = flatten_trip_updates(feed)
         wh.append_epoch("bronze", "trip_updates_raw", headers, epoch_id)
@@ -129,11 +126,3 @@ def windowed_position_counts(feed_stream: DataFrame, *,
                  F.approx_count_distinct("vehicle_id").alias("n_vehicles"))
             .select(F.col("w.start").alias("window_start"), "route_id",
                     "n_reports", "n_vehicles"))
-
-
-def run_silver_refresh_loop(wh: Warehouse, refresh: Callable[[], dict],
-                            iterations: int = 1) -> list[dict]:
-    """The 5-minute gtfs_silver cadence (gtfs_silver.py:219) as a plain
-    loop hook — scheduling stays outside the engine, matching the
-    reference's separation of cron from transform."""
-    return [refresh() for _ in range(iterations)]
