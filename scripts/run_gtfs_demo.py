@@ -54,7 +54,7 @@ def main() -> None:
     print(refresh_silver(wh))
 
     print("== KPIs ==")
-    delays = kpis.observed_vs_scheduled(wh, fixtures_gtfs.BASE_DATE.date()).cache()
+    delays = kpis.observed_vs_scheduled(wh, fixtures_gtfs.BASE_DATE.date())
     kpis.punctuality_rate(delays).show()
     kpis.most_delayed_lines(wh, delays, k=5).show(truncate=False)
     kpis.delay_distribution(delays).orderBy("bucket_lo_s").show()

@@ -4,7 +4,10 @@ reference DAGs (cites in module docstrings)."""
 
 from __future__ import annotations
 
+import ast
+import importlib.util
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -161,3 +164,26 @@ def test_noop_refresh_writes_no_silver_files(wh):
     before = files()
     assert not any(refresh_silver(wh).values())
     assert files() == before
+
+
+# ------------------------------------------------------ the demo script
+
+def test_demo_script_runs_end_to_end(spark, tmp_path, monkeypatch, capsys):
+    script = os.path.join(os.path.dirname(__file__), os.pardir, "scripts",
+                          "run_gtfs_demo.py")
+    spec = importlib.util.spec_from_file_location("run_gtfs_demo", script)
+    demo = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(demo)
+    # the demo's own session builder would set its configs on the
+    # shared test session
+    monkeypatch.setattr(demo, "get_spark", lambda *a, **kw: spark)
+    monkeypatch.setattr(sys, "argv", [script, str(tmp_path / "warehouse")])
+    demo.main()
+    lines = capsys.readouterr().out.splitlines()
+    second = lines[lines.index(
+        "== silver refresh (2nd, expect all zero) ==") + 1]
+    counts = ast.literal_eval(second)
+    assert len(counts) == 7 and not any(counts.values())
+    kpi_out = "\n".join(lines[lines.index("== KPIs ==") + 1:])
+    assert "punctuality_rate" in kpi_out and "route_long_name" in kpi_out
+    assert "service_state" in kpi_out and "diff_s" in kpi_out

@@ -3,6 +3,10 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,9 +44,7 @@ def wh(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def delays(wh):
-    df = kpis.observed_vs_scheduled(wh, SERVICE_DATE)
-    df.cache().count()
-    return df
+    return kpis.observed_vs_scheduled(wh, SERVICE_DATE)
 
 
 def test_gtfs_time_parse_over_24h(spark):
@@ -134,3 +136,83 @@ def test_headway_regularity_ewt(spark):
     assert got["bunched"]["mean_headway_s"] == 600
     assert got["bunched"]["ewt_s"] > 450
     assert got["bunched"]["bunching_ratio_ppm"] > 1500000
+
+
+# ------------------------------------------------- the cached delay fact
+# Tests that write to silver work on a copy of the module warehouse: a
+# new root is a new plan, so its fact starts cold and the shared
+# `delays` fixture stays intact.
+
+@pytest.fixture
+def own_wh(wh, tmp_path):
+    root = str(tmp_path / "warehouse")
+    shutil.copytree(wh.root, root)
+    return Warehouse(wh.spark, root)
+
+
+def _punctual_n(wh) -> int:
+    return kpis.punctuality_rate(
+        kpis.observed_vs_scheduled(wh, SERVICE_DATE)).collect()[0]["n"]
+
+
+def _uncached_n(spark, wh) -> int:
+    spark.catalog.clearCache()
+    return _punctual_n(wh)
+
+
+def _jobs(sc, action) -> int:
+    group = f"kpi-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_delay_fact_is_reused(own_wh, spark):
+    sc = spark.sparkContext
+    first = _jobs(sc, lambda: _punctual_n(own_wh))
+    again = kpis.observed_vs_scheduled(own_wh, SERVICE_DATE)
+    assert again.storageLevel.useMemory
+    assert _jobs(sc, lambda: kpis.punctuality_rate(again).collect()) < first
+
+
+def test_delay_fact_sees_session_writes(own_wh, spark):
+    before = _punctual_n(own_wh)
+    feed = parse_feed_json(spark.createDataFrame(
+        [(s,) for s in fixtures_gtfs.make_feed_snapshots(1)],
+        "feed_json string"))
+    _, stops = flatten_trip_updates(feed)
+    own_wh.append("bronze", "trip_stop_times", stops)
+    assert refresh_silver(own_wh)["trip_stop_times_silver"] > 0
+    after = _punctual_n(own_wh)
+    assert after > before
+    assert after == _uncached_n(spark, own_wh)
+
+
+def test_delay_fact_sees_writes_from_outside_the_session(own_wh, spark):
+    before = _punctual_n(own_wh)
+    # another process appends: a copy of a part file lands next to the
+    # originals, and Spark is not told
+    table = own_wh.path("silver", "trip_stop_times_silver")
+    part = max((f for f in os.listdir(table) if f.endswith(".parquet")),
+               key=lambda f: os.path.getsize(os.path.join(table, f)))
+    shutil.copy(os.path.join(table, part),
+                os.path.join(table, "part-99999-outside.parquet"))
+    after = _punctual_n(own_wh)
+    assert after > before
+    assert after == _uncached_n(spark, own_wh)
+
+
+def test_silver_write_frees_the_cached_fact(own_wh, spark):
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    held = persisted()
+    kpis.observed_vs_scheduled(own_wh, SERVICE_DATE).count()
+    fact = persisted() - held
+    assert fact
+    own_wh.append("silver", "trip_stop_times_silver", spark.createDataFrame(
+        [("6444367-0_R_99",)], "trip_id string"))
+    assert not fact & persisted()

@@ -6,9 +6,13 @@ reference: every silver load shares
                                    '1900-01-01'::TIMESTAMP_NTZ)
 (dags/gtfs_silver.py:125-213).
 
-Batch mode computes MAX(insert_date) on the destination — a cheap
-parquet-footer-statistics scan — then appends only newer source rows
-(the filter pushes down to the source scan).  Restart safety comes
+Batch mode computes MAX(insert_date) on the destination, then appends
+only newer source rows (the filter pushes down to the source scan).
+The MAX reads the whole insert_date column: parquet is a V1 source
+here (spark.sql.sources.useV1SourceList) and
+spark.sql.parquet.aggregatePushdown is off, so the plan is
+Scan parquet [insert_date] -> HashAggregate -> Exchange SinglePartition
+-> HashAggregate, not a footer-statistics lookup.  Restart safety comes
 from the append-only watermark monotonicity: a crashed run re-appends
 nothing already visible, exactly like the reference.
 
@@ -32,8 +36,9 @@ EPOCH_FLOOR = dt.datetime(1900, 1, 1)  # '1900-01-01'::TIMESTAMP_NTZ
 
 def destination_watermark(wh: Warehouse, layer: str, name: str,
                           col: str = "insert_date") -> dt.datetime:
-    """(SELECT MAX(insert_date) FROM dst) — scalar agg; on parquet this
-    is answered from row-group statistics, not a full scan."""
+    """(SELECT MAX(insert_date) FROM dst) — scalar agg over a scan of
+    the destination's whole `col` column (no aggregate pushdown into
+    parquet row-group statistics; see the module docstring)."""
     if not wh.exists(layer, name):
         return EPOCH_FLOOR
     row = wh.table(layer, name).agg(F.max(col).alias("wm")).collect()[0]

@@ -20,6 +20,15 @@ Scale: the static schedule is a small dimension (10^5-10^6 rows even
 for a huge network) -> broadcast it; the RT fact is the big side and
 arrives date-partitioned, so every KPI takes a recency filter that
 prunes partitions (B13, README.md:139).
+
+Cached delay fact: the dashboard reads its KPIs over one silver state
+and eight of them share the delay fact, so observed_vs_scheduled
+returns it cached, built once per silver state.  Spark matches cached
+data by plan: later calls with the same warehouse and service date
+read the in-memory fact instead of re-scanning and re-joining
+parquet.  Any write to either input, from this session or from
+outside it, invalidates the fact (contract in observed_vs_scheduled).
+Callers do not cache it themselves.
 """
 
 from __future__ import annotations
@@ -36,16 +45,47 @@ from tp_airflow_gtfs_snowflake_spark.functions.gtfs_time import (
 
 PUNCTUAL_THRESHOLD_S = 180  # "on time" = observed within 3 min of schedule
 
+# input table path -> the files the delay fact last read from it.
+# Module-level, like the Spark cache it guards, which outlives any one
+# Warehouse object.
+_input_listings: dict[str, frozenset[str]] = {}
+
+
+def _fresh_input(wh: Warehouse, name: str) -> DataFrame:
+    """A new read of silver table `name`; when its files differ from
+    the last read, a writer outside this session changed it, so the
+    cached data over its path is dropped and rebuilt on the next read.
+    The read has already listed the directory: no Spark job."""
+    df = wh.table("silver", name)
+    path = wh.path("silver", name)
+    files = frozenset(df.inputFiles())
+    if _input_listings.get(path, files) != files:
+        wh.spark.catalog.refreshByPath(path)
+    _input_listings[path] = files
+    return df
+
 
 def observed_vs_scheduled(wh: Warehouse, service_date: dt.date) -> DataFrame:
     """B1+B2+B3: the delay fact — one row per observed stop event with
-    its scheduled counterpart and delay_s."""
-    rt = wh.table("silver", "trip_stop_times_silver").select(
+    its scheduled counterpart and delay_s.
+
+    Returns a CACHED DataFrame, built once per silver state: calls
+    with the same warehouse and service date share one in-memory fact.
+    It always reflects the current files of both inputs:
+    - a write through this session (`df.write.parquet` over an input's
+      path, e.g. refresh_silver) makes Spark drop the cached buffers
+      and rebuild them lazily on the next read;
+    - a write from outside the session changes the input's file
+      listing, which the next call compares with the listing recorded
+      when it last read the input, and refreshes the path on a change.
+    Memory stays bounded: invalidation frees the old buffers, so only
+    facts read since the last write to their inputs hold memory."""
+    rt = _fresh_input(wh, "trip_stop_times_silver").select(
         "trip_id", "stop_sequence", "stop_id",
         F.coalesce("arrival_time", "departure_time").alias("observed_epoch"),
     ).where(F.col("observed_epoch").isNotNull())
 
-    sched = wh.table("silver", "stop_times_static_silver").select(
+    sched = _fresh_input(wh, "stop_times_static_silver").select(
         "trip_id", "stop_sequence", "stop_id",
         gtfs_time_to_seconds(F.coalesce("arrival_time", "departure_time"))
         .alias("sched_s"),
@@ -73,8 +113,13 @@ def observed_vs_scheduled(wh: Warehouse, service_date: dt.date) -> DataFrame:
     ).select("trip_id", F.col("sched_seq").alias("stop_sequence"), "stop_id",
              "observed_epoch", "sched_epoch")
 
-    return (with_seq.unionByName(no_seq)
-            .withColumn("delay_s", F.col("observed_epoch") - F.col("sched_epoch")))
+    delays = (with_seq.unionByName(no_seq)
+              .withColumn("delay_s",
+                          F.col("observed_epoch") - F.col("sched_epoch")))
+    # cache() on an already-cached plan would only log a warning
+    if not delays.storageLevel.useMemory:
+        delays.cache()
+    return delays
 
 
 def avg_delay_over_time(delays: DataFrame, bucket: str = "5 minutes") -> DataFrame:

@@ -86,8 +86,8 @@ TRANSFORMS = {
 def refresh_silver(wh: Warehouse) -> dict[str, int]:
     """The gtfs_silver DAG body: run all seven incremental loads.
     The reference fans them out in parallel (gtfs_silver.py:307-315);
-    in Spark they are independent jobs — sequential submission is fine
-    locally, a thread pool submits them concurrently on a cluster."""
+    here they run one after another, each load's jobs submitted only
+    when the previous load has finished."""
     appended = {}
     for dst, (src_name, transform) in TRANSFORMS.items():
         wh.create_if_not_exists("silver", dst)
