@@ -8,11 +8,14 @@ import ast
 import importlib.util
 import os
 import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
+from tp_airflow_gtfs_snowflake_spark import silver
+from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse, concurrently
 from tp_airflow_gtfs_snowflake_spark.silver import refresh_silver
 from tp_airflow_gtfs_snowflake_spark.sources.gtfs_rt import (
     flatten_trip_updates, flatten_vehicle_positions, parse_feed_json,
@@ -28,19 +31,28 @@ def gtfs_dir(tmp_path_factory):
     return str(d)
 
 
+def append_rt_snapshots(spark, wh) -> dict[str, int]:
+    """The fixture feed's snapshots, flattened into the three bronze
+    RT tables; returns the rows appended per table."""
+    feed = parse_feed_json(
+        spark.createDataFrame([(s,) for s in fixtures_gtfs.make_feed_snapshots()],
+                              "feed_json string"))
+    headers, stops = flatten_trip_updates(feed)
+    return {"trip_updates_raw": wh.append("bronze", "trip_updates_raw",
+                                          headers),
+            "trip_stop_times": wh.append("bronze", "trip_stop_times", stops),
+            "vehicle_positions_raw": wh.append(
+                "bronze", "vehicle_positions_raw",
+                flatten_vehicle_positions(feed))}
+
+
 @pytest.fixture(scope="module")
 def wh(spark, tmp_path_factory, gtfs_dir):
     root = str(tmp_path_factory.mktemp("warehouse"))
     wh = Warehouse(spark, root)
     wh.create_all()
     ingest_static(spark, gtfs_dir, wh)
-    feed = parse_feed_json(
-        spark.createDataFrame([(s,) for s in fixtures_gtfs.make_feed_snapshots()],
-                              "feed_json string"))
-    headers, stops = flatten_trip_updates(feed)
-    wh.append("bronze", "trip_updates_raw", headers)
-    wh.append("bronze", "trip_stop_times", stops)
-    wh.append("bronze", "vehicle_positions_raw", flatten_vehicle_positions(feed))
+    append_rt_snapshots(spark, wh)
     return wh
 
 
@@ -154,16 +166,122 @@ def test_second_static_ingest_returns_rows_appended(spark, tmp_path,
         {t: 2 * n for t, n in first.items()}
 
 
-def test_noop_refresh_writes_no_silver_files(wh):
+def assert_noop_refresh_writes_no_files(wh, local_root):
     refresh_silver(wh)
-    silver = os.path.join(wh.root, "silver")
+    silver_dir = os.path.join(local_root, "silver")
 
     def files():
-        return sorted(os.path.join(d, f) for d, _, fs in os.walk(silver)
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(silver_dir)
                       for f in fs)
     before = files()
     assert not any(refresh_silver(wh).values())
     assert files() == before
+
+
+def test_noop_refresh_writes_no_silver_files(wh):
+    assert_noop_refresh_writes_no_files(wh, wh.root)
+
+
+def test_noop_refresh_writes_no_silver_files_under_a_uri_root(
+        spark, tmp_path, gtfs_dir):
+    # a scheme-qualified root: table existence and the destination
+    # watermark must not fall back to "no table" (which recreated every
+    # silver table empty and reloaded it in full on each refresh)
+    wh = Warehouse(spark, f"file://{tmp_path}")
+    ingest_static(spark, gtfs_dir, wh)
+    append_rt_snapshots(spark, wh)
+    assert wh.exists("bronze", "routes_static")
+    assert_noop_refresh_writes_no_files(wh, str(tmp_path))
+
+
+# ------------------------------------------- independent writes at once
+
+def test_concurrently_gives_each_call_its_own_local_properties(spark):
+    sc = spark.sparkContext
+    groups = [f"concurrently-{i}-{time.time_ns()}" for i in range(3)]
+    caller = f"caller-{time.time_ns()}"
+    met = threading.Barrier(3, timeout=60)
+    seen = {}
+
+    def call(group):
+        seen[group] = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, group)
+        met.wait()  # every call has set its group before any job runs
+        spark.range(1).collect()  # one job (count() runs two under AQE)
+        return sc.getLocalProperty("spark.jobGroup.id")
+
+    sc.setJobGroup(caller, caller)
+    try:
+        assert concurrently(spark, call, groups) == groups
+        assert seen == dict.fromkeys(groups, caller)
+        tracker = sc.statusTracker()
+        assert {g: len(tracker.getJobIdsForGroup(g)) for g in groups} == \
+            dict.fromkeys(groups, 1)
+        assert sc.getLocalProperty("spark.jobGroup.id") == caller
+    finally:
+        sc._jsc.clearJobGroup()
+
+
+def test_concurrently_raises_only_after_every_call_finished(spark):
+    finished = []
+
+    def call(i):
+        if i == 2:
+            raise RuntimeError("later in input order")
+        time.sleep(0.3 * (i + 1))
+        if i == 0:
+            raise ValueError("first in input order")
+        finished.append(i)
+        return i
+
+    with pytest.raises(ValueError, match="first in input order"):
+        concurrently(spark, call, range(3))
+    assert finished == [1]
+    assert concurrently(spark, lambda i: i * i, range(3)) == [0, 1, 4]
+
+
+def test_failed_silver_load_leaves_the_others_landed(spark, tmp_path,
+                                                     gtfs_dir, monkeypatch):
+    wh = Warehouse(spark, str(tmp_path))
+    static = ingest_static(spark, gtfs_dir, wh)
+    rt = append_rt_snapshots(spark, wh)
+    loaded = {f"{t}_silver": n for t, n in static.items()}
+    loaded.update(trip_updates_silver=rt["trip_updates_raw"],
+                  trip_stop_times_silver=rt["trip_stop_times"],
+                  vehicle_positions_silver=rt["vehicle_positions_raw"])
+    failing = "trips_static_silver"
+    src_name, transform = silver.TRANSFORMS[failing]
+
+    def broken(df):
+        raise RuntimeError("transform failed")
+    monkeypatch.setitem(silver.TRANSFORMS, failing, (src_name, broken))
+    with pytest.raises(RuntimeError, match="transform failed"):
+        refresh_silver(wh)
+    assert {t: wh.table("silver", t).count() for t in loaded
+            if t != failing} == {t: n for t, n in loaded.items()
+                                 if t != failing}
+    monkeypatch.setitem(silver.TRANSFORMS, failing, (src_name, transform))
+    assert refresh_silver(wh) == {t: loaded[t] if t == failing else 0
+                                  for t in silver.TRANSFORMS}
+
+
+def test_refresh_before_the_first_rt_snapshot(spark, tmp_path, gtfs_dir):
+    # the silver DAG runs on its own schedule: static tables ingested,
+    # no RT snapshot landed yet
+    wh = Warehouse(spark, str(tmp_path))
+    static = ingest_static(spark, gtfs_dir, wh)
+    rt_silver = ("trip_updates_silver", "trip_stop_times_silver",
+                 "vehicle_positions_silver")
+    first = refresh_silver(wh)
+    assert first == {**{f"{t}_silver": n for t, n in static.items()},
+                     **dict.fromkeys(rt_silver, 0)}
+    assert all(wh.exists("silver", t) for t in silver.TRANSFORMS)
+    rt = append_rt_snapshots(spark, wh)
+    assert refresh_silver(wh) == {
+        **{f"{t}_silver": 0 for t in static},
+        "trip_updates_silver": rt["trip_updates_raw"],
+        "trip_stop_times_silver": rt["trip_stop_times"],
+        "vehicle_positions_silver": rt["vehicle_positions_raw"]}
 
 
 # ------------------------------------------------------ the demo script

@@ -21,6 +21,8 @@ per-file COPY load history).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +57,41 @@ def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
+def concurrently(spark: SparkSession, fn: Callable,
+                 items: Iterable) -> list:
+    """Run fn(item) once per item, all at once, one thread each, and
+    return the results in input order.
+
+    For a pipeline step's independent table writes: each write is its
+    own Spark job, and jobs submitted from separate threads run side by
+    side, where one thread would queue them behind each other while
+    cores sit idle.
+
+    Each call first installs its own clone of the caller's Spark local
+    properties, read in the caller's thread: the jobs run in the
+    caller's job group (a streaming query's run id, a tracer's span)
+    with its batch properties, and a job group one call sets stays
+    that call's.  (`pyspark.inheritable_thread_target` clones once per
+    wrapped function, so every call would share, and overwrite, one
+    Properties object.)
+
+    Waits for every call before returning or raising, so no write is
+    still running when the step ends; on failure, re-raises the first
+    failure in input order.
+    """
+    items = list(items)
+    jsc = spark.sparkContext._jsc.sc()
+    props = jsc.getLocalProperties()
+
+    def call(item, own_props):
+        jsc.setLocalProperties(own_props)
+        return fn(item)
+
+    with ThreadPoolExecutor(max_workers=max(1, len(items))) as pool:
+        futures = [pool.submit(call, item, props.clone()) for item in items]
+    return [f.result() for f in futures]
+
+
 class Warehouse:
     """create-if-not-exists parquet tables + typed reads + appends."""
 
@@ -76,9 +113,16 @@ class Warehouse:
         return reg[name]
 
     def exists(self, layer: str, name: str) -> bool:
-        p = self.path(layer, name)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p))
+        """The table directory holds a parquet file or a _SUCCESS
+        marker.  Goes through the Hadoop FileSystem API, so a
+        file://, hdfs:// or s3a:// root answers like a local path."""
+        jvm = self.spark._jvm
+        p = jvm.org.apache.hadoop.fs.Path(self.path(layer, name))
+        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        return fs.isDirectory(p) and any(
+            f.getPath().getName().endswith(".parquet")
+            or f.getPath().getName() == "_SUCCESS"
+            for f in fs.listStatus(p))
 
     def create_if_not_exists(self, layer: str, name: str) -> None:
         """CREATE TABLE IF NOT EXISTS: write an empty, fully-typed

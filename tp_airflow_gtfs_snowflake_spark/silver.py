@@ -8,10 +8,11 @@ declarative select-lists; the loader is operators/incremental.py.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
+from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse, concurrently
 from tp_airflow_gtfs_snowflake_spark.operators.incremental import incremental_append
 
 
@@ -83,14 +84,28 @@ TRANSFORMS = {
 }
 
 
+def _load(wh: Warehouse, dst: str) -> int:
+    """One silver load: create the table, then append its bronze
+    source's rows newer than its watermark.  A bronze source not
+    written yet (no RT snapshot has landed) appends 0."""
+    src_name, transform = TRANSFORMS[dst]
+    wh.create_if_not_exists("silver", dst)
+    try:
+        src = wh.table("bronze", src_name)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return 0
+    return incremental_append(wh, src, dst, transform)
+
+
 def refresh_silver(wh: Warehouse) -> dict[str, int]:
     """The gtfs_silver DAG body: run all seven incremental loads.
-    The reference fans them out in parallel (gtfs_silver.py:307-315);
-    here they run one after another, each load's jobs submitted only
-    when the previous load has finished."""
-    appended = {}
-    for dst, (src_name, transform) in TRANSFORMS.items():
-        wh.create_if_not_exists("silver", dst)
-        src = wh.table("bronze", src_name)
-        appended[dst] = incremental_append(wh, src, dst, transform)
-    return appended
+    Like the reference's fan-out (gtfs_silver.py:307-315) the loads
+    are independent, so they run concurrently (catalog.concurrently);
+    the refresh returns once every load has finished, and raises the
+    first failure only then.  The silver DAG runs on its own schedule,
+    so a refresh before the first RT snapshot loads the static tables
+    and appends 0 for the RT ones."""
+    loads = concurrently(wh.spark, lambda dst: _load(wh, dst), TRANSFORMS)
+    return dict(zip(TRANSFORMS, loads))

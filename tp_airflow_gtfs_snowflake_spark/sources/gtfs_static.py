@@ -16,7 +16,7 @@ import zipfile
 from pyspark.sql import DataFrame, SparkSession
 
 from tp_airflow_gtfs_snowflake_spark import schemas
-from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
+from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse, concurrently
 from tp_airflow_gtfs_snowflake_spark.sources.csv_source import read_csv
 
 STATIC_FILES = {
@@ -65,9 +65,12 @@ def load_static_table(spark: SparkSession, data_dir: str, table: str) -> DataFra
 
 def ingest_static(spark: SparkSession, data_dir: str, wh: Warehouse) -> dict[str, int]:
     """The gtfs_static_daily pipeline body: land all four static tables
-    in bronze with insert_date stamping.  Returns the rows each COPY
-    loaded (this run's appends, not the table totals)."""
+    in bronze with insert_date stamping.  The four loads are
+    independent and run concurrently (catalog.concurrently).  Returns
+    the rows each COPY loaded (this run's appends, not the table
+    totals)."""
     check_static_files(data_dir)
-    return {table: wh.append("bronze", table,
-                             load_static_table(spark, data_dir, table))
-            for table in STATIC_FILES}
+    loaded = concurrently(spark, lambda table: wh.append(
+        "bronze", table, load_static_table(spark, data_dir, table)),
+        STATIC_FILES)
+    return dict(zip(STATIC_FILES, loaded))

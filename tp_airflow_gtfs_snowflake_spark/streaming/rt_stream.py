@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
+from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse, concurrently
 from tp_airflow_gtfs_snowflake_spark.sources.gtfs_rt import (
     flatten_trip_updates, flatten_vehicle_positions, parse_feed_json,
 )
@@ -55,9 +55,14 @@ def start_bronze_ingest(spark: SparkSession, landing_dir: str, wh: Warehouse,
                         ) -> StreamingQuery:
     """readStream(snapshots) -> flatten -> append bronze RT tables.
 
+    Each micro-batch parses its snapshots once, then writes the three
+    bronze RT tables concurrently (catalog.concurrently), in the
+    stream's job group and batch properties; the batch commits only
+    after all three writes have finished.
+
     Exactly-once semantics, honestly: the checkpoint guarantees each
     source FILE enters exactly one epoch, but foreachBatch itself is
-    at-least-once — a crash between the three table writes replays the
+    at-least-once — a crash during the three table writes replays the
     whole epoch.  Replay is made idempotent by append_epoch: every
     write lands under the epoch's own partition directories via dynamic
     partition overwrite, so the replay overwrites its previous
@@ -69,6 +74,9 @@ def start_bronze_ingest(spark: SparkSession, landing_dir: str, wh: Warehouse,
         spark, landing_dir, max_files_per_trigger=max_files_per_trigger)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
+        """One micro-batch, on the stream's thread: parse the feed
+        once, then the three bronze appends concurrently; returns (and
+        the batch commits) once all three have finished."""
         # a stateless file-source query runs foreachBatch only for
         # batches with data, so there is nothing to probe.  Materialize
         # the parsed feed ONCE: the three table writes would otherwise
@@ -76,10 +84,10 @@ def start_bronze_ingest(spark: SparkSession, landing_dir: str, wh: Warehouse,
         # I/O on the hot 2-minute cadence path)
         feed = parse_feed_json(batch_df).localCheckpoint(eager=True)
         headers, stops = flatten_trip_updates(feed)
-        wh.append_epoch("bronze", "trip_updates_raw", headers, epoch_id)
-        wh.append_epoch("bronze", "trip_stop_times", stops, epoch_id)
-        wh.append_epoch("bronze", "vehicle_positions_raw",
-                        flatten_vehicle_positions(feed), epoch_id)
+        tables = {"trip_updates_raw": headers, "trip_stop_times": stops,
+                  "vehicle_positions_raw": flatten_vehicle_positions(feed)}
+        concurrently(spark, lambda name: wh.append_epoch(
+            "bronze", name, tables[name], epoch_id), tables)
 
     writer = (feed_stream.writeStream
               .foreachBatch(process)
