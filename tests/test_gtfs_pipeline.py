@@ -5,6 +5,7 @@ reference DAGs (cites in module docstrings)."""
 from __future__ import annotations
 
 import ast
+import csv
 import importlib.util
 import os
 import sys
@@ -164,6 +165,40 @@ def test_second_static_ingest_returns_rows_appended(spark, tmp_path,
     assert ingest_static(spark, gtfs_dir, wh) == first
     assert {t: wh.table("bronze", t).count() for t in first} == \
         {t: 2 * n for t, n in first.items()}
+
+
+def test_static_ingest_nulls_a_malformed_number(spark, tmp_path, gtfs_dir):
+    """ON_ERROR='CONTINUE' at column granularity (A16): a non-numeric
+    value in a numeric column loads as NULL; the row and the rest of
+    the load survive."""
+    bad_dir = tmp_path / "gtfs"
+    bad_dir.mkdir()
+    # table -> (file, numeric column, key column): the numeric field
+    # of each file's first data row becomes "bus"
+    bad = {"routes_static": ("routes.txt", "route_type", "route_id"),
+           "trips_static": ("trips.txt", "direction_id", "trip_id"),
+           "stops_static": ("stops.txt", "stop_lat", "stop_id"),
+           "stop_times_static": ("stop_times.txt", "stop_sequence",
+                                 "trip_id")}
+    first_keys = {}
+    for table, (name, col, key) in bad.items():
+        with open(os.path.join(gtfs_dir, name), newline="") as f:
+            rows = list(csv.reader(f))
+        rows[1][rows[0].index(col)] = "bus"
+        first_keys[table] = rows[1][rows[0].index(key)]
+        with open(bad_dir / name, "w", newline="") as f:
+            csv.writer(f, lineterminator="\n").writerows(rows)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    assert ingest_static(spark, str(bad_dir), wh) == {
+        "routes_static": fixtures_gtfs.N_ROUTES,
+        "trips_static": fixtures_gtfs.N_TRIPS,
+        "stops_static": fixtures_gtfs.N_STOPS,
+        "stop_times_static": (fixtures_gtfs.N_TRIPS
+                              * fixtures_gtfs.STOPS_PER_TRIP)}
+    for table, (_, col, key) in bad.items():
+        first = wh.table("bronze", table).filter(
+            F.col(key) == first_keys[table])
+        assert first.filter(F.col(col).isNull()).count() == 1, table
 
 
 def assert_noop_refresh_writes_no_files(wh, local_root):

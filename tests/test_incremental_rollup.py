@@ -1,28 +1,12 @@
-"""Incremental rollup maintenance: only touched date partitions are
-recomputed, late data merges with history, untouched partition files
-are not rewritten."""
+"""merge_upsert: latest-wins keyed MERGE that rewrites only the
+partitions its updates touch; untouched partition files are not
+rewritten."""
 
 from __future__ import annotations
 
 import datetime as dt
 import glob
 import os
-
-from pyspark.sql import functions as F
-
-from tp_airflow_gtfs_snowflake_spark.operators.incremental import (
-    incremental_rollup_refresh)
-
-
-def _build(df):
-    return (df.groupBy("event_date", "route")
-            .agg(F.count("*").alias("n"),
-                 F.sum("delay").alias("total_delay")))
-
-
-def _rows(spark, rows):
-    return spark.createDataFrame(
-        rows, "event_date date, route string, delay long, insert_date timestamp")
 
 
 def _d(day):
@@ -31,38 +15,6 @@ def _d(day):
 
 def _t(h):
     return dt.datetime(2026, 8, 10, h)
-
-
-def test_rollup_refresh_initial_and_incremental(spark, tmp_path):
-    path = str(tmp_path / "rollup")
-    fact = [(_d(1), "r1", 5, _t(1)), (_d(1), "r2", 7, _t(1)),
-            (_d(2), "r1", 3, _t(2)), (_d(3), "r1", 1, _t(3))]
-    src = _rows(spark, fact)
-    assert incremental_rollup_refresh(
-        spark, src, path, _build) == [_d(1), _d(2), _d(3)]
-
-    # no new data -> no partitions refreshed, no writes
-    assert incremental_rollup_refresh(spark, src, path, _build) == []
-
-    # late row lands in day 2 + a brand-new day 4, both with newer
-    # ingest stamps; day-1/day-3 partition files must not be rewritten
-    before = {f: os.path.getmtime(f)
-              for f in glob.glob(f"{path}/event_date=2026-08-0[13]/*.parquet")}
-    fact += [(_d(2), "r2", 10, _t(4)), (_d(4), "r1", 2, _t(4))]
-    src2 = _rows(spark, fact)
-    assert incremental_rollup_refresh(
-        spark, src2, path, _build) == [_d(2), _d(4)]
-
-    after = {f: os.path.getmtime(f)
-             for f in glob.glob(f"{path}/event_date=2026-08-0[13]/*.parquet")}
-    assert before == after, "untouched partitions were rewritten"
-
-    # rollup must equal the from-scratch recompute (late data merged)
-    got = {(r["event_date"], r["route"]): (r["n"], r["total_delay"])
-           for r in spark.read.parquet(path).collect()}
-    want = {(r["event_date"], r["route"]): (r["n"], r["total_delay"])
-            for r in _build(src2).collect()}
-    assert got == want
 
 
 def test_merge_upsert_latest_wins_partition_scoped(spark, tmp_path):
@@ -94,277 +46,3 @@ def test_merge_upsert_latest_wins_partition_scoped(spark, tmp_path):
     after = {f: os.path.getmtime(f)
              for f in glob.glob(f"{path}/day=2026-08-02/*.parquet")}
     assert before == after, "untouched partition rewritten"
-
-
-def test_erase_keys_is_surgical_and_complete(spark, tmp_path):
-    """GDPR erasure: doomed keys vanish (including from partitions
-    they fully owned), untouched partitions keep byte-identical
-    files, and only hit partitions are rewritten."""
-    import datetime as dt
-    import glob
-    import os
-
-    from tp_airflow_gtfs_snowflake_spark.catalog import erase_keys
-
-    root = str(tmp_path / "t")
-    d1, d2, d3, d4 = (dt.date(2024, 3, i) for i in (1, 2, 3, 4))
-    rows = (
-        [(u, f"a{u}", d1) for u in (0, 1, 2)]   # user 2 present
-        + [(u, f"b{u}", d2) for u in (0, 1)]    # untouched
-        + [(u, f"c{u}", d3) for u in (0, 1)]    # untouched
-        + [(2, "d2", d4)])                      # fully owned by user 2
-    df = spark.createDataFrame(rows, "user long, v string, day date")
-    df.repartition(1).write.partitionBy("day").parquet(root)
-
-    def snap(day):
-        return {f: (os.path.getmtime(f), os.path.getsize(f))
-                for f in glob.glob(f"{root}/day={day}/*.parquet")}
-
-    before2, before3 = snap("2024-03-02"), snap("2024-03-03")
-    out = erase_keys(spark, root, key_col="user", keys=[2],
-                     partition_col="day")
-    assert out == {"partitions_rewritten": 2, "rows_erased": 2}
-
-    got = spark.read.parquet(root)
-    assert got.filter(F.col("user") == 2).count() == 0
-    assert got.count() == 6
-    assert not os.path.isdir(f"{root}/day=2024-03-04")  # fully-owned
-    # untouched partitions: files byte-stable (not rewritten)
-    assert snap("2024-03-02") == before2
-    assert snap("2024-03-03") == before3
-
-    # erasing a key that never existed is zero work
-    out2 = erase_keys(spark, root, key_col="user", keys=[99],
-                      partition_col="day")
-    assert out2 == {"partitions_rewritten": 0, "rows_erased": 0}
-
-
-def test_erase_keys_preserves_null_keys(spark, tmp_path):
-    """NULL-keyed rows in a rewritten partition must survive the
-    erasure (NOT IN is NULL for NULL keys — a bare negation would
-    silently drop them; round-3 advice regression)."""
-    import datetime as dt
-
-    from tp_airflow_gtfs_snowflake_spark.catalog import erase_keys
-
-    root = str(tmp_path / "tn")
-    d1 = dt.date(2024, 3, 1)
-    rows = [(1, "a1", d1), (None, "anon", d1), (2, "a2", d1)]
-    df = spark.createDataFrame(rows, "user long, v string, day date")
-    df.repartition(1).write.partitionBy("day").parquet(root)
-
-    out = erase_keys(spark, root, key_col="user", keys=[2],
-                     partition_col="day")
-    assert out == {"partitions_rewritten": 1, "rows_erased": 1}
-    got = spark.read.parquet(root)
-    assert got.count() == 2
-    assert got.filter(F.col("user").isNull()).count() == 1
-
-
-def test_merge_replace_is_surgical(spark, tmp_path):
-    """MERGE semantics with the erase_keys partition discipline:
-    matched keys replaced, new keys inserted, a key moving partition
-    vacates the old one, and untouched partitions keep byte-identical
-    files."""
-    import datetime as dt
-    import glob
-    import os
-
-    from tp_airflow_gtfs_snowflake_spark.catalog import merge_replace
-
-    root = str(tmp_path / "m")
-    d1, d2, d3, d4 = (dt.date(2024, 3, i) for i in (1, 2, 3, 4))
-    rows = ([(u, f"a{u}", d1) for u in (0, 1)]
-            + [(u, f"b{u}", d2) for u in (2, 3)]      # untouched
-            + [(9, "move-me", d3)])                   # fully owned
-    df = spark.createDataFrame(rows, "user long, v string, day date")
-    df.repartition(1).write.partitionBy("day").parquet(root)
-
-    def snap(day):
-        return {f: (os.path.getmtime(f), os.path.getsize(f))
-                for f in glob.glob(f"{root}/day={day}/*.parquet")}
-
-    before2 = snap("2024-03-02")
-    updates = spark.createDataFrame(
-        [(1, "a1-new", d1),     # in-place update
-         (9, "moved", d4),      # update that changes partition
-         (7, "fresh", d4)],     # insert
-        "user long, v string, day date")
-    out = merge_replace(spark, root, updates, key_col="user",
-                       partition_col="day")
-    assert out == {"partitions_rewritten": 3,  # d1, d3 (vacated), d4
-                   "rows_updated": 2, "rows_inserted": 1}
-
-    got = {(r["user"], r["v"], str(r["day"])) for r in
-           spark.read.parquet(root).collect()}
-    assert got == {(0, "a0", "2024-03-01"), (1, "a1-new", "2024-03-01"),
-                   (2, "b2", "2024-03-02"), (3, "b3", "2024-03-02"),
-                   (9, "moved", "2024-03-04"), (7, "fresh", "2024-03-04")}
-    assert not os.path.isdir(f"{root}/day=2024-03-03")  # vacated
-    assert snap("2024-03-02") == before2  # untouched = byte-stable
-
-
-def test_merge_replace_rejects_null_update_keys(spark, tmp_path):
-    """A NULL merge key matches nothing; merge_replace must refuse
-    rather than insert unmatchable rows, while NULL-keyed rows already
-    IN the table survive a rewrite of their partition."""
-    import datetime as dt
-
-    import pytest as _pytest
-
-    from tp_airflow_gtfs_snowflake_spark.catalog import merge_replace
-
-    root = str(tmp_path / "mn")
-    d1 = dt.date(2024, 3, 1)
-    base = spark.createDataFrame(
-        [(1, "a", d1), (None, "anon", d1)],
-        "user long, v string, day date")
-    base.repartition(1).write.partitionBy("day").parquet(root)
-
-    bad = spark.createDataFrame([(None, "x", d1)],
-                                "user long, v string, day date")
-    with _pytest.raises(ValueError, match="NULL"):
-        merge_replace(spark, root, bad, key_col="user",
-                      partition_col="day")
-
-    ok = spark.createDataFrame([(1, "a2", d1)],
-                               "user long, v string, day date")
-    merge_replace(spark, root, ok, key_col="user", partition_col="day")
-    got = {(r["user"], r["v"]) for r in
-           spark.read.parquet(root).collect()}
-    assert got == {(1, "a2"), (None, "anon")}
-
-
-def test_erase_keys_reaches_null_partition(spark, tmp_path):
-    """Doomed rows living in the NULL partition must actually be
-    erased: isin([None]) matches nothing, and the vacated-dir delete
-    must target __HIVE_DEFAULT_PARTITION__, not 'day=None'."""
-    from tp_airflow_gtfs_snowflake_spark.catalog import erase_keys
-    root = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, "d1", 10), (2, None, 20), (3, None, 30)],
-        "user long, day string, v long")
-    df.write.partitionBy("day").parquet(root)
-    out = erase_keys(spark, root, key_col="user", keys=[2],
-                     partition_col="day")
-    assert out["rows_erased"] == 1
-    got = {(r["user"], r["day"]) for r in
-           spark.read.parquet(root).collect()}
-    assert got == {(1, "d1"), (3, None)}
-    # erase the LAST null-partition row: the hive-default dir itself
-    # must be removed (a raw 'day=None' path would silently miss it)
-    erase_keys(spark, root, key_col="user", keys=[3],
-               partition_col="day")
-    import os
-    assert not os.path.isdir(
-        os.path.join(root, "day=__HIVE_DEFAULT_PARTITION__"))
-    assert {r["user"] for r in spark.read.parquet(root).collect()} \
-        == {1}
-
-
-def test_erase_keys_escaped_partition_value(spark, tmp_path):
-    """Partition values with hive-escaped characters ('a b:c' is
-    stored as 'a b%3Ac') must still be fully vacated on disk."""
-    from tp_airflow_gtfs_snowflake_spark.catalog import erase_keys
-    root = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a b:c", 10), (2, "plain", 20)],
-                          "user long, day string, v long") \
-        .write.partitionBy("day").parquet(root)
-    erase_keys(spark, root, key_col="user", keys=[1],
-               partition_col="day")
-    import glob
-    import os
-    leftovers = [p for p in glob.glob(os.path.join(root, "day=*"))
-                 if "a b" in p]
-    assert leftovers == [], f"escaped partition dir survived: {leftovers}"
-    assert {r["user"] for r in spark.read.parquet(root).collect()} \
-        == {2}
-
-
-def test_merge_replace_handles_null_partition_move(spark, tmp_path):
-    """A matched key currently in the NULL partition moving to a real
-    partition: no TypeError from sorting None against str, the stale
-    copy is vacated, and the new row lands."""
-    from tp_airflow_gtfs_snowflake_spark.catalog import merge_replace
-    root = str(tmp_path / "t")
-    spark.createDataFrame([(5, None, 1), (6, "d1", 2)],
-                          "user long, day string, v long") \
-        .write.partitionBy("day").parquet(root)
-    updates = spark.createDataFrame([(5, "d2", 9)],
-                                    "user long, day string, v long")
-    out = merge_replace(spark, root, updates, key_col="user",
-                        partition_col="day")
-    assert out["rows_updated"] == 1 and out["rows_inserted"] == 0
-    got = {(r["user"], r["day"], r["v"]) for r in
-           spark.read.parquet(root).collect()}
-    assert got == {(5, "d2", 9), (6, "d1", 2)}
-
-
-def test_append_epoch_replay_across_dates_is_idempotent(spark, tmp_path):
-    """A crash-replay of the same epoch landing on a DIFFERENT
-    event_date (the Paris-midnight hole) must not duplicate the
-    epoch: the stale date's epoch directory is vacated first."""
-    from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
-    import datetime as dt
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    rows = [("t1", "r1", 0)]
-    base = spark.createDataFrame(rows,
-                                 "trip_id string, route_id string, "
-                                 "direction_id int")
-    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
-    wh.append_epoch("bronze", "trip_updates_raw",
-                    base.withColumn("event_date", F.lit(d1)), 7)
-    # replay of epoch 7 after midnight: same rows, next event_date
-    wh.append_epoch("bronze", "trip_updates_raw",
-                    base.withColumn("event_date", F.lit(d2)), 7)
-    got = wh.table("bronze", "trip_updates_raw") \
-        .filter("ingest_epoch = 7").collect()
-    assert len(got) == 1 and got[0]["event_date"] == d2
-
-
-def test_compact_partitions_is_surgical(spark, tmp_path):
-    """OPTIMIZE must rewrite ONLY fragmented partitions: untouched
-    partition files stay byte-for-byte identical, row content is
-    preserved exactly, and the fragmented partition's file count
-    drops to the target."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from tp_airflow_gtfs_snowflake_spark.catalog import (
-        compact_partitions)
-
-    path = str(tmp_path / "tbl")
-    base = spark.range(100).select(
-        F.col("id"), (F.col("id") % 2).cast("string").alias("p"))
-    # partition p=0 fragmented into 10 files, p=1 compact in 1
-    (base.filter("p = '0'").repartition(10)
-     .write.partitionBy("p").parquet(path))
-    (base.filter("p = '1'").coalesce(1)
-     .write.mode("append").partitionBy("p").parquet(path))
-
-    def files(part):
-        return sorted(glob.glob(os.path.join(path, f"p={part}",
-                                             "*.parquet")))
-
-    before0, before1 = files("0"), files("1")
-    assert len(before0) == 10 and len(before1) == 1
-    sig1 = [(f, os.path.getsize(f), open(f, "rb").read()[:64])
-            for f in before1]
-    rows_before = sorted(r.id for r in spark.read.parquet(path).collect())
-
-    acct = compact_partitions(spark, path, partition_col="p",
-                              max_files=4)
-    assert acct == {"partitions_compacted": 1, "files_before": 10,
-                    "files_after": 1}
-    assert len(files("0")) == 1
-    # p=1 untouched byte-for-byte
-    assert [(f, os.path.getsize(f), open(f, "rb").read()[:64])
-            for f in files("1")] == sig1
-    rows_after = sorted(r.id for r in spark.read.parquet(path).collect())
-    assert rows_after == rows_before
-
-    # idempotent: nothing left to compact
-    assert compact_partitions(spark, path, partition_col="p",
-                              max_files=4)["partitions_compacted"] == 0

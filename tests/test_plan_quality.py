@@ -96,64 +96,6 @@ def test_minhash_bucket_join_is_equi(spark):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_bucketed_join_needs_no_exchange(spark, tmp_path):
-    """Co-located bucketed tables: the equi-join on the bucket key must
-    not shuffle either side (the 'pay the shuffle once at write time'
-    strategy for repeatedly-joined 100 TB facts)."""
-    from tp_airflow_gtfs_snowflake_spark.catalog import write_bucketed
-    # (warehouse dir is a static conf; managed tables land in the
-    # default spark-warehouse and are dropped in the finally block)
-    li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet") \
-        .select("l_orderkey", "l_quantity")
-    o = spark.read.parquet(f"{SF_ORACLE}/orders.parquet") \
-        .select("o_orderkey", "o_orderpriority")
-    write_bucketed(li, "li_bkt", bucket_col="l_orderkey", n_buckets=8)
-    write_bucketed(o, "o_bkt", bucket_col="o_orderkey", n_buckets=8)
-    try:
-        joined = (spark.table("li_bkt")
-                  .join(spark.table("o_bkt"),
-                        F.col("l_orderkey") == F.col("o_orderkey"))
-                  .groupBy("o_orderpriority")
-                  .agg(F.sum("l_quantity")))
-        p = joined._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode
-            .fromString("formatted"))
-        join_section = p.split("HashAggregate")[0]
-        assert "Exchange" not in join_section, \
-            f"bucketed join still shuffles:\n{p[:1200]}"
-        assert "SortMergeJoin" in p or "ShuffledHashJoin" in p \
-            or "BroadcastHashJoin" in p
-    finally:
-        spark.sql("DROP TABLE IF EXISTS li_bkt")
-        spark.sql("DROP TABLE IF EXISTS o_bkt")
-
-
-def test_rt_bronze_recency_filter_prunes_partitions(spark, tmp_path):
-    """README.md:139: KPI queries must be filtered on a recent time
-    window.  The RT bronze tables are date-partitioned by default, so a
-    B13-style recency predicate must appear as a PartitionFilter on the
-    scan (pruning whole directories), not just a row-group filter."""
-    import datetime as dt
-
-    from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    rows = [("V1", 1700000000 + d * 86400,
-             dt.date(2024, 3, 1) + dt.timedelta(days=d)) for d in range(5)]
-    df = spark.createDataFrame(
-        rows, "vehicle_id string, timestamp_epoch long, event_date date")
-    wh.append_epoch("bronze", "vehicle_positions_raw", df, epoch_id=1)
-
-    recent = wh.table("bronze", "vehicle_positions_raw").filter(
-        F.col("event_date") >= dt.date(2024, 3, 4))
-    p = recent._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        .fromString("formatted"))
-    pf = next((l for l in p.splitlines() if "PartitionFilters" in l), "")
-    assert "event_date" in pf, f"no partition filter:\n{p[:1200]}"
-    # and the pruning actually works: only 2 of 5 daily partitions read
-    assert recent.count() == 2
-
-
 def test_ivf_assign_has_no_exchange(spark):
     """Centroid assignment is a pure per-row argmax over an inlined
     centroid literal: the plan must be scan -> project, no Exchange,
@@ -303,42 +245,6 @@ def test_runtime_bloom_filter_injects_on_shuffle_join(spark):
                 spark.conf.set(k, v)
 
 
-def test_range_layout_files_are_disjoint_and_skipped(spark, tmp_path):
-    # write_range_layout must produce files with disjoint sort-key
-    # ranges (tight min/max footer stats) so a selective range filter
-    # reads a fraction of the files — row-group skipping is the only
-    # thing standing between a point query and a 100 TB scan.
-    import pyarrow.parquet as pq
-    from tp_airflow_gtfs_snowflake_spark.catalog import write_range_layout
-
-    li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet")
-    path = str(tmp_path / "li_ranged")
-    write_range_layout(li, path, sort_col="l_shipdate", n_ranges=8)
-
-    import glob
-    spans = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index("l_shipdate")
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        spans.append((min(mins), max(maxs)))
-    spans.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2, f"overlapping file ranges: {hi1} > {lo2}"
-
-    # and the filter actually prunes: a one-range predicate must scan
-    # fewer rows than the table holds
-    ranged = spark.read.parquet(path)
-    lo, hi = spans[0]
-    got = ranged.filter(F.col("l_shipdate") <= F.lit(lo)).count()
-    total = ranged.count()
-    assert got < total
-
-
 def test_aqe_splits_skewed_join_partitions(spark):
     # One hot key (90% of rows) would pin a single reducer for hours at
     # 100 TB.  With AQE skew handling on (session default), the final
@@ -379,88 +285,6 @@ def test_aqe_splits_skewed_join_partitions(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_zorder_layout_prunes_on_both_dimensions(spark, tmp_path):
-    """write_zorder_layout must leave tight-enough footer stats that a
-    selective filter on EITHER z-ordered column overlaps only a
-    fraction of the files — the property that distinguishes Z-order
-    from single-column range layout (perfect on one dim, useless on
-    the rest)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from tp_airflow_gtfs_snowflake_spark.catalog import write_zorder_layout
-    from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import _t
-
-    # quantize both dimensions onto the same 5-bit range (the
-    # docstring's contract) — unbalanced bit-widths let the wider
-    # column dominate the interleave and the narrow one stops pruning
-    ev = _t(spark, SF_ORACLE, "events").select(
-        "event_id", "user_id", F.dayofmonth("ts").alias("day"), "value",
-        (F.col("user_id") / 5).cast("long").alias("uq"),
-        (F.dayofmonth("ts") - 1).alias("dq"))
-    path = str(tmp_path / "ev_z")
-    write_zorder_layout(ev, path, zorder_cols=["uq", "dq"],
-                        n_ranges=16, bits=5)
-
-    def overlapping(col, lo, hi):
-        files = sorted(glob.glob(f"{path}/*.parquet"))
-        hit = 0
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.names.index(col)
-            mins = [md.row_group(rg).column(idx).statistics.min
-                    for rg in range(md.num_row_groups)]
-            maxs = [md.row_group(rg).column(idx).statistics.max
-                    for rg in range(md.num_row_groups)]
-            if min(mins) <= hi and lo <= max(maxs):
-                hit += 1
-        return hit, len(files)
-
-    u_hit, n = overlapping("user_id", 10, 19)
-    d_hit, n2 = overlapping("day", 3, 7)
-    assert n == n2 and n >= 8
-    # both dimensions must prune; a 1-D sort gives hit == n on the
-    # second column
-    assert u_hit <= n // 2, (u_hit, n)
-    assert d_hit <= n // 2, (d_hit, n)
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    """compact_parquet must collapse a fragmented directory into the
-    computed file budget with content intact — the maintenance op that
-    keeps streaming bronze scannable."""
-    import glob
-
-    from tp_airflow_gtfs_snowflake_spark.catalog import compact_parquet
-
-    src = str(tmp_path / "fragmented")
-    ev = _t_events(spark)
-    ev.repartition(40).write.parquet(src)  # 40 tiny files
-    n_in = len(glob.glob(f"{src}/*.parquet"))
-    assert n_in >= 40
-
-    dst = str(tmp_path / "compacted")
-    compact_parquet(spark, src, dst, target_mb=128,
-                    sort_within=["user_id"])
-    n_out = len(glob.glob(f"{dst}/*.parquet"))
-    assert n_out < n_in / 10
-    # content identical (order-insensitive)
-    def summary(path):
-        r = spark.read.parquet(path).groupBy().agg(
-            F.count("*").alias("n"), F.sum("user_id").alias("su"),
-            F.sum("value").alias("sv")).first()
-        return (r["n"], r["su"], round(r["sv"], 2))
-
-    assert summary(src) == summary(dst)
-
-
-def _t_events(spark):
-    from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import _t
-    return _t(spark, SF_ORACLE, "events").select(
-        "event_id", "user_id", "value")
 
 
 def test_b42_window_sees_preaggregated_input_only(spark):
@@ -531,35 +355,6 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path):
     p = jqe.explainString(mode)
     assert "dynamicpruning" in p.lower(), f"no DPP in plan:\n{p}"
     assert q.count() > 0
-
-
-def test_cdc_diff_on_bucketed_snapshots_is_exchange_free(spark):
-    """b43's scale claim, proven: write both snapshots bucketed on the
-    key and the full-outer CDC join plans with NO exchange on either
-    side — the diff becomes a per-bucket merge."""
-    from tp_airflow_gtfs_snowflake_spark.catalog import write_bucketed
-    o = spark.read.parquet(f"{SF_ORACLE}/orders.parquet")
-    cents = F.floor(F.col("o_totalprice") * 100).cast("long")
-    old = (o.filter(F.col("o_orderkey") % 97 != 0)
-           .select("o_orderkey", cents.alias("price_cents")))
-    new = (o.filter(F.col("o_orderkey") % 89 != 0)
-           .select("o_orderkey", (cents + 1).alias("price_cents")))
-    write_bucketed(old, "snap_old", bucket_col="o_orderkey", n_buckets=8)
-    write_bucketed(new, "snap_new", bucket_col="o_orderkey", n_buckets=8)
-    try:
-        so = spark.table("snap_old").alias("o")
-        sn = spark.table("snap_new").alias("n")
-        d = so.join(sn, F.col("o.o_orderkey") == F.col("n.o_orderkey"),
-                    "full_outer")
-        p = d._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode
-            .fromString("formatted"))
-        assert "FullOuter" in p
-        assert "Exchange" not in p, f"bucketed CDC still shuffles:\n{p[:1200]}"
-        assert d.count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS snap_old")
-        spark.sql("DROP TABLE IF EXISTS snap_new")
 
 
 def test_b66_ohlc_is_two_phase_aggregate_no_window(spark):
@@ -1219,11 +1014,6 @@ def test_checkpoint_sites_are_audited():
         ("operators/components.py", "pagerank_int"),
         ("operators/hierarchy.py", "tree_depths"),
         ("operators/similarity.py", "cell_blocked_neardup"),
-        # --- catalog maintenance: partition-scoped relations (the
-        # touched partitions only, read once / written once)
-        ("catalog.py", "compact_partitions"),
-        ("catalog.py", "erase_keys"),
-        ("catalog.py", "merge_replace"),
         # --- streaming micro-batch state: batch-sized / group-sized
         ("streaming/rt_stream.py", "process"),
         ("streaming/sketch_state.py", "merge"),

@@ -230,27 +230,6 @@ def test_bmp_decode_dims_and_histogram(width, height, top_down, data):
 
 
 @settings(**SETTINGS)
-@given(st.lists(st.tuples(st.integers(0, 255), st.integers(0, 255)),
-                min_size=1, max_size=64))
-def test_zorder_key_is_a_bijection(spark, pts):
-    """Interleaving must be invertible: deinterleaving the Morton key
-    with independent pure-Python bit arithmetic recovers both inputs
-    exactly (so file min/max stats on the key bound BOTH columns)."""
-    from tp_airflow_gtfs_snowflake_spark.catalog import zorder_key
-    df = spark.createDataFrame(pts, "x long, y long")
-    rows = df.select(
-        "x", "y",
-        zorder_key([F.col("x"), F.col("y")], bits=8).alias("z")).collect()
-
-    def deinterleave(z, d, n=2, bits=8):
-        return sum(((z >> (b * n + d)) & 1) << b for b in range(bits))
-
-    for r in rows:
-        assert deinterleave(r["z"], 0) == r["x"]
-        assert deinterleave(r["z"], 1) == r["y"]
-
-
-@settings(**SETTINGS)
 @given(st.lists(st.lists(st.floats(-8, 8, allow_nan=False,
                                    width=32),
                          min_size=8, max_size=8),

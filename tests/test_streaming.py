@@ -23,6 +23,12 @@ def landing(tmp_path):
     return d
 
 
+def _partition_dirs(wh, table: str) -> set[str]:
+    root = wh.path("bronze", table)
+    return {d for d in os.listdir(root)
+            if os.path.isdir(os.path.join(root, d))}
+
+
 def _write_snapshot(landing, name: str, payload: str) -> None:
     p = landing / name
     tmp = landing / (name + ".tmp")
@@ -62,6 +68,13 @@ def test_exactly_once_across_restart(spark, tmp_path, landing):
     q.awaitTermination(120)
     assert wh.table("bronze", "trip_stop_times").count() == n2
 
+    # one directory per micro-batch epoch, and no other level
+    assert _partition_dirs(wh, "trip_stop_times") == {
+        "ingest_epoch=0", "ingest_epoch=1"}
+    for t in ("trip_updates_raw", "vehicle_positions_raw"):
+        assert all(d.startswith("ingest_epoch=")
+                   for d in _partition_dirs(wh, t))
+
 
 def test_batch_durations_reported(spark, tmp_path, landing):
     """SLO evidence: every data micro-batch reports a positive
@@ -86,8 +99,9 @@ def test_batch_durations_reported(spark, tmp_path, landing):
 def test_epoch_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: a crash between the three bronze
     writes replays the whole epoch.  append_epoch must make the replay
-    overwrite its own partitions, not duplicate rows — including the
-    partial-write case."""
+    overwrite its own partition, not duplicate rows — including the
+    partial-write case and a replay whose rows carry the next day's
+    insert_date."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.create_if_not_exists("bronze", "vehicle_positions_raw")
     rows = spark.createDataFrame(
@@ -118,10 +132,27 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
     assert wh.append_epoch("bronze", "vehicle_positions_raw", rows,
                            epoch_id=8) == 2
     assert wh.table("bronze", "vehicle_positions_raw").count() == 3
-    # and rows carry their epoch + derived event_date partition keys
+
+    # a replay after midnight: epoch 9 replays with rows stamped the
+    # next day, and the epoch still holds only the replay's rows
+    def stamped(df, ts):
+        return df.withColumn("insert_date",
+                             F.lit(ts).cast("timestamp_ntz"))
+    assert wh.append_epoch("bronze", "vehicle_positions_raw",
+                           stamped(rows, "2024-01-01 23:59:00"),
+                           epoch_id=9) == 2
+    assert wh.append_epoch("bronze", "vehicle_positions_raw",
+                           stamped(rows.limit(1), "2024-01-02 00:01:00"),
+                           epoch_id=9) == 1
     got = wh.table("bronze", "vehicle_positions_raw")
+    assert [str(r["insert_date"]) for r in
+            got.filter("ingest_epoch = 9").collect()] == [
+        "2024-01-02 00:01:00"]
+    assert got.count() == 4
     assert got.filter(F.col("ingest_epoch").isNull()).count() == 0
-    assert got.filter(F.col("event_date").isNull()).count() == 0
+    # the layout is one directory per epoch, with no date level
+    assert _partition_dirs(wh, "vehicle_positions_raw") == {
+        "ingest_epoch=7", "ingest_epoch=8", "ingest_epoch=9"}
 
 
 def test_windowed_counts_with_watermark(spark, landing, tmp_path):

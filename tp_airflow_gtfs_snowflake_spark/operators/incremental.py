@@ -1,4 +1,4 @@
-"""High-watermark incremental append (A21/A22).
+"""High-watermark incremental append (A21/A22) and keyed merges.
 
 reference: every silver load shares
   INSERT INTO dst SELECT ... FROM src
@@ -16,8 +16,9 @@ Scan parquet [insert_date] -> HashAggregate -> Exchange SinglePartition
 from the append-only watermark monotonicity: a crashed run re-appends
 nothing already visible, exactly like the reference.
 
-The streaming-native replacement (checkpointed file source, which
-eliminates the destination scan entirely) lives in streaming/.
+merge_upsert (latest-wins keyed MERGE) and retraction_apply_batch (a
+grouped aggregate maintained under upserts) back the registry's
+incremental-maintenance queries.
 """
 
 from __future__ import annotations
@@ -34,14 +35,15 @@ from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
 EPOCH_FLOOR = dt.datetime(1900, 1, 1)  # '1900-01-01'::TIMESTAMP_NTZ
 
 
-def destination_watermark(wh: Warehouse, layer: str, name: str,
-                          col: str = "insert_date") -> dt.datetime:
+def destination_watermark(wh: Warehouse, layer: str,
+                          name: str) -> dt.datetime:
     """(SELECT MAX(insert_date) FROM dst) — scalar agg over a scan of
-    the destination's whole `col` column (no aggregate pushdown into
-    parquet row-group statistics; see the module docstring)."""
+    the destination's whole insert_date column (no aggregate pushdown
+    into parquet row-group statistics; see the module docstring)."""
     if not wh.exists(layer, name):
         return EPOCH_FLOOR
-    row = wh.table(layer, name).agg(F.max(col).alias("wm")).collect()[0]
+    row = wh.table(layer, name).agg(
+        F.max("insert_date").alias("wm")).collect()[0]
     return row["wm"] or EPOCH_FLOOR
 
 
@@ -50,96 +52,32 @@ def incremental_append(
     src: DataFrame,
     dst_name: str,
     transform: Callable[[DataFrame], DataFrame],
-    *,
-    dst_layer: str = "silver",
-    watermark_col: str = "insert_date",
 ) -> int:
-    """Append transform(src rows newer than dst watermark) to dst.
+    """Append transform(src rows newer than the silver dst's
+    insert_date watermark) to silver dst_name.
 
     Returns the number of appended rows, counted by the write job.
     `transform` is the declarative silver select-list; the watermark
     filter is applied on the *source* before the transform so Catalyst
-    pushes it into the source scan (partition pruning when src is
-    date-partitioned).
+    pushes it into the source scan.
     """
-    wm = destination_watermark(wh, dst_layer, dst_name, watermark_col)
-    out = transform(src.filter(F.col(watermark_col) > F.lit(wm)))
+    wm = destination_watermark(wh, "silver", dst_name)
+    out = transform(src.filter(F.col("insert_date") > F.lit(wm)))
     # an empty append still writes a schema-only part file into an
     # unpartitioned table, so a no-op refresh must not write at all;
     # isEmpty stops at the first row of the pushed-down scan
     if out.isEmpty():
         return 0
     # DELIBERATE DEVIATION: carry the BRONZE insert_date into
-    # silver.  The reference's silver INSERTs omit insert_date, so
-    # the column DEFAULT stamps silver-load time
-    # (gtfs_silver.py:126-213) — but then a bronze row committed
-    # between a silver run's watermark read and its insert could be
-    # skipped forever (watermark already advanced past it).  Keying
-    # the watermark on the carried bronze timestamp removes that
-    # missed-row race; consumers reading silver insert_date get
-    # bronze-ingest recency, not silver-load recency.
-    return wh.append(dst_layer, dst_name, out, stamp_insert_date=False)
-
-
-def incremental_rollup_refresh(
-    spark,
-    src: DataFrame,
-    rollup_path: str,
-    build: Callable[[DataFrame], DataFrame],
-    *,
-    date_col: str = "event_date",
-    watermark_col: str = "insert_date",
-) -> list:
-    """Maintain a date-partitioned materialized rollup incrementally:
-    recompute ONLY the partitions touched since the last refresh.
-
-    The continuous-aggregate maintenance pattern (TimescaleDB calls it
-    a hypertable rollup; Snowflake sells it as dynamic tables): at
-    100 TB you cannot re-aggregate years of history because one late
-    row arrived — you re-aggregate the one day it landed in.
-
-    Mechanics per refresh:
-    1. watermark = MAX(rollup_watermark) over the rollup (parquet
-       footer stats, no full scan; EPOCH_FLOOR on first build);
-    2. touched = DISTINCT date_col of source rows with
-       watermark_col > watermark — a days-count-bounded list, safe to
-       collect (same contract as the scalar watermark read);
-    3. re-aggregate src WHERE date_col IN touched — ALL rows of those
-       dates, so late data merges with history correctly (pruned scan:
-       the IN list prunes partitions when src is date-partitioned);
-    4. dynamic-partition-overwrite exactly those rollup directories.
-
-    `build` is the rollup query (groupBy including date_col); the
-    operator stamps each partition with rollup_watermark = MAX
-    incoming watermark so refreshes compose.  Correctness requires
-    watermark_col to be monotonic over arrival order (an ingest stamp,
-    not an event time) — same contract as incremental_append.
-
-    Returns the sorted list of refreshed date partitions.
-    """
-    try:
-        existing = spark.read.parquet(rollup_path)
-        wm = existing.agg(F.max("rollup_watermark").alias("wm")) \
-            .collect()[0]["wm"] or EPOCH_FLOOR
-    except AnalysisException:
-        # missing path = first build; any OTHER failure must propagate
-        # (treating a transient read error as "no rollup yet" would
-        # recompute from the epoch floor and double-append)
-        wm = EPOCH_FLOOR
-    fresh = src.filter(F.col(watermark_col) > F.lit(wm))
-    touched = sorted(r[0] for r in
-                     fresh.select(date_col).distinct().collect())
-    if not touched:
-        return []
-    sliced = src.filter(F.col(date_col).isin(touched))
-    wm_per_date = sliced.groupBy(date_col).agg(
-        F.max(watermark_col).alias("rollup_watermark"))
-    out = build(sliced).join(F.broadcast(wm_per_date), date_col)
-    (out.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy(date_col)
-     .parquet(rollup_path))
-    return touched
+    # silver (the transform keeps it, so append does not stamp).  The
+    # reference's silver INSERTs omit insert_date, so the column
+    # DEFAULT stamps silver-load time (gtfs_silver.py:126-213) — but
+    # then a bronze row committed between a silver run's watermark
+    # read and its insert could be skipped forever (watermark already
+    # advanced past it).  Keying the watermark on the carried bronze
+    # timestamp removes that missed-row race; consumers reading silver
+    # insert_date get bronze-ingest recency, not silver-load recency.
+    return wh.append("silver", dst_name, out)
 
 
 def merge_upsert(

@@ -2574,8 +2574,9 @@ def b97_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vector magnitude leak document length' representation audit "
     "(length-correlated norms bias cosine-free retrieval).  "
     "Quantized norms (c63) + exact-moment corr (b81); the join is "
-    "the shape to co-bucket both tables on at 100 TB so it runs "
-    "exchange-free (catalog.write_bucketed's contract)",
+    "the shape to co-bucket both tables on at 100 TB (Spark's "
+    "bucketBy on the join key at write time) so it runs "
+    "exchange-free",
 )
 def c78_text_embedding_join(spark: SparkSession,
                             sf_dir: str) -> DataFrame:

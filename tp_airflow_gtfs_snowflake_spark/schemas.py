@@ -59,29 +59,26 @@ STOP_TIMES_STATIC = _st(
     ("drop_off_type", _I), INSERT_DATE,
 )
 
-# RT bronze extension columns (deliberate deviation from the reference
-# DDL, documented): `event_date` date-partitions the high-volume RT
-# tables so the mandatory KPI recency filters (README.md:139) become
-# partition PRUNING instead of full-history scans, and `ingest_epoch`
-# keys idempotent micro-batch replay (catalog.Warehouse.append_epoch) —
-# the engine equivalent of Snowflake's per-file COPY load history that
-# made the reference's loads idempotent.  Both are populated by the
-# writer; silver projections (dags/gtfs_silver.py:96-119) drop them.
-_DT = T.DateType()
-EVENT_DATE = ("event_date", _DT)
+# RT bronze extension column (deliberate deviation from the reference
+# DDL, documented): `ingest_epoch` keys idempotent micro-batch replay
+# (catalog.Warehouse.append_epoch) — the engine equivalent of
+# Snowflake's per-file COPY load history that made the reference's
+# loads idempotent.  A table with this column is partitioned by it
+# (catalog.Warehouse._parts); the writer populates it, and silver
+# projections (dags/gtfs_silver.py:96-119) drop it.
 INGEST_EPOCH = ("ingest_epoch", _L)
 
 # reference: dags/gtfs_rt_minutely.py:184-191
 TRIP_UPDATES_RAW = _st(
     ("trip_id", _S), ("route_id", _S), ("direction_id", _I), INSERT_DATE,
-    EVENT_DATE, INGEST_EPOCH,
+    INGEST_EPOCH,
 )
 
 # reference: dags/gtfs_rt_minutely.py:194-203 (epoch seconds as NUMBER)
 TRIP_STOP_TIMES = _st(
     ("trip_id", _S), ("stop_sequence", _L), ("stop_id", _S),
     ("arrival_time", _L), ("departure_time", _L), INSERT_DATE,
-    EVENT_DATE, INGEST_EPOCH,
+    INGEST_EPOCH,
 )
 
 # reference: dags/gtfs_rt_minutely.py:206-218
@@ -89,7 +86,7 @@ VEHICLE_POSITIONS_RAW = _st(
     ("trip_id", _S), ("route_id", _S), ("vehicle_id", _S),
     ("latitude", _D), ("longitude", _D), ("bearing", _D),
     ("stop_id", _S), ("timestamp_epoch", _L), INSERT_DATE,
-    EVENT_DATE, INGEST_EPOCH,
+    INGEST_EPOCH,
 )
 
 BRONZE: dict[str, T.StructType] = {
@@ -145,8 +142,8 @@ SILVER: dict[str, T.StructType] = {
         ("intermediate_stop", _S), INSERT_DATE,
     ),
     # identity projection of the reference's 8 columns
-    # (gtfs_silver.py:107-119) — the bronze-side event_date/ingest_epoch
-    # extension columns are dropped here, like every silver projection
+    # (gtfs_silver.py:107-119) — the bronze-side ingest_epoch
+    # extension column is dropped here, like every silver projection
     "vehicle_positions_silver": _st(
         ("trip_id", _S), ("route_id", _S), ("vehicle_id", _S),
         ("latitude", _D), ("longitude", _D), ("bearing", _D),

@@ -19,50 +19,37 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-NULL_TOKENS = ("", "NULL", "null")
+# NULL_IF=('','NULL','null'): '' arrives as null already (the csv
+# reader's default nullValue), so only these two need normalizing
+NULL_TOKENS = ("NULL", "null")
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    *,
-    header: bool = True,
-    delimiter: str = ",",
-    quote: str = '"',
-    on_error_continue: bool = True,
-    null_tokens: tuple[str, ...] = NULL_TOKENS,
-    path_glob: str | None = None,
-) -> DataFrame:
-    """Typed CSV scan mirroring COPY INTO options.
+def read_csv(spark: SparkSession, path: str,
+             schema: T.StructType) -> DataFrame:
+    """Typed CSV scan with the COPY INTO options above: header row
+    skipped, ',' delimiter, '"' quote, NULL_IF tokens -> NULL, and
+    malformed rows dropped (ON_ERROR='CONTINUE').
 
     To apply NULL_IF over *typed* columns faithfully, non-string
-    columns are read as string, null-normalized, then cast (lenient:
-    bad numerics -> NULL, matching ON_ERROR='CONTINUE' row tolerance
-    at column granularity).
+    columns are read as string, null-normalized, then try_cast
+    (lenient: bad numerics -> NULL, matching ON_ERROR='CONTINUE' row
+    tolerance at column granularity, A16; a plain cast raises under
+    ANSI mode instead).
     """
     raw_schema = T.StructType(
         [T.StructField(f.name, T.StringType(), True) for f in schema.fields])
-    reader = (
-        spark.read.schema(raw_schema)
-        .option("header", header)
-        .option("sep", delimiter)
-        .option("quote", quote)
-        .option("mode", "DROPMALFORMED" if on_error_continue else "FAILFAST")
-    )
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
-    df = reader.csv(path)
+    df = (spark.read.schema(raw_schema)
+          .option("header", True)
+          .option("sep", ",")
+          .option("quote", '"')
+          .option("mode", "DROPMALFORMED")
+          .csv(path))
 
-    non_empty_tokens = [t for t in null_tokens if t != ""]
     cols = []
     for f in schema.fields:
-        c = F.col(f.name)
-        # '' arrives as null already (Spark csv default nullValue '');
-        # normalize the remaining NULL_IF tokens.
-        if non_empty_tokens:
-            c = F.when(c.isin(*non_empty_tokens), F.lit(None)).otherwise(c)
+        c = F.when(F.col(f.name).isin(*NULL_TOKENS), F.lit(None)) \
+            .otherwise(F.col(f.name))
         if not isinstance(f.dataType, T.StringType):
-            c = c.cast(f.dataType)  # lenient: garbage -> NULL (A16)
+            c = c.try_cast(f.dataType)
         cols.append(c.alias(f.name))
     return df.select(*cols)

@@ -21,7 +21,7 @@ Parse layer options:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -179,13 +179,3 @@ def flatten_vehicle_positions(feed: DataFrame) -> DataFrame:
         F.col("e.vehicle.stop_id").alias("stop_id"),
         F.col("e.vehicle.timestamp").cast("long").alias("timestamp_epoch"),
     )
-
-
-def lenient_long(col: Column | str) -> Column:
-    """A16: pd.to_numeric(errors='coerce').astype('Int64') equivalent —
-    non-numeric -> NULL, integer kept (gtfs_rt_minutely.py:120-123)."""
-    c = F.col(col) if isinstance(col, str) else col
-    try:
-        return c.try_cast(T.LongType())  # Spark >= 3.5
-    except AttributeError:  # pragma: no cover
-        return c.cast(T.LongType())  # non-ANSI mode: null on failure
