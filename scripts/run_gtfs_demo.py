@@ -44,7 +44,7 @@ def main() -> None:
     feed = parse_feed_json(spark.createDataFrame(
         [(s,) for s in fixtures_gtfs.make_feed_snapshots()], "feed_json string"))
     headers, stops = flatten_trip_updates(feed)
-    print({t: wh.append("bronze", t, df) for t, df in (
+    print({t: wh.append_epoch("bronze", t, df, 0) for t, df in (
         ("trip_updates_raw", headers), ("trip_stop_times", stops),
         ("vehicle_positions_raw", flatten_vehicle_positions(feed)))})
 

@@ -84,9 +84,8 @@ _FULL_ONLY_MODULES = {
     "test_round16_references", "test_round17_references",
     "test_round18_references", "test_round19_references",
     "test_round2c", "test_round5", "test_round8", "test_round10",
-    "test_round11", "test_round12", "test_tws_sessions",
-    "test_incremental_rollup", "test_hierarchy", "test_spatial",
-    "test_kmv",
+    "test_round11", "test_round12", "test_incremental_rollup",
+    "test_hierarchy", "test_spatial", "test_kmv",
 }
 # Individually gated slow members of default-tier modules (measured
 # --durations r12): redundant-with-oracle brute-force recomputations.

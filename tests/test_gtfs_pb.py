@@ -110,10 +110,10 @@ def test_pb_path_matches_json_path_bronze_to_silver(spark, tmp_path):
         wh = Warehouse(spark, str(tmp_path / f"wh_{kind}"))
         wh.create_all()
         headers, stops = flatten_trip_updates(feed)
-        wh.append("bronze", "trip_updates_raw", headers)
-        wh.append("bronze", "trip_stop_times", stops)
-        wh.append("bronze", "vehicle_positions_raw",
-                  flatten_vehicle_positions(feed))
+        wh.append_epoch("bronze", "trip_updates_raw", headers, 0)
+        wh.append_epoch("bronze", "trip_stop_times", stops, 0)
+        wh.append_epoch("bronze", "vehicle_positions_raw",
+                        flatten_vehicle_positions(feed), 0)
         refresh_silver(wh)
         silvers[kind] = {
             t: _rows(wh.table("silver", t))

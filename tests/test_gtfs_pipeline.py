@@ -8,6 +8,7 @@ import ast
 import csv
 import importlib.util
 import os
+import re
 import sys
 import threading
 import time
@@ -32,19 +33,21 @@ def gtfs_dir(tmp_path_factory):
     return str(d)
 
 
+RT_BRONZE = ("trip_updates_raw", "trip_stop_times", "vehicle_positions_raw")
+
+
 def append_rt_snapshots(spark, wh) -> dict[str, int]:
     """The fixture feed's snapshots, flattened into the three bronze
-    RT tables; returns the rows appended per table."""
+    RT tables as micro-batch epoch 0; returns the rows appended per
+    table."""
     feed = parse_feed_json(
         spark.createDataFrame([(s,) for s in fixtures_gtfs.make_feed_snapshots()],
                               "feed_json string"))
     headers, stops = flatten_trip_updates(feed)
-    return {"trip_updates_raw": wh.append("bronze", "trip_updates_raw",
-                                          headers),
-            "trip_stop_times": wh.append("bronze", "trip_stop_times", stops),
-            "vehicle_positions_raw": wh.append(
-                "bronze", "vehicle_positions_raw",
-                flatten_vehicle_positions(feed))}
+    tables = {"trip_updates_raw": headers, "trip_stop_times": stops,
+              "vehicle_positions_raw": flatten_vehicle_positions(feed)}
+    return {t: wh.append_epoch("bronze", t, df, 0)
+            for t, df in tables.items()}
 
 
 @pytest.fixture(scope="module")
@@ -152,6 +155,20 @@ def test_append_returns_rows_in_table(spark, tmp_path):
     assert wh.append_epoch("bronze", "vehicle_positions_raw", vehicles,
                            epoch_id=1) == 4
     assert wh.table("bronze", "vehicle_positions_raw").count() == 4
+
+
+def test_append_refuses_rt_bronze(spark, tmp_path):
+    # an RT bronze root holds only ingest_epoch=N directories; a plain
+    # append would land an __HIVE_DEFAULT_PARTITION__ that replay
+    # cannot overwrite
+    wh = Warehouse(spark, str(tmp_path))
+    rows = spark.createDataFrame(
+        [("T1", "V1", 1700000000)],
+        "trip_id string, vehicle_id string, timestamp_epoch long")
+    for table in RT_BRONZE:
+        with pytest.raises(ValueError, match="append_epoch"):
+            wh.append("bronze", table, rows)
+        assert not os.path.exists(wh.path("bronze", table))
 
 
 def test_second_static_ingest_returns_rows_appended(spark, tmp_path,
@@ -340,3 +357,8 @@ def test_demo_script_runs_end_to_end(spark, tmp_path, monkeypatch, capsys):
     kpi_out = "\n".join(lines[lines.index("== KPIs ==") + 1:])
     assert "punctuality_rate" in kpi_out and "route_long_name" in kpi_out
     assert "service_state" in kpi_out and "diff_s" in kpi_out
+    for table in RT_BRONZE:
+        root = tmp_path / "warehouse" / "bronze" / table
+        parts = [p.name for p in root.iterdir() if p.is_dir()]
+        assert parts, table
+        assert all(re.fullmatch(r"ingest_epoch=\d+", p) for p in parts), parts

@@ -35,9 +35,10 @@ def wh(spark, tmp_path_factory):
         spark.createDataFrame([(s,) for s in fixtures_gtfs.make_feed_snapshots()],
                               "feed_json string"))
     headers, stops = flatten_trip_updates(feed)
-    wh.append("bronze", "trip_updates_raw", headers)
-    wh.append("bronze", "trip_stop_times", stops)
-    wh.append("bronze", "vehicle_positions_raw", flatten_vehicle_positions(feed))
+    wh.append_epoch("bronze", "trip_updates_raw", headers, 0)
+    wh.append_epoch("bronze", "trip_stop_times", stops, 0)
+    wh.append_epoch("bronze", "vehicle_positions_raw",
+                    flatten_vehicle_positions(feed), 0)
     refresh_silver(wh)
     return wh
 
@@ -184,7 +185,7 @@ def test_delay_fact_sees_session_writes(own_wh, spark):
         [(s,) for s in fixtures_gtfs.make_feed_snapshots(1)],
         "feed_json string"))
     _, stops = flatten_trip_updates(feed)
-    own_wh.append("bronze", "trip_stop_times", stops)
+    own_wh.append_epoch("bronze", "trip_stop_times", stops, 1)
     assert refresh_silver(own_wh)["trip_stop_times_silver"] > 0
     after = _punctual_n(own_wh)
     assert after > before

@@ -1,11 +1,10 @@
-"""Round-2c batch: blocked fuzzy matching, mergeable sketches, the
-Spark 4 Python DataSource, and the transformWithState odometer twin."""
+"""Round-2c batch: blocked fuzzy matching, mergeable sketches and the
+Spark 4 Python DataSource."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from tests import fixtures_gtfs
@@ -123,67 +122,6 @@ def test_py_datasource_stream_tails_new_files(spark, tmp_path):
         assert [r.feed_json for r in got] == snaps  # once each, in order
     finally:
         q.stop()
-
-
-# --------------------------------------------- transformWithState twin
-
-def test_tws_plan_constructs_without_protobuf(spark, tmp_path):
-    """The migration-pair module must at least build its streaming plan
-    (schema + grouping) in any environment; only EXECUTION needs the
-    protobuf state protocol."""
-    from tp_airflow_gtfs_snowflake_spark.streaming.rt_stream import (
-        read_feed_stream)
-    from tp_airflow_gtfs_snowflake_spark.streaming.stateful import (
-        ODOMETER_SCHEMA)
-    from tp_airflow_gtfs_snowflake_spark.streaming.tws import (
-        vehicle_odometer_tws)
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "vp_202403040600.json").write_text(
-        fixtures_gtfs.make_feed_snapshots(1)[0])
-    stream = read_feed_stream(spark, str(landing))
-    df = vehicle_odometer_tws(stream)
-    assert df.isStreaming
-    assert df.schema == ODOMETER_SCHEMA
-
-
-def test_tws_odometer_matches_applyinpandas(spark, tmp_path):
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state protocol needs protobuf "
-               "(absent in this container); plan-construction is "
-               "covered above")
-    from tp_airflow_gtfs_snowflake_spark.streaming.rt_stream import (
-        read_feed_stream)
-    from tp_airflow_gtfs_snowflake_spark.streaming.stateful import (
-        vehicle_odometer)
-    from tp_airflow_gtfs_snowflake_spark.streaming.tws import (
-        vehicle_odometer_tws)
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    snaps = fixtures_gtfs.make_feed_snapshots(3)
-    for i, s in enumerate(snaps):
-        (landing / f"vp_20240304060{i}.json").write_text(s)
-
-    def final_totals(make_df, name):
-        stream = read_feed_stream(spark, str(landing),
-                                  max_files_per_trigger=1)
-        q = (make_df(stream).writeStream.outputMode("update")
-             .format("memory").queryName(name)
-             .option("checkpointLocation",
-                     str(tmp_path / f"ckpt_{name}")).start())
-        q.processAllAvailable()
-        q.stop()
-        # update mode: last row per vehicle is the final state
-        return {r.vehicle_id: (r.n_reports, round(r.path_degrees, 9))
-                for r in spark.sql(f"SELECT * FROM {name}").collect()
-                }  # later rows overwrite earlier keys via dict order
-
-    old = final_totals(vehicle_odometer, "odo_old")
-    new = final_totals(vehicle_odometer_tws, "odo_new")
-    assert new == old
-    assert any(n > 1 for n, _ in new.values())  # state crossed batches
 
 
 def test_sliding_hll_union_tracks_exact_within_5pct(spark):

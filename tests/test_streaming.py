@@ -614,71 +614,6 @@ def test_max_files_per_trigger_bounds_batches(spark, landing, tmp_path):
         .collect()[0]["c"] == 3
 
 
-def test_streaming_quality_monitor_matches_batch(spark, tmp_path):
-    """Per-micro-batch Gopher pass rates: the monitor table must
-    equal the batch recompute of each file's stats, survive a
-    restart, and stay idempotent on epoch replay (dynamic epoch
-    overwrite)."""
-    from tests.conftest import SF_SMALL
-    from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import _t
-    from tp_airflow_gtfs_snowflake_spark.streaming.quality_gate import (
-        batch_quality_stats, start_quality_monitor)
-
-    docs = _t(spark, SF_SMALL, "documents").select("doc_id", "text")
-    land = tmp_path / "docs_landing"
-    land.mkdir()
-    slices = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    for i, sl in enumerate(slices[:2]):
-        sl.coalesce(1).write.parquet(str(land / f"f{i}.parquet"))
-
-    monitor = str(tmp_path / "monitor")
-    ckpt = str(tmp_path / "ckpt_q")
-
-    def run():
-        stream = (spark.readStream.schema("doc_id long, text string")
-                  .option("maxFilesPerTrigger", "1")
-                  .parquet(str(land) + "/*/"))
-        q = start_quality_monitor(spark, stream, monitor_dir=monitor,
-                                  checkpoint_dir=ckpt,
-                                  available_now=True)
-        q.awaitTermination(120)
-
-    run()
-    slices[2].coalesce(1).write.parquet(str(land / "f2.parquet"))
-    run()  # restart: only the new file is processed
-
-    got = spark.read.parquet(monitor)
-    assert got.count() == 3  # one row per micro-batch, no duplicates
-    totals = got.agg(F.sum("n_docs"), F.sum("n_keep"),
-                     F.sum("n_tokens")).first()
-    want = batch_quality_stats(docs).first()
-    assert (totals[0], totals[1], totals[2]) == \
-        (want["n_docs"], want["n_keep"], want["n_tokens"])
-    # keep_ppm per row is internally consistent
-    for r in got.collect():
-        assert r["keep_ppm"] == r["n_keep"] * 1_000_000 // r["n_docs"]
-
-
-def test_quality_monitor_skips_empty_batches(spark, tmp_path):
-    """ADVICE r04: an empty micro-batch must not write an
-    n_docs=0 / keep_ppm=NULL row into the monitor table."""
-    import os
-
-    from tp_airflow_gtfs_snowflake_spark.streaming.quality_gate import (
-        write_quality_stats_epoch)
-
-    monitor = str(tmp_path / "monitor")
-    docs = spark.createDataFrame(
-        [("the quick brown fox " * 20,)], "text string")
-    write_quality_stats_epoch(docs, 0, monitor)
-    write_quality_stats_epoch(docs.limit(0), 1, monitor)  # empty batch
-    got = spark.read.parquet(monitor)
-    assert got.count() == 1
-    row = got.collect()[0]
-    assert row["ingest_epoch"] == 0
-    assert row["keep_ppm"] is not None and row["n_tokens"] is not None
-
-
 def test_merge_gap_intervals_shared_helper():
     """The extracted gap-merge used by both timeout sessionizers:
     adjacency at exactly the gap merges, one past it splits; counts
@@ -769,14 +704,14 @@ def test_watermark_jump_emits_stale_session_instead_of_crashing(
 
 
 def test_timer_at_watermark_equality_is_legal():
-    """Contract pin for the sessionizers' eager-close clamp (ADVICE
+    """Contract pin for the gap sessionizer's eager-close clamp (ADVICE
     r07): PySpark's setTimeoutTimestamp rejects only timestamps
     STRICTLY below the watermark, so the clamp must use `<` — at
     exact equality (end + gap == watermark) the timer stays legal and
     must stay armed, because a next-batch event at ts == end + gap
     passes the lagging late filter and extends the session under the
     gap<= merge rule.  If a future PySpark makes equality illegal,
-    this fails first and the clamps in streaming/stateful.py must
+    this fails first and the clamp in stateful._gap_sessions must
     revert to `<=`."""
     import pytest
     from pyspark.sql import Row

@@ -150,11 +150,15 @@ class Warehouse:
         frame without insert_date is stamped with paris_now().
         Creates the table if it does not exist.  Returns the rows
         written, counted by the write job (COPY's "rows loaded").
+        A table partitioned by ingest_epoch (RT bronze) is written only
+        through append_epoch.
         """
+        if self._parts(layer, name):
+            raise ValueError(
+                f"{name!r} is partitioned by ingest_epoch: write it "
+                f"with append_epoch")
         out, obs = _observe_rows(self._aligned(layer, name, df))
-        (out.write.mode("append")
-         .partitionBy(*self._parts(layer, name))
-         .parquet(self.path(layer, name)))
+        out.write.mode("append").parquet(self.path(layer, name))
         return obs.get["rows"]
 
     def _aligned(self, layer: str, name: str, df: DataFrame) -> DataFrame:

@@ -8,8 +8,7 @@ Replaces the reference's 2-minute cron + PUT/COPY/PURGE loop
   Structured Streaming *file source*;
 - `PATTERN='regex'` on COPY -> `pathGlobFilter`;
 - `PURGE=TRUE` exactly-once -> the streaming checkpoint (each file
-  processed exactly once across restarts), `cleanSource` optionally
-  archives consumed files;
+  processed exactly once across restarts);
 - the ExternalTaskSensor barrier (A24) disappears: the stream-static
   join with the static tables just works once they exist.
 
@@ -32,18 +31,15 @@ from tp_airflow_gtfs_snowflake_spark.sources.gtfs_rt import (
 
 
 def read_feed_stream(spark: SparkSession, landing_dir: str, *,
-                     path_glob: str = "*.json",
-                     max_files_per_trigger: int | None = None,
-                     clean_source: str | None = None) -> DataFrame:
-    """Stream of feed snapshots: one row per landed snapshot file."""
+                     max_files_per_trigger: int | None = None) -> DataFrame:
+    """Stream of feed snapshots: one row per landed `*.json` snapshot
+    file."""
     reader = (spark.readStream
               .format("text")
               .option("wholetext", "true")
-              .option("pathGlobFilter", path_glob))
+              .option("pathGlobFilter", "*.json"))
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if clean_source:
-        reader = reader.option("cleanSource", clean_source)
     return reader.load(landing_dir).withColumnRenamed("value", "feed_json")
 
 
@@ -99,19 +95,18 @@ def start_bronze_ingest(spark: SparkSession, landing_dir: str, wh: Warehouse,
     return writer.start()
 
 
-def batch_durations(query: StreamingQuery,
-                    data_batches_only: bool = True) -> list[float]:
-    """Measured micro-batch wall-clock seconds from the query's
-    progress history — the engine's SLO evidence against the
-    reference's cadence contract (one batch per 2-minute trigger,
-    gtfs_rt_minutely.py:262: batch duration must stay well under the
-    120 s trigger or the pipeline falls behind)."""
+def batch_durations(query: StreamingQuery) -> list[float]:
+    """Measured wall-clock seconds of the query's micro-batches that
+    read data, from its progress history — the engine's SLO evidence
+    against the reference's cadence contract (one batch per 2-minute
+    trigger, gtfs_rt_minutely.py:262: batch duration must stay well
+    under the 120 s trigger or the pipeline falls behind)."""
     import json as _json
 
     out = []
     for p in query.recentProgress:
         prog = _json.loads(p) if isinstance(p, str) else p
-        if data_batches_only and not prog.get("numInputRows", 0):
+        if not prog.get("numInputRows", 0):
             continue
         dur = prog.get("durationMs", {}).get("triggerExecution")
         if dur is not None:

@@ -1,6 +1,6 @@
 """Stateful / advanced streaming operators (SURVEY M5 beyond the
-basics): session windows, in-stream dedup, and a custom stateful
-operator via applyInPandasWithState.
+basics): session windows, in-stream dedup, a stream-stream join, and
+custom stateful operators via applyInPandasWithState.
 
 The reference never gets past permissive loads for late or duplicate
 feed data (README.md:137-138); these are the Structured-Streaming-
@@ -11,10 +11,16 @@ native treatments:
   dedup state bounded by the watermark horizon (a plain
   dropDuplicates on a stream grows state forever);
 - applyInPandasWithState holds per-key state across micro-batches for
-  logic no built-in aggregate expresses (here: per-vehicle odometer —
-  cumulative report count + path length from successive positions).
+  logic no built-in aggregate expresses: the per-vehicle odometer
+  (cumulative report count + path length from successive positions)
+  and one timer-driven gap sessionizer (EventTimeTimeout), keyed by
+  vehicle in seconds or by user in microseconds.
 
-Scale notes: all three shuffle on their key exactly once per
+Each operator has one implementation: applyInPandasWithState is
+Spark's keyed state update with event-time timeouts, and it runs
+without the protobuf package that transformWithState needs.
+
+Scale notes: each operator shuffles on its key exactly once per
 micro-batch; state lives in the executor state store (RocksDB-backed
 in production) and is bounded by watermark/timeout, so a 1000-executor
 cluster shards state by key range with no driver involvement.
@@ -178,9 +184,7 @@ def trip_position_attribution(feed_stream: DataFrame, *,
 def _merge_gap_intervals(intervals: list[list[int]],
                          gap: int) -> list[list[int]]:
     """Merge ``[start, end, count]`` intervals whose gap to the
-    previous merged interval is <= ``gap`` (all in one time unit).
-    Shared by the vehicle- and user-keyed timeout sessionizers so the
-    gap semantics cannot drift between them."""
+    previous merged interval is <= ``gap`` (all in one time unit)."""
     intervals = sorted(intervals, key=lambda iv: iv[0])
     merged: list[list[int]] = []
     for iv in intervals:
@@ -192,11 +196,86 @@ def _merge_gap_intervals(intervals: list[list[int]],
     return merged
 
 
-_TIMEOUT_SESSION_STATE = StructType([
-    StructField("start_epoch", LongType()),
-    StructField("end_epoch", LongType()),
+_GAP_SESSION_STATE = StructType([
+    StructField("start", LongType()),
+    StructField("end", LongType()),
     StructField("n", LongType()),
 ])
+
+
+def _gap_sessions(events: DataFrame, time_col: str,
+                  units_per_second: int, gap_seconds: int,
+                  watermark: str, schema: StructType) -> DataFrame:
+    """Timer-driven gap sessionization of ``events`` via
+    applyInPandasWithState with EventTimeTimeout.  Emits ``schema``'s
+    four columns: key, session start, session end, event count;
+    ``events`` carries the key column under the same name, integer
+    ``time_col`` in 1/units_per_second and the watermark column
+    ``ts``.  State per key is the open session, three longs."""
+    gap = gap_seconds * units_per_second
+    names = schema.fieldNames()
+
+    def emit(key_value, sessions) -> pd.DataFrame:
+        return pd.DataFrame([dict(zip(names, (key_value, s, e, c)))
+                             for s, e, c in sessions])
+
+    def fn(key_value: tuple, pdfs: Iterator[pd.DataFrame],
+           state: GroupState) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            session = state.get
+            state.remove()
+            yield emit(key_value[0], [session])
+            return
+        # Gap-aware merge (round-3 advice): the timer only fires for
+        # keys with NO input this batch, so events arriving in one
+        # batch but > gap apart (guaranteed during availableNow /
+        # backlog catch-up) must be split HERE, not folded into one
+        # carried session.  Treat the carried state as an interval,
+        # each event as a point interval, sort, and merge on the gap;
+        # every merged session except the last is provably closed by
+        # in-batch data and is emitted now, the last stays in state.
+        intervals: list[list[int]] = []
+        if state.exists:
+            intervals.append(list(state.get))
+        times: list[int] = []
+        for pdf in pdfs:
+            if len(pdf):
+                times.extend(int(x) for x in pdf[time_col])
+        intervals.extend([t, t, 1] for t in sorted(times))
+        merged = _merge_gap_intervals(intervals, gap)
+        if not merged:
+            return
+        *closed, (start, end, n) = merged
+        # Timers are millisecond-granular: round the expiry UP so it
+        # never fires a sub-millisecond fraction early.  A timer
+        # STRICTLY below the current watermark is ILLEGAL to register
+        # (the engine throws INVALID_TIMEOUT_TIMESTAMP — observed when
+        # a batch jumps the watermark far past a session close, e.g. a
+        # concurrent writer landing a sentinel in the same poll) and
+        # unnecessary: the watermark already proves the trailing
+        # session can never be extended, so emit it eagerly.  At exact
+        # equality the timer stays legal (setTimeoutTimestamp rejects
+        # only `<`, pinned by test_timer_at_watermark_equality_is_legal)
+        # and must stay armed — a next-batch event at end + gap passes
+        # the lagging late filter and extends the session under the
+        # gap<= merge rule.
+        expiry_ms = -(-(end + gap) * 1000 // units_per_second)
+        if expiry_ms < state.getCurrentWatermarkMs():
+            closed.append((start, end, n))
+            if state.exists:
+                state.remove()
+        else:
+            state.update((start, end, n))
+            state.setTimeoutTimestamp(expiry_ms)
+        if closed:
+            yield emit(key_value[0], closed)
+
+    return (events.withWatermark("ts", watermark)
+            .groupBy(names[0])
+            .applyInPandasWithState(
+                fn, schema, _GAP_SESSION_STATE, "append",
+                GroupStateTimeout.EventTimeTimeout))
+
 
 TIMEOUT_SESSION_SCHEMA = StructType([
     StructField("vehicle_id", StringType()),
@@ -211,7 +290,8 @@ def timed_out_sessions(feed_stream: DataFrame, *,
                        watermark: str = "5 seconds") -> DataFrame:
     """TIMER-driven sessionization: a session row is emitted exactly
     once, when the event-time timer fires (watermark passes
-    last_event + gap) — not re-emitted on every update.
+    last_event + gap) — not re-emitted on every update.  Sessions are
+    per vehicle, in epoch seconds.
 
     This is the GroupState timeout facility that the built-in
     session_window aggregation (sessionized_vehicle_activity) hides:
@@ -223,9 +303,6 @@ def timed_out_sessions(feed_stream: DataFrame, *,
     engine's watermark bookkeeping, not by data arrival for that key
     (an idle vehicle's session closes because OTHER traffic advances
     the watermark; a NoTimeout design would leak the key forever).
-    transformWithState timers (streaming/tws.py) are the Spark-4
-    successor of this shape; this form executes without the protobuf
-    runtime dependency.
 
     Known limit (shared by every eager-emission GroupState
     sessionizer): a session closed by an IN-BATCH gap is emitted
@@ -237,71 +314,10 @@ def timed_out_sessions(feed_stream: DataFrame, *,
     matters more than eager output, use the built-in session_window
     aggregation, which buffers until the watermark before emitting.
     """
-
-    def fn(key: tuple[str], pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            start, end, n = state.get
-            state.remove()
-            yield pd.DataFrame([{"vehicle_id": key[0],
-                                 "session_start": start,
-                                 "session_end": end,
-                                 "n_reports": n}])
-            return
-        # Gap-aware merge (round-3 advice): the timer only fires for
-        # keys with NO input this batch, so events arriving in one
-        # batch but > gap apart (guaranteed during availableNow /
-        # backlog catch-up) must be split HERE, not folded into one
-        # carried session.  Treat the carried state as an interval,
-        # each event as a point interval, sort, and merge on the gap;
-        # every merged session except the last is provably closed by
-        # in-batch data and is emitted now, the last stays in state.
-        intervals: list[list[int]] = []
-        if state.exists:
-            s0, e0, n0 = state.get
-            intervals.append([s0, e0, n0])
-        epochs: list[int] = []
-        for pdf in pdfs:
-            if len(pdf):
-                epochs.extend(int(x) for x in pdf["timestamp_epoch"])
-        intervals.extend([e, e, 1] for e in sorted(epochs))
-        merged = _merge_gap_intervals(intervals, gap_seconds)
-        if not merged:
-            return
-        *closed, (start, end, n) = merged
-        # A timer STRICTLY below the current watermark is ILLEGAL to
-        # register (the engine throws INVALID_TIMEOUT_TIMESTAMP) — and
-        # also unnecessary: the watermark already proves no event can
-        # extend the trailing session (later rows below the watermark
-        # are dropped by withWatermark), so emit it eagerly instead.
-        # Equality keeps the timer path: setTimeoutTimestamp rejects
-        # only `timestampMs < watermark` (pinned by
-        # test_timer_at_watermark_equality_is_legal), and an event at
-        # exactly end+gap — deliverable because the late filter lags a
-        # batch and merged by the gap<= rule — must still be able to
-        # extend the session rather than see it split early.
-        expiry_ms = (end + gap_seconds) * 1000
-        if expiry_ms < state.getCurrentWatermarkMs():
-            closed.append((start, end, n))
-            if state.exists:
-                state.remove()
-        else:
-            state.update((start, end, n))
-            # re-arm: expire when the watermark proves the gap elapsed
-            state.setTimeoutTimestamp(expiry_ms)
-        if closed:
-            yield pd.DataFrame(
-                [{"vehicle_id": key[0], "session_start": s,
-                  "session_end": e, "n_reports": c}
-                 for s, e, c in closed])
-
     pos = _positions(feed_stream).select(
         "vehicle_id", "timestamp_epoch", "ts")
-    return (pos.withWatermark("ts", watermark)
-            .groupBy("vehicle_id")
-            .applyInPandasWithState(
-                fn, TIMEOUT_SESSION_SCHEMA, _TIMEOUT_SESSION_STATE,
-                "append", GroupStateTimeout.EventTimeTimeout))
+    return _gap_sessions(pos, "timestamp_epoch", 1, gap_seconds,
+                         watermark, TIMEOUT_SESSION_SCHEMA)
 
 
 USER_SESSION_SCHEMA = StructType([
@@ -311,87 +327,26 @@ USER_SESSION_SCHEMA = StructType([
     StructField("n_events", LongType()),
 ])
 
-_USER_SESSION_STATE = StructType([
-    StructField("start_us", LongType()),
-    StructField("end_us", LongType()),
-    StructField("n", LongType()),
-])
-
 
 def timed_out_user_sessions(events_stream: DataFrame, *,
                             gap_seconds: int = 1800,
                             watermark: str = "1 second") -> DataFrame:
-    """The user-keyed twin of :func:`timed_out_sessions` over a
-    generic ``(user_id long, ts timestamp)`` event stream — timer-
-    driven gap sessionization via applyInPandasWithState with
-    EventTimeTimeout, microsecond precision (so its output is
-    comparable against the batch gaps-and-islands spec, b29).
+    """:func:`timed_out_sessions` keyed by user over a generic
+    ``(user_id long, ts timestamp)`` event stream, at microsecond
+    precision (so its output is comparable against the batch
+    gaps-and-islands spec, b29).
 
-    Same contract and the same known limit as the vehicle variant:
-    sessions closed by in-batch data are emitted eagerly and exactly
-    once; the trailing open session per key is emitted when the
-    watermark passes ``end + gap`` (which needs a later batch to
-    advance the watermark, then one more batch to run the timers).
-    When batches arrive in event-time order the emitted session set
-    equals the batch gaps-and-islands sessionization exactly.
+    Same contract and the same known limit: sessions closed by
+    in-batch data are emitted eagerly and exactly once; the trailing
+    open session per key is emitted when the watermark passes
+    ``end + gap`` (which needs a later batch to advance the watermark,
+    then one more batch to run the timers).  When batches arrive in
+    event-time order the emitted session set equals the batch
+    gaps-and-islands sessionization exactly.
     """
-    gap_us = gap_seconds * 1_000_000
-
-    def fn(key: tuple[int], pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            start, end, n = state.get
-            state.remove()
-            yield pd.DataFrame([{"user_id": key[0],
-                                 "session_start_us": start,
-                                 "session_end_us": end,
-                                 "n_events": n}])
-            return
-        intervals: list[list[int]] = []
-        if state.exists:
-            s0, e0, n0 = state.get
-            intervals.append([s0, e0, n0])
-        epochs: list[int] = []
-        for pdf in pdfs:
-            if len(pdf):
-                epochs.extend(int(x) for x in pdf["ts_us"])
-        intervals.extend([e, e, 1] for e in sorted(epochs))
-        merged = _merge_gap_intervals(intervals, gap_us)
-        if not merged:
-            return
-        *closed, (start, end, n) = merged
-        # timers are millisecond-granular; round the expiry UP so it
-        # never fires a microsecond-fraction early.  A timer STRICTLY
-        # below the current watermark is ILLEGAL to register (the
-        # engine throws INVALID_TIMEOUT_TIMESTAMP — observed when a
-        # batch jumps the watermark far past a session close, e.g. a
-        # concurrent writer landing a sentinel in the same poll) and
-        # unnecessary: the watermark already proves the trailing
-        # session can never be extended, so emit it eagerly.  At exact
-        # equality the timer stays legal (setTimeoutTimestamp rejects
-        # only `<`) and must stay armed — a next-batch event at
-        # ts == end+gap passes the lagging late filter and extends
-        # the session under the gap<= merge rule.
-        expiry_ms = -(-(end + gap_us) // 1000)
-        if expiry_ms < state.getCurrentWatermarkMs():
-            closed.append((start, end, n))
-            if state.exists:
-                state.remove()
-        else:
-            state.update((start, end, n))
-            state.setTimeoutTimestamp(expiry_ms)
-        if closed:
-            yield pd.DataFrame(
-                [{"user_id": key[0], "session_start_us": s,
-                  "session_end_us": e, "n_events": c}
-                 for s, e, c in closed])
-
     rows = events_stream.select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("ts"),
         F.unix_micros("ts").alias("ts_us"))
-    return (rows.withWatermark("ts", watermark)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                fn, USER_SESSION_SCHEMA, _USER_SESSION_STATE,
-                "append", GroupStateTimeout.EventTimeTimeout))
+    return _gap_sessions(rows, "ts_us", 1_000_000, gap_seconds,
+                         watermark, USER_SESSION_SCHEMA)
