@@ -14,6 +14,10 @@ Usage: python scripts/sf1_scale_timing.py [sf_dir] [-excludeprefix ...]
 --names-file limits the sweep to the newline-separated query names in
 FILE (the r11 back-half resume path: names not yet present in the r10
 sweep logs).
+
+The session is the engine's own (session.get_spark): SPARK_GRAFT_CPUS
+sets the core count and shuffle width, and the driver heap is sized
+from the host (SPARK_DRIVER_MEMORY overrides).
 """
 
 from __future__ import annotations
@@ -24,9 +28,8 @@ import traceback
 
 sys.path.insert(0, ".")
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entry
+from tp_airflow_gtfs_snowflake_spark.session import get_spark
 
 
 def main() -> int:
@@ -38,10 +41,7 @@ def main() -> int:
         only = set(open(args[i + 1]).read().split())
         args = args[:i] + args[i + 2:]
     excludes = [a[1:] for a in args if a.startswith("-")]
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "8g")
-             .getOrCreate())
+    spark = get_spark("sf1_scale_timing")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
     failures = []

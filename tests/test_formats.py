@@ -79,36 +79,6 @@ def test_merge_schema_across_evolving_parquet(spark, tmp_path):
     assert len(got[0].asDict()) == 4  # id, v, extra, batch
 
 
-def test_python_datasource_writer_two_phase_commit(spark, tmp_path):
-    """Custom DataSource WRITE path: per-partition jsonl part files
-    land atomically, and the driver-side commit writes a _MANIFEST
-    with the file list + row count (the export-dir contract of the
-    reference's export scripts)."""
-    import json
-    import os
-
-    from tp_airflow_gtfs_snowflake_spark.sources import py_datasource
-
-    py_datasource.register(spark)
-    out = str(tmp_path / "export")
-    df = spark.createDataFrame(
-        [(i, f"r{i}") for i in range(20)], "id long, v string") \
-        .repartition(3)
-    df.write.format("gtfs_rt_snapshots").option("path", out) \
-        .mode("append").save()
-
-    manifest = json.loads(open(os.path.join(out, "_MANIFEST")).read())
-    assert manifest["n_rows"] == 20
-    parts = sorted(f for f in os.listdir(out) if f.startswith("part-"))
-    assert parts == manifest["files"] and len(parts) == 3
-    rows = []
-    for fname in parts:
-        with open(os.path.join(out, fname)) as fh:
-            rows += [json.loads(l) for l in fh]
-    assert sorted(r["id"] for r in rows) == list(range(20))
-    assert not any(f.endswith(".tmp") for f in os.listdir(out))
-
-
 @pytest.mark.parametrize("mode,expect", [
     ("PERMISSIVE", 3), ("DROPMALFORMED", 2)])
 def test_csv_malformed_row_modes(spark, tmp_path, mode, expect):
@@ -143,122 +113,6 @@ def test_csv_failfast_aborts(spark, tmp_path):
           .csv(str(p)))
     with pytest.raises(Exception, match="FAILFAST|Malformed"):
         df.collect()
-
-
-def test_export_time_travel_and_vacuum(spark, tmp_path):
-    """Versioned manifests: each commit publishes _MANIFEST.v{N} (old
-    part files untouched), read_export resolves ONE manifest so reads
-    are snapshot-isolated and version=N time-travels; vacuum removes
-    only parts referenced exclusively by expired versions."""
-    import os
-
-    from tp_airflow_gtfs_snowflake_spark.sources import py_datasource as pd_
-
-    pd_.register(spark)
-    out = str(tmp_path / "export")
-    schema = "id long, v string"
-
-    def write(rows):
-        # overwrite = snapshot REPLACEMENT (each version stands alone;
-        # append-mode accumulation is covered separately below)
-        spark.createDataFrame(rows, schema).repartition(2) \
-            .write.format("gtfs_rt_snapshots").option("path", out) \
-            .mode("overwrite").save()
-
-    write([(i, f"a{i}") for i in range(5)])
-    write([(i, f"b{i}") for i in range(3)])
-    write([(i, f"c{i}") for i in range(7)])
-    assert pd_.latest_export_version(out) == 3
-
-    # latest read sees ONLY v3's files; time travel pins v1/v2
-    assert sorted(r["v"] for r in
-                  pd_.read_export(spark, out, schema).collect()) \
-        == sorted(f"c{i}" for i in range(7))
-    assert sorted(r["v"] for r in
-                  pd_.read_export(spark, out, schema, version=1)
-                  .collect()) == sorted(f"a{i}" for i in range(5))
-    assert pd_.load_export_manifest(out, 2)["n_rows"] == 3
-
-    # vacuum keeping 2 versions: v1's parts + manifest go, v2/v3 stay
-    acct = pd_.vacuum_export(out, keep_versions=2)
-    assert acct["removed_versions"] == [1]
-    assert acct["removed_files"] > 0
-    assert sorted(r["v"] for r in
-                  pd_.read_export(spark, out, schema, version=2)
-                  .collect()) == sorted(f"b{i}" for i in range(3))
-    with pytest.raises(FileNotFoundError):
-        pd_.load_export_manifest(out, 1)
-    # no stray tmp files; latest pointer still v3
-    assert not any(f.endswith(".tmp") for f in os.listdir(out))
-    assert pd_.load_export_manifest(out)["version"] == 3
-
-
-def test_export_manifest_back_compat_latest_pointer(spark, tmp_path):
-    """_MANIFEST (the latest pointer) still carries files + n_rows, so
-    pre-versioning consumers keep working."""
-    import json
-    import os
-
-    from tp_airflow_gtfs_snowflake_spark.sources import py_datasource as pd_
-
-    pd_.register(spark)
-    out = str(tmp_path / "export")
-    spark.createDataFrame([(1, "x")], "id long, v string") \
-        .write.format("gtfs_rt_snapshots").option("path", out) \
-        .mode("append").save()
-    m = json.loads(open(os.path.join(out, "_MANIFEST")).read())
-    assert m["n_rows"] == 1 and m["files"] and m["version"] == 1
-
-
-def test_export_append_mode_accumulates(spark, tmp_path):
-    """mode('append') must ADD to the previous snapshot's visibility
-    (manifest = prior files + new parts), not silently replace it."""
-    from tp_airflow_gtfs_snowflake_spark.sources import py_datasource as pd_
-
-    pd_.register(spark)
-    out = str(tmp_path / "export")
-    schema = "id long, v string"
-
-    def write(rows, mode):
-        spark.createDataFrame(rows, schema) \
-            .write.format("gtfs_rt_snapshots").option("path", out) \
-            .mode(mode).save()
-
-    write([(1, "a")], "overwrite")
-    write([(2, "b")], "append")
-    write([(3, "c")], "overwrite")
-    got2 = sorted(r["v"] for r in
-                  pd_.read_export(spark, out, schema, version=2)
-                  .collect())
-    assert got2 == ["a", "b"]            # append kept v1's rows
-    got3 = sorted(r["v"] for r in
-                  pd_.read_export(spark, out, schema).collect())
-    assert got3 == ["c"]                 # overwrite replaced them
-    assert pd_.load_export_manifest(out, 2)["n_rows"] == 2
-
-
-def test_export_abort_tolerates_none_messages(spark, tmp_path):
-    """Spark passes None commit-message slots for failed tasks; abort
-    must skip them and still clean the committed parts."""
-    import os
-
-    from tp_airflow_gtfs_snowflake_spark.sources.py_datasource import (
-        SnapshotExportWriter, _ExportCommit)
-
-    out = str(tmp_path / "export")
-    os.makedirs(out)
-    part = "part-00000-deadbeef.jsonl"
-    open(os.path.join(out, part), "w").write("{}\n")
-    w = SnapshotExportWriter({"path": out})
-    w.abort([_ExportCommit(part, 1), None])
-    assert not os.path.exists(os.path.join(out, part))
-
-
-def test_vacuum_rejects_zero_keep_versions(spark, tmp_path):
-    from tp_airflow_gtfs_snowflake_spark.sources import py_datasource as pd_
-
-    with pytest.raises(ValueError):
-        pd_.vacuum_export(str(tmp_path), keep_versions=0)
 
 
 def test_stream_offsets_survive_deletion_of_emitted_files(
@@ -346,49 +200,3 @@ def test_stream_offset_never_regresses_below_committed(spark, tmp_path):
     # same with an EMPTY dir
     os.remove(land / "vp_202401010001.json")
     assert r.latestOffset()["last"] == committed["last"]
-
-
-def test_export_commit_collision_retries_next_version(
-        spark, tmp_path, monkeypatch):
-    """ADVICE r04: two concurrent jobs committing to the same export
-    dir must not both allocate _MANIFEST.v{N} (the loser's snapshot —
-    and in append mode its rows — silently vanished from the lineage).
-    The exclusive-link claim makes the loser retry with N+1 and
-    re-merge the winner's manifest."""
-    import json
-    import os
-
-    from tp_airflow_gtfs_snowflake_spark.sources import py_datasource as pd_
-    from tp_airflow_gtfs_snowflake_spark.sources.py_datasource import (
-        SnapshotExportWriter, _ExportCommit)
-
-    out = str(tmp_path / "export")
-    os.makedirs(out)
-    # v1: the base snapshot
-    w1 = SnapshotExportWriter({"path": out})
-    open(os.path.join(out, "part-a.jsonl"), "w").write("{}\n")
-    w1.commit([_ExportCommit("part-a.jsonl", 1)])
-    assert pd_.latest_export_version(out) == 1
-
-    # appender B reads latest=1, then a concurrent writer lands v2
-    # before B links its manifest.  Simulate the race by pinning B's
-    # view of latest_export_version to the stale value.
-    open(os.path.join(out, "part-c.jsonl"), "w").write("{}\n")
-    json.dump({"version": 2, "files": ["part-a.jsonl", "part-c.jsonl"],
-               "n_rows": 2},
-              open(os.path.join(out, "_MANIFEST.v2"), "w"))
-    monkeypatch.setattr(pd_, "latest_export_version", lambda p: 1)
-
-    open(os.path.join(out, "part-b.jsonl"), "w").write("{}\n{}\n")
-    wb = SnapshotExportWriter({"path": out}, overwrite=False)
-    wb.commit([_ExportCommit("part-b.jsonl", 2)])
-
-    monkeypatch.undo()
-    assert pd_.latest_export_version(out) == 3
-    m3 = pd_.load_export_manifest(out, 3)
-    # the loser re-merged the winner's v2 file list: nothing lost
-    assert m3["files"] == ["part-a.jsonl", "part-b.jsonl", "part-c.jsonl"]
-    assert m3["n_rows"] == 4
-    # the concurrent winner's snapshot is untouched
-    assert pd_.load_export_manifest(out, 2)["files"] == [
-        "part-a.jsonl", "part-c.jsonl"]

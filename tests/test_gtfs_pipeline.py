@@ -12,6 +12,7 @@ import re
 import sys
 import threading
 import time
+import zipfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,7 +23,8 @@ from tp_airflow_gtfs_snowflake_spark.silver import refresh_silver
 from tp_airflow_gtfs_snowflake_spark.sources.gtfs_rt import (
     flatten_trip_updates, flatten_vehicle_positions, parse_feed_json,
 )
-from tp_airflow_gtfs_snowflake_spark.sources.gtfs_static import ingest_static
+from tp_airflow_gtfs_snowflake_spark.sources.gtfs_static import (
+    check_static_files, download_static_zip, ingest_static, unzip_static)
 from tests import fixtures_gtfs
 
 
@@ -182,6 +184,32 @@ def test_second_static_ingest_returns_rows_appended(spark, tmp_path,
     assert ingest_static(spark, gtfs_dir, wh) == first
     assert {t: wh.table("bronze", t).count() for t in first} == \
         {t: 2 * n for t, n in first.items()}
+
+
+def test_static_fetch_unzip_ingest_and_check(spark, tmp_path, gtfs_dir):
+    """The static DAG's first steps end to end, without network: fetch
+    the archive (A1, over a file:// URL), unzip it (A2) and ingest it;
+    the smoke check (A12) names a file the archive lacks."""
+    archive = tmp_path / "src" / "gtfs.zip"
+    archive.parent.mkdir()
+    with zipfile.ZipFile(archive, "w") as z:
+        for name in sorted(os.listdir(gtfs_dir)):
+            z.write(os.path.join(gtfs_dir, name), name)
+    fetched = download_static_zip(archive.as_uri(),
+                                  str(tmp_path / "dl" / "gtfs.zip"))
+    data_dir = tmp_path / "data"
+    assert unzip_static(fetched, str(data_dir)) == sorted(
+        os.listdir(gtfs_dir))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    assert ingest_static(spark, str(data_dir), wh) == {
+        "routes_static": fixtures_gtfs.N_ROUTES,
+        "trips_static": fixtures_gtfs.N_TRIPS,
+        "stops_static": fixtures_gtfs.N_STOPS,
+        "stop_times_static": (fixtures_gtfs.N_TRIPS
+                              * fixtures_gtfs.STOPS_PER_TRIP)}
+    os.remove(data_dir / "stops.txt")
+    with pytest.raises(FileNotFoundError, match="stops.txt"):
+        check_static_files(str(data_dir))
 
 
 def test_static_ingest_nulls_a_malformed_number(spark, tmp_path, gtfs_dir):

@@ -106,22 +106,6 @@ def test_token_shingles_short_text_empty(spark):
     assert rows[1]["s"] == ["a b c"]
 
 
-def test_simhash_signature_forms_agree(spark):
-    """The per-row expression form and the explode+groupBy form must
-    produce identical signatures (same math, different physical shape)."""
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "pack my box with five dozen liquor jugs today")],
-        "doc_id long, text string")
-    expr_form = {r["doc_id"]: r["sig"] for r in df.select(
-        "doc_id", D.simhash64(F.col("text"), 2,
-                              hash_fn=D.portable_hash64).alias("sig")).collect()}
-    df_form = {r["doc_id"]: r["sig"] for r in D.simhash_signatures(
-        df, "doc_id", "text", shingle_n=2,
-        hash_fn=D.portable_hash64).collect()}
-    assert expr_form == df_form
-
-
 def test_simhash_multitable_finds_prefix_breaking_pair(spark):
     """Full-recall regression for the multi-table block LSH: docs 0/1
     ('...mu' vs '...nu') have Hamming distance 6 with differing bits in
@@ -365,39 +349,6 @@ def test_sample_frames_counts_and_slices(spark, payload_df):
 
 
 # --- skew operators ---------------------------------------------------
-
-def test_salted_join_matches_plain_join(spark):
-    from tp_airflow_gtfs_snowflake_spark.operators.skew import salted_join
-    # hot key: 90% of left rows share k=1
-    left = spark.createDataFrame(
-        [(1 if i % 10 else 2, i) for i in range(1000)], "k long, v long")
-    right = spark.createDataFrame([(1, "hot"), (2, "cold"), (3, "none")],
-                                  "k long, name string")
-    plain = left.join(right, "k").select("k", "v", "name")
-    salted = salted_join(left, right, on=["k"], salt_buckets=4) \
-        .select("k", "v", "name")
-    assert sorted(map(tuple, plain.collect())) == \
-        sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_left_outer(spark):
-    from tp_airflow_gtfs_snowflake_spark.operators.skew import salted_join
-    left = spark.createDataFrame([(1, 10), (9, 90)], "k long, v long")
-    right = spark.createDataFrame([(1, "a")], "k long, name string")
-    out = {tuple(r) for r in
-           salted_join(left, right, on=["k"], how="left",
-                       salt_buckets=3).collect()}
-    assert out == {(1, 10, "a"), (9, 90, None)}
-
-
-def test_salted_join_rejects_right_preserving_joins(spark):
-    from tp_airflow_gtfs_snowflake_spark.operators.skew import salted_join
-    left = spark.createDataFrame([(1, 10)], "k long, v long")
-    right = spark.createDataFrame([(1, "a"), (2, "b")], "k long, name string")
-    for how in ("right", "right_outer", "full", "full_outer", "outer"):
-        with pytest.raises(ValueError, match="left-preserving"):
-            salted_join(left, right, on=["k"], how=how)
-
 
 def test_salted_count_distinct_exact(spark):
     from tp_airflow_gtfs_snowflake_spark.operators.skew import (
@@ -658,11 +609,10 @@ def test_pq_encode_is_narrow(spark):
     from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import _t
     emb = _t(spark, SF_ORACLE, "embeddings")
     books = SIM.pq_codebooks(emb, m=4, k=16)
-    for impl in ("arrow", "native"):
-        plan = SIM.pq_encode(emb, books, impl=impl)._jdf.queryExecution() \
-            .executedPlan().toString()
-        for bad in ("Exchange", "Join", "Window"):
-            assert bad not in plan, (impl, plan)
+    plan = SIM.pq_encode(emb, books)._jdf.queryExecution() \
+        .executedPlan().toString()
+    for bad in ("Exchange", "Join", "Window"):
+        assert bad not in plan, plan
 
 
 def test_cell_blocked_neardup_sub_blocks_invariant(spark):
@@ -863,44 +813,6 @@ def test_prefix_filter_prunes_candidates(spark):
         & (F.col("a.doc_id") < F.col("b.doc_id")))
         .select("a.doc_id", "b.doc_id").distinct().count())
     assert pref_pairs < naive_pairs
-
-
-class TestHeavyHitters:
-    def test_guaranteed_recall_and_lower_bound(self, spark):
-        """Any item with true count > n/(k+1) must appear in the merged
-        summary, and every estimate must be a lower bound within
-        n/(k+1) of the true count."""
-        from tp_airflow_gtfs_snowflake_spark.operators.heavy_hitters import (
-            misra_gries_partials)
-        # skewed stream: item 'h0' dominates, long tail of singletons
-        rows = ([("h0",)] * 500 + [("h1",)] * 200
-                + [(f"t{i}",) for i in range(300)])
-        df = spark.createDataFrame(rows, "tok string").repartition(8)
-        k = 16
-        n = len(rows)
-        merged = {r["item"]: r["est_count"]
-                  for r in misra_gries_partials(df, "tok", k=k)
-                  .groupBy("item")
-                  .agg(__import__("pyspark.sql.functions",
-                                  fromlist=["sum"]).sum("mg_count")
-                       .alias("est_count")).collect()}
-        true = {"h0": 500, "h1": 200}
-        bound = n / (k + 1)
-        for item, tc in true.items():
-            if tc > bound:
-                assert item in merged, f"{item} (count {tc}) missing"
-            if item in merged:
-                assert merged[item] <= tc
-                assert tc - merged[item] <= bound
-
-    def test_summary_size_bounded(self, spark):
-        from tp_airflow_gtfs_snowflake_spark.operators.heavy_hitters import (
-            misra_gries_partials)
-        rows = [(f"x{i % 97}",) for i in range(2000)]
-        df = spark.createDataFrame(rows, "tok string").repartition(4)
-        k = 8
-        # <= k surviving counters per partition summary
-        assert misra_gries_partials(df, "tok", k=k).count() <= 4 * k
 
 
 def test_minhash_bipartite_finds_cross_pair_only(spark):
@@ -1119,23 +1031,6 @@ class TestKcorePeel:
 
 # --- round-4 review-fix regressions ----------------------------------
 
-def test_dedup_increment_empty_batch_keeps_state(spark):
-    from tp_airflow_gtfs_snowflake_spark.operators.dedup import (
-        dedup_increment, dedup_with_lookback)
-    b1 = spark.createDataFrame([(1, 10)], "key long, day long")
-    empty = spark.createDataFrame([], "key long, day long")
-    b3 = spark.createDataFrame([(1, 12)], "key long, day long")
-    _, st = dedup_increment(b1, None, lookback_days=7)
-    _, st = dedup_increment(empty, st, lookback_days=7)
-    assert st.count() == 1, "empty slice wiped the carried state"
-    kept, _ = dedup_increment(b3, st, lookback_days=7)
-    whole = dedup_with_lookback(
-        spark.createDataFrame([(1, 10), (1, 12)], "key long, day long"),
-        key_col="key", day_col="day", lookback_days=7)
-    assert kept.count() == 0  # day 12 is within day 10's lookback
-    assert whole.filter("day = 12").count() == 0
-
-
 def test_simhash_single_table_radius_zero(spark):
     """n_tables=1 (the radius=0 default) must work: the single block
     spans all 64 bits and lit(2^64-1) would overflow long."""
@@ -1199,8 +1094,9 @@ def test_brute_force_topk_ignores_zero_norm_vectors(spark):
 
 
 def test_pq_encode_impls_agree_on_non_dense_codebook(spark):
-    """Both encode impls emit positions in the id-SORTED codebook, so
-    gapped/non-zero-based codeword ids cannot diverge them."""
+    """The encoder emits positions in the id-SORTED codebook (the
+    order pq_topk's lookup table uses), so gapped/non-zero-based
+    codeword ids cannot diverge encode and scoring."""
     from tp_airflow_gtfs_snowflake_spark.operators.similarity import (
         pq_encode)
     books = [[(5, [1.0, 1.0]), (9, [0.0, 0.0])],
@@ -1208,11 +1104,9 @@ def test_pq_encode_impls_agree_on_non_dense_codebook(spark):
     emb = spark.createDataFrame(
         [(1, [1.0, 1.0, 0.4, 0.4]), (2, [0.1, 0.1, 1.9, 2.1])],
         "vec_id long, embedding array<double>")
-    nat = {r["vec_id"]: list(r["codes"]) for r in
-           pq_encode(emb, books, impl="native").collect()}
-    arr = {r["vec_id"]: list(r["codes"]) for r in
-           pq_encode(emb, books, impl="arrow").collect()}
-    assert nat == arr == {1: [0, 0], 2: [1, 1]}
+    got = {r["vec_id"]: list(r["codes"]) for r in
+           pq_encode(emb, books).collect()}
+    assert got == {1: [0, 0], 2: [1, 1]}
 
 
 def test_containment_prefix_filter_equals_naive(spark):
@@ -1255,3 +1149,36 @@ def test_containment_prefix_filter_catches_exact_inclusion(spark):
                docs, "doc_id", "text", n=3, tau_ppm=800_000).collect()}
     assert (1, 2) in got
     assert got[(1, 2)] == 4  # all 4 trigrams of the inner doc
+
+
+# --- keyed merge --------------------------------------------------------
+
+def test_merge_upsert_returns_rows_the_table_holds(spark, tmp_path):
+    """merge_upsert's return value is the rows its write put in the
+    table: the whole table on a first build and on a non-partitioned
+    upsert, the touched partition's rows on a partitioned one."""
+    from tp_airflow_gtfs_snowflake_spark.operators.incremental import (
+        merge_upsert)
+    schema = "id long, v long, ingest long, day long"
+    base = spark.createDataFrame(
+        [(1, 10, 1, 1), (2, 20, 1, 1), (3, 30, 1, 2)], schema)
+    # key 1 newer, key 2 stale (must lose), key 4 new; all in day 1
+    upd = spark.createDataFrame(
+        [(1, 11, 5, 1), (2, 0, 0, 1), (4, 40, 5, 1)], schema)
+
+    flat = str(tmp_path / "flat")
+    assert merge_upsert(spark, base, flat, key_cols=["id"],
+                        order_col="ingest") == 3
+    assert spark.read.parquet(flat).count() == 3
+    assert merge_upsert(spark, upd, flat, key_cols=["id"],
+                        order_col="ingest") == 4
+    assert spark.read.parquet(flat).count() == 4
+
+    parted = str(tmp_path / "parted")
+    assert merge_upsert(spark, base, parted, key_cols=["id"],
+                        order_col="ingest", partition_col="day") == 3
+    assert merge_upsert(spark, upd, parted, key_cols=["id"],
+                        order_col="ingest", partition_col="day") == 3
+    table = spark.read.parquet(parted)
+    assert table.filter("day = 1").count() == 3
+    assert table.count() == 4

@@ -248,8 +248,8 @@ def test_runtime_bloom_filter_injects_on_shuffle_join(spark):
 def test_aqe_splits_skewed_join_partitions(spark):
     # One hot key (90% of rows) would pin a single reducer for hours at
     # 100 TB.  With AQE skew handling on (session default), the final
-    # adaptive plan must mark the join skew-split — the runtime remedy
-    # that complements operators/skew.salted_join's write-side one.
+    # adaptive plan must mark the join skew-split — the engine's one
+    # remedy for skewed joins.
     saved = {k: spark.conf.get(k, None) for k in (
         "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor",

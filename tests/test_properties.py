@@ -243,12 +243,11 @@ def test_pq_m1_corpus_codebook_is_identity(spark, vecs):
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     books = SIM.pq_codebooks(df, m=1, k=len(rows))
-    for impl in ("arrow", "native"):
-        got = {r["vec_id"]: r["codes"][0] for r in
-               SIM.pq_encode(df, books, impl=impl).collect()}
-        for i, v in rows:
-            # own id unless an earlier exact duplicate claims the code
-            assert got[i] <= i
+    got = {r["vec_id"]: r["codes"][0] for r in
+           SIM.pq_encode(df, books).collect()}
+    for i, v in rows:
+        # own id unless an earlier exact duplicate claims the code
+        assert got[i] <= i
 
 
 @settings(**SETTINGS)
@@ -272,56 +271,6 @@ def test_prefix_filter_jaccard_complete_on_random_corpora(spark, corpora):
                 for r in prefix_filtered_jaccard_pairs(
                     df, "doc_id", "text", n=2, threshold=t).collect()}
         assert naive == pref
-
-
-@settings(**SETTINGS)
-@given(st.lists(st.tuples(st.integers(1, 4), st.integers(0, 500)),
-                min_size=1, max_size=40),
-       st.lists(st.integers(0, 500), min_size=2, max_size=2))
-def test_incremental_sessionization_any_split(spark, rows, cuts):
-    """Slice-by-slice sessionization with carried state equals the
-    whole-history result for ARBITRARY (user, ts) data and ARBITRARY
-    time-ordered split points — including empty slices and events
-    landing exactly on a gap boundary."""
-    from tp_airflow_gtfs_snowflake_spark.operators import sessions
-    gap = 50
-    lo, hi = min(cuts), max(cuts)
-    ev = spark.createDataFrame(rows, "user long, ts long")
-    whole = sorted(tuple(r) for r in
-                   sessions.sessionize(ev, gap_seconds=gap).collect())
-    slices = [ev.filter(F.col("ts") <= lo),
-              ev.filter((F.col("ts") > lo) & (F.col("ts") <= hi)),
-              ev.filter(F.col("ts") > hi)]
-    state, got = None, []
-    for s in slices:
-        closed, state = sessions.sessionize_increment(
-            s, state, gap_seconds=gap)
-        state = state.localCheckpoint(eager=True)
-        got.extend(tuple(r) for r in closed.collect())
-    got.extend(tuple(r) for r in sessions.finalize(state).collect())
-    assert sorted(got) == whole
-
-
-@settings(**SETTINGS)
-@given(st.lists(st.tuples(st.integers(1, 3), st.integers(0, 60)),
-                min_size=1, max_size=40, unique=True),
-       st.integers(0, 60))
-def test_incremental_lookback_dedup_any_split(spark, rows, cut):
-    from tp_airflow_gtfs_snowflake_spark.operators.dedup import (
-        dedup_increment, dedup_with_lookback)
-    look = 7
-    df = spark.createDataFrame(rows, "key long, day long").distinct()
-    whole = sorted((r["key"], r["day"]) for r in
-                   dedup_with_lookback(df, lookback_days=look).collect())
-    s1, s2 = (df.filter(F.col("day") <= cut),
-              df.filter(F.col("day") > cut))
-    kept = []
-    state = None
-    for s in (s1, s2):
-        k, state = dedup_increment(s, state, lookback_days=look)
-        state = state.localCheckpoint(eager=True)
-        kept.extend((r["key"], r["day"]) for r in k.collect())
-    assert sorted(kept) == whole
 
 
 @settings(**SETTINGS)

@@ -329,58 +329,19 @@ def minhash_near_duplicates(df: DataFrame, id_col: str, text_col: str, *,
             .select("d1", "d2", "jaccard"))
 
 
-def simhash64(text: Column, shingle_n: int = 2, n_bits: int = 64,
-              hash_fn: HashFn = F.xxhash64) -> Column:
-    """n_bits-wide SimHash of a text column, fully native.
-
-    Each shingle votes +1/-1 on each bit position according to its
-    64-bit hash; the signature sets bit k when the vote sum is
-    positive.  Built with transform/aggregate over the shingle array —
-    no UDF, no shuffle (per-row expression).
-    """
-    # F.shiftright/F.shiftleft only take Python-int shift amounts; the
-    # shift amount here is the lambda-bound bit index (a Column), so go
-    # through the SQL functions, which accept column arguments.
-    def _shr(c: Column, k: Column) -> Column:
-        return F.call_function("shiftright", c, k)
-
-    def _shl(c: Column, k: Column) -> Column:
-        return F.call_function("shiftleft", c, k)
-
-    # Hash each shingle exactly once, THEN fan out to per-bit votes —
-    # hashing inside the per-bit lambda would recompute the hash
-    # n_bits times per shingle (md5 64x per shingle is minutes at
-    # corpus scale; this form is pure bit arithmetic per vote).
-    hashed = F.transform(token_shingles(text, shingle_n), hash_fn)
-    votes = F.aggregate(
-        hashed,
-        F.expr(f"array_repeat(0L, {n_bits})"),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bits - 1)),
-                lambda k: _shr(h, k).bitwiseAND(F.lit(1)) * 2 - 1),
-            lambda a, v: a + v),
-    )
-    bits = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bits - 1)),
-        lambda k: F.when(F.element_at(votes, k + 1) > 0,
-                         _shl(F.lit(1).cast("long"), k)).otherwise(F.lit(0).cast("long")))
-    return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, x: acc.bitwiseOR(x))
-
-
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str, *,
                        shingle_n: int = 2, n_bits: int = 64,
                        hash_fn: HashFn = F.xxhash64) -> DataFrame:
     """(doc_id, sig) SimHash signatures via explode + groupBy.
 
-    Same math as simhash64() but a different physical shape: one row
-    per (doc, shingle), one hash per shingle, then n_bits SUM columns
-    in a single hash aggregate — all whole-stage codegen.  The
-    higher-order-function form (simhash64) evaluates interpreted array
-    lambdas per shingle and is ~100x slower on a real corpus; this is
-    the shape to use at scale.  Docs with zero shingles (< shingle_n
-    tokens) produce no row here (vs an all-zero signature there).
+    Each shingle votes +1/-1 on each bit position according to its
+    64-bit hash; the signature sets bit k when the vote sum is
+    positive.  One row per (doc, shingle), one hash per shingle, then
+    n_bits SUM columns in a single hash aggregate — all whole-stage
+    codegen (a per-row higher-order-function fold over the shingle
+    array evaluates interpreted lambdas and is ~100x slower on a real
+    corpus).  Docs with zero shingles (< shingle_n tokens) produce no
+    row.
     """
     sh = _shingle_rows(df, id_col, text_col, shingle_n)
     h = sh.select("doc_id", hash_fn(F.col("sh")).alias("h"))
@@ -664,7 +625,7 @@ def minhash_bipartite_pairs(df_a: DataFrame, df_b: DataFrame,
 
 
 # ---------------------------------------------------------------------
-# Windowed (lookback) dedup — batch spec + incremental twin.
+# Windowed (lookback) dedup.
 # ---------------------------------------------------------------------
 
 def dedup_with_lookback(df: DataFrame, *, key_col: str = "key",
@@ -677,62 +638,14 @@ def dedup_with_lookback(df: DataFrame, *, key_col: str = "key",
     (exact_dedup) lacks: content may legitimately reappear after the
     window (refreshed crawls, re-sent telemetry).
 
-    One per-key window (lag) — occurrence spacing alone decides, so
-    the rule is streaming-friendly: dedup_increment carries only
-    (key, last_day) state and provably matches this batch spec."""
+    One per-key window (lag): occurrence spacing alone decides.  c88
+    runs it."""
     from pyspark.sql import Window as W
     w = W.partitionBy(key_col).orderBy(day_col)
     return (df.withColumn("_prev", F.lag(day_col).over(w))
             .filter(F.col("_prev").isNull()
                     | (F.col(day_col) - F.col("_prev") > lookback_days))
             .drop("_prev"))
-
-
-def dedup_increment(batch: DataFrame, state: DataFrame | None, *,
-                    key_col: str = "key", day_col: str = "day",
-                    lookback_days: int) -> tuple[DataFrame, DataFrame]:
-    """Incremental twin of :func:`dedup_with_lookback` for slices
-    arriving in day order (the operators/sessions.py ingest
-    contract).  Returns ``(kept_rows, new_state)``.
-
-    State is one ``(key, last_day)`` row per recently-seen key —
-    bounded by distinct keys in the lookback horizon, never history
-    — pruned each batch below the slice's frontier minus the window.
-    Within-batch spacing uses the same lag rule; the carried state
-    supplies the cross-batch previous occurrence."""
-    from pyspark.sql import Window as W
-    spark = batch.sparkSession
-    if state is None:
-        # derive the key type from the batch — a hardcoded `long`
-        # breaks string-keyed datasets on their first batch
-        kt = batch.schema[key_col].dataType.simpleString()
-        state = spark.createDataFrame(
-            [], f"{key_col} {kt}, last_day long")
-    w = W.partitionBy(key_col).orderBy(day_col)
-    prev_in = state.select(key_col, F.col("last_day").alias("_state_day"))
-    flagged = (batch
-               .withColumn("_prev_b", F.lag(day_col).over(w))
-               .join(prev_in, key_col, "left")
-               .withColumn("_prev", F.coalesce("_prev_b", "_state_day")))
-    kept = (flagged.filter(
-        F.col("_prev").isNull()
-        | (F.col(day_col) - F.col("_prev") > lookback_days))
-        .drop("_prev_b", "_state_day", "_prev"))
-    frontier = batch.agg(F.max(day_col).alias("_mx"))
-    new_last = (batch.groupBy(key_col)
-                .agg(F.max(day_col).alias("last_day"))
-                .unionByName(state)
-                .groupBy(key_col).agg(F.max("last_day").alias("last_day")))
-    # an EMPTY batch has a NULL frontier; `last_day >= NULL - l`
-    # evaluates NULL and would silently wipe the whole carried state
-    # (re-admitting duplicates after any quiet slice) — keep state
-    # unchanged instead.
-    new_state = (new_last.crossJoin(F.broadcast(frontier))
-                 .filter(F.col("_mx").isNull()
-                         | (F.col("last_day")
-                            >= F.col("_mx") - lookback_days))
-                 .drop("_mx"))
-    return kept, new_state
 
 
 def duplicated_spans(df: DataFrame, id_col: str, text_col: str, *,

@@ -30,7 +30,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
+from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse, _observe_rows
 
 EPOCH_FLOOR = dt.datetime(1900, 1, 1)  # '1900-01-01'::TIMESTAMP_NTZ
 
@@ -106,7 +106,8 @@ def merge_upsert(
     NOT atomic across concurrent writers (parquet has no transaction
     log); single-writer-per-table is the operating contract, same as
     the reference's serialized loader DAGs.  Returns the number of
-    rows written.
+    rows written (with `partition_col`, the rows of the touched
+    partitions), counted by the write job itself.
     """
     try:
         existing = spark.read.parquet(table_path)
@@ -126,11 +127,10 @@ def merge_upsert(
     combined = updates if first_build \
         else existing.unionByName(updates)
     payload = [c for c in combined.columns if c not in key_cols]
-    merged = (combined.groupBy(*key_cols)
-              .agg(F.max_by(F.struct(*payload), F.col(order_col))
-                   .alias("_p"))
-              .select(*key_cols, "_p.*"))
-    n = merged.count()
+    merged, obs = _observe_rows(
+        combined.groupBy(*key_cols)
+        .agg(F.max_by(F.struct(*payload), F.col(order_col)).alias("_p"))
+        .select(*key_cols, "_p.*"))
 
     writer = merged.write
     if partition_col:
@@ -140,7 +140,7 @@ def merge_upsert(
     else:
         writer = writer.mode("overwrite")
     writer.parquet(table_path)
-    return n
+    return obs.get["rows"]
 
 
 def retraction_apply_batch(

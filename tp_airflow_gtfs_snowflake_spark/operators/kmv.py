@@ -26,8 +26,8 @@ value-checkable, not merely bounded.
 Scale design (100 TB):
 - Partial sketches build per input partition inside one Arrow-batched
   mapInPandas pass (<= k rows emitted per group per partition) — the
-  exact mergeable-summaries shape of operators/heavy_hitters.py.  The
-  only exchange moves k-bounded partials, never the distinct values.
+  mergeable-summaries shape (Agarwal et al., PODS 2012).  The only
+  exchange moves k-bounded partials, never the distinct values.
 - Merging partials = array_distinct + sort + slice(k) in ONE hash
   aggregation; intersection of two sketches is array math on two
   k-arrays (a broadcastable handful of rows per group).

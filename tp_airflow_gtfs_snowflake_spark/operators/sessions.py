@@ -1,35 +1,17 @@
-"""Batch-incremental sessionization with carried open-session state.
+"""Batch gaps-and-islands sessionization.
 
-The batch mirror of streaming/stateful.py's timer-driven sessions:
-a daily/hourly pipeline processes event slices as they land, carrying
-a compact ``(user, start, end, n)`` open-session table between runs
-instead of re-sessionizing the whole history (b29 sessionizes one
-slice from scratch; at 100 TB re-reading all history every day is the
-difference between an incremental job and an O(history) one — the
-same motivation as operators/incremental.py's rollup refresh).
-
-Contract: slices arrive in event-time order (slice N's events all at
-or after slice N-1's — the shape a date-partitioned ingest gives);
-late data belongs to the streaming path or a partition reprocess.
-
-Semantics match single-pass gaps-and-islands exactly: a session
-breaks where the gap between consecutive events exceeds
-``gap_seconds``; a session is CLOSED only when a later event of the
-same user proves the gap (or the caller finalizes at end of input).
-tests/test_sessions.py proves slice-by-slice == whole-history.
-
-Scale design: per slice, ONE per-user shuffle sessionizes the new
-events (window lag + cumsum); the state table joins on the user key
-(broadcast when small, shuffle join otherwise) and stays one row per
-open session — bounded by active users, not history.
+A session breaks where the gap between a user's consecutive events
+exceeds ``gap_seconds``.  One per-user shuffle does the work (window
+lag, running sum of break flags, one aggregate per session); the
+registry's batch session query (b115) runs it.  The incremental sessionizer
+is streaming/stateful.py's GroupState gap sessionizer (b136), which
+closes a session when the event-time watermark passes its gap.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-
-STATE_COLS = ("user", "start_epoch", "end_epoch", "n")
 
 
 def sessionize(events: DataFrame, *, user_col: str = "user",
@@ -49,83 +31,3 @@ def sessionize(events: DataFrame, *, user_col: str = "user",
                  F.max("ts").alias("end_epoch"),
                  F.count("*").alias("n"))
             .drop("sid"))
-
-
-def sessionize_increment(events: DataFrame, open_state: DataFrame | None,
-                         *, user_col: str = "user", ts_col: str = "ts",
-                         gap_seconds: int) -> tuple[DataFrame, DataFrame]:
-    """Process one slice given the open sessions carried from prior
-    slices.  Returns ``(closed_sessions, new_open_state)``; both use
-    STATE_COLS.  Call :func:`finalize` on the last state to flush."""
-    spark = events.sparkSession
-    cur = sessionize(events, user_col=user_col, ts_col=ts_col,
-                     gap_seconds=gap_seconds)
-    wo = W.partitionBy("user").orderBy("start_epoch")
-    cur = (cur.withColumn("rn", F.row_number().over(wo))
-           .withColumn("n_sess", F.count("*").over(W.partitionBy("user"))))
-    if open_state is None:
-        # key type follows the input — a hardcoded `long` breaks
-        # string-keyed datasets on their first batch
-        ut = events.schema[user_col].dataType.simpleString()
-        open_state = spark.createDataFrame(
-            [], f"user {ut}, start_epoch long, end_epoch long, n long")
-    prev = open_state.select(
-        "user", F.col("start_epoch").alias("p_start"),
-        F.col("end_epoch").alias("p_end"), F.col("n").alias("p_n"))
-
-    first = cur.filter(F.col("rn") == 1).join(prev, "user", "full_outer")
-    merged_first = first.select(
-        "user",
-        F.when(F.col("p_end").isNotNull()
-               & (F.col("start_epoch") - F.col("p_end") <= gap_seconds),
-               F.col("p_start")).otherwise(F.col("start_epoch"))
-        .alias("start_epoch"),
-        F.col("end_epoch"),
-        F.when(F.col("p_end").isNotNull()
-               & (F.col("start_epoch") - F.col("p_end") <= gap_seconds),
-               F.col("p_n") + F.col("n")).otherwise(F.col("n"))
-        .alias("n"),
-        "n_sess",
-        # prior open session proven closed by a too-late first event
-        F.when(F.col("end_epoch").isNotNull() & F.col("p_end").isNotNull()
-               & (F.col("start_epoch") - F.col("p_end") > gap_seconds),
-               True).otherwise(False).alias("prev_closed"),
-        # user idle this slice: state passes through untouched
-        F.col("end_epoch").isNull().alias("idle"),
-        "p_start", "p_end", "p_n")
-
-    closed = (
-        # prior opens killed by a gap to this slice's first session
-        merged_first.filter("prev_closed")
-        .select("user", F.col("p_start").alias("start_epoch"),
-                F.col("p_end").alias("end_epoch"),
-                F.col("p_n").alias("n"))
-        # this slice's first session, unless it is also the last
-        .unionByName(merged_first
-                     .filter(~F.col("idle") & (F.col("n_sess") > 1))
-                     .select("user", "start_epoch", "end_epoch", "n"))
-        # middle sessions close unconditionally
-        .unionByName(cur.filter((F.col("rn") > 1)
-                                & (F.col("rn") < F.col("n_sess")))
-                     .select("user", "start_epoch", "end_epoch", "n")))
-
-    new_state = (
-        # idle users carry their open session forward
-        merged_first.filter("idle")
-        .select("user", F.col("p_start").alias("start_epoch"),
-                F.col("p_end").alias("end_epoch"),
-                F.col("p_n").alias("n"))
-        # single-session users: the (possibly merged) first stays open
-        .unionByName(merged_first
-                     .filter(~F.col("idle") & (F.col("n_sess") == 1))
-                     .select("user", "start_epoch", "end_epoch", "n"))
-        # multi-session users: their last session stays open
-        .unionByName(cur.filter((F.col("n_sess") > 1)
-                                & (F.col("rn") == F.col("n_sess")))
-                     .select("user", "start_epoch", "end_epoch", "n")))
-    return closed, new_state
-
-
-def finalize(open_state: DataFrame) -> DataFrame:
-    """Flush remaining open sessions as closed (end of input)."""
-    return open_state.select(*STATE_COLS)

@@ -8,19 +8,21 @@ Scale design (100 TB of vectors):
 - brute-force top-k ends in TakeOrderedAndProject (per-partition heap
   + driver merge), never a global sort;
 - IVF: vectors are assigned once to their nearest centroid (narrow
-  map over a broadcast centroid table) and only the probed cells are
-  scanned at query time — cells shard across executors, and the
-  near-dup cross product stays per-cell-local (O(sum cell^2), not
+  map with the centroid set in the task closure) and only the probed
+  cells are scanned at query time — cells shard across executors, and
+  the near-dup cross product stays per-cell-local (O(sum cell^2), not
   O(n^2));
-- all similarity math is `functions.vectors` (JVM higher-order
-  expressions, doubles); similarities are rounded to 6dp BEFORE any
-  argmax/threshold so float ulp noise cannot flip assignments between
-  runs or engines.
+- pairwise and query scoring is `functions.vectors` (JVM higher-order
+  expressions, doubles); the k-way argmins of IVF assignment and PQ
+  encoding are one numpy implementation each over Arrow batches
+  (mapInPandas), the shape Catalyst's interpreted folds handle worst;
+- similarities are rounded to 6dp BEFORE any argmax/threshold so
+  float ulp noise cannot flip assignments between runs or engines.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tp_airflow_gtfs_snowflake_spark.functions.vectors import cosine
@@ -66,8 +68,8 @@ def kmeans_centroids(emb: DataFrame, *, vec_col: str = "embedding",
 
 def ivf_assign(emb: DataFrame, *, id_col: str = "vec_id",
                vec_col: str = "embedding", n_cents: int = 8,
-               centroids: list[tuple[int, list[float]]] | None = None,
-               impl: str = "arrow") -> DataFrame:
+               centroids: list[tuple[int, list[float]]] | None = None
+               ) -> DataFrame:
     """Assign every vector to its nearest centroid: input columns +
     `cent_id`.  Centroids are the first n_cents vectors by id (cheap
     stand-in) unless an explicit [(cent_id, center)] list — e.g. from
@@ -75,23 +77,24 @@ def ivf_assign(emb: DataFrame, *, id_col: str = "vec_id",
 
     Centroid assignment is a pure per-row function, so the <=n_cents
     centroids are collected once (tiny: a pushed-down `id < n` scan)
-    and inlined as literals; the argmax is a narrow map — ZERO
-    exchanges, regardless of |emb|.  The previous form
-    (crossJoin(broadcast(cents)) then row_number over a window
-    partitioned by vec_id) exploded every row x n_cents and shuffled
-    the whole blow-up just to keep rank 1; at 100 TB of vectors that
-    shuffle IS the job.  Pinned by
+    and ride in the task closure (k*dim doubles — a few KB); the
+    argmax is a narrow map — ZERO exchanges, regardless of |emb|.  A
+    crossJoin(broadcast(cents)) + row_number-per-vec_id form would
+    explode every row x n_cents and shuffle the blow-up just to keep
+    rank 1; at 100 TB of vectors that shuffle IS the job.  Pinned by
     tests/test_plan_quality.py::test_ivf_assign_has_no_exchange.
 
-    impl='arrow' (default): numpy over Arrow batches — the k x dim
-    cosine argmax is the same shape pq_encode measured as
-    catastrophically slow in Catalyst's interpreted higher-order-
-    function eval (~1 ms/row for 8x64: the fold never enters codegen)
-    and ideal for one batched matmul.  impl='native' keeps the pure-
-    Column fold (no Python workers) for plan-gating and environments
-    without Arrow.  Same 6dp rounding and lowest-cent_id tie-break
-    either way; the full-probe == brute-force invariant and the
-    c09/c10/c18 oracles hold on both."""
+    numpy over Arrow batches (mapInPandas): per batch, one (batch, k)
+    cosine matmul + argmax.  The same argmax as a Column fold over
+    centroid literals never enters codegen and is catastrophically
+    slow in Catalyst's interpreted higher-order-function eval (~1
+    ms/row for 8x64).  Similarities are rounded to 6dp before the
+    argmax, and centroids are sorted by cent_id so np.argmax's
+    first-hit tie-break == lowest cent_id."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
     if centroids is None:
         centroids = [(int(r["cent_id"]), list(r["cemb"])) for r in
                      emb.filter(F.col(id_col) < n_cents)
@@ -99,47 +102,6 @@ def ivf_assign(emb: DataFrame, *, id_col: str = "vec_id",
                              F.col(vec_col).cast("array<double>")
                              .alias("cemb"))
                      .collect()]
-    if impl == "arrow":
-        return _ivf_assign_arrow(emb, centroids, vec_col=vec_col)
-    cent_rows = sorted(centroids, key=lambda c: c[0])
-    cent_arr = F.array(*[
-        F.struct(
-            F.lit(int(cid)).cast("long").alias("cent_id"),
-            F.array(*[F.lit(float(x)) for x in vec])
-             .cast("array<double>").alias("cemb"))
-        for cid, vec in cent_rows])
-    # score each centroid (same 6dp rounding as before, so assignments
-    # are bit-identical to the old plan), then fold to the argmax; the
-    # tie-break mirrors ORDER BY sim DESC, cent_id ASC.
-    scored = F.transform(
-        cent_arr,
-        lambda c: F.struct(
-            F.round(cosine(F.col(vec_col), c["cemb"]), 6).alias("sim"),
-            c["cent_id"].alias("cent_id")))
-    best = F.aggregate(
-        scored,
-        F.struct(F.lit(float("-inf")).alias("sim"),
-                 F.lit(-1).cast("long").alias("cent_id")),
-        lambda acc, x: F.when(
-            (x["sim"] > acc["sim"])
-            | ((x["sim"] == acc["sim"]) & (x["cent_id"] < acc["cent_id"])),
-            x).otherwise(acc))
-    return emb.withColumn("cent_id", best["cent_id"])
-
-
-def _ivf_assign_arrow(emb: DataFrame,
-                      centroids: list[tuple[int, list[float]]], *,
-                      vec_col: str = "embedding") -> DataFrame:
-    """numpy mapInPandas assignment: per Arrow batch, one (batch, k)
-    cosine matmul + argmax.  Centroids ride in the task closure (k*dim
-    doubles — a few KB).  Narrow map: no shuffle, O(batch) memory, all
-    payload columns pass through.  Same 6dp rounding as the native
-    fold; centroids sorted by cent_id so np.argmax's first-hit
-    tie-break == lowest cent_id."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     cent_rows = sorted(centroids, key=lambda c: c[0])
     cent_ids = np.array([int(cid) for cid, _ in cent_rows], dtype=np.int64)
     C = np.array([list(vec) for _, vec in cent_rows], dtype=np.float64)
@@ -248,67 +210,28 @@ def pq_codebooks_kmeans(emb: DataFrame, *, vec_col: str = "embedding",
     return books
 
 
-def _sq_l2(a: Column, b: Column) -> Column:
-    diff = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def pq_encode(emb: DataFrame,
               codebooks: list[list[tuple[int, list[float]]]], *,
-              vec_col: str = "embedding",
-              impl: str = "arrow") -> DataFrame:
+              vec_col: str = "embedding") -> DataFrame:
     """Add `codes` (array<long>, one code per subspace): each subvector
     is replaced by the POSITION of its nearest codeword in the
     id-sorted codebook (equal to the codeword id for the dense
     0..k-1 books every producer here emits) — 8x-32x compression of
-    the corpus for ANN scans.  Positional codes keep the encode, the
-    ADC lookup table, and both impls in exact agreement for ANY
-    codebook id scheme.  A narrow per-row map either way: ZERO
-    exchanges at any corpus size (the point of PQ — the compressed
-    codes fit in memory where raw vectors do not).  Squared-L2 is
-    rounded to 6dp before the argmin so assignments are reproducible
-    within an impl; ties break to the lowest code id.
+    the corpus for ANN scans.  Positional codes keep the encode and
+    the ADC lookup table in exact agreement for ANY codebook id
+    scheme.  A narrow per-row map: ZERO exchanges at any corpus size
+    (the point of PQ — the compressed codes fit in memory where raw
+    vectors do not).  Squared-L2 is rounded to 6dp before the argmin
+    so assignments are reproducible; ties break to the lowest code
+    id.
 
-    impl='arrow' (default): numpy over Arrow batches via mapInPandas.
-    The m*k distance argmin is exactly the shape Catalyst handles
-    worst — a 64-way literal fold blows past the codegen method
-    limit and drops to interpreted eval (measured ~50x slower) — and
-    numpy the best: one (batch, k) broadcasted subtract per subspace.
-    impl='native' keeps the pure-Column fold (no Python workers;
-    plan-gated exchange-free) for engines/tests that need it."""
-    if impl == "arrow":
-        return _pq_encode_arrow(emb, codebooks, vec_col=vec_col)
-    m = len(codebooks)
-    d = len(codebooks[0][0][1])
-    v = F.col(vec_col).cast("array<double>")
-    per_sub = []
-    for j, book in enumerate(codebooks):
-        sub = F.slice(v, j * d + 1, d)
-        scored = F.array(*[
-            F.struct(
-                F.round(_sq_l2(sub, F.array(*[F.lit(float(x)) for x in cw])
-                               .cast("array<double>")), 6).alias("dist"),
-                F.lit(int(pos)).cast("long").alias("code"))
-            for pos, (_, cw) in enumerate(sorted(book))])
-        best = F.aggregate(
-            scored,
-            F.struct(F.lit(float("inf")).alias("dist"),
-                     F.lit(-1).cast("long").alias("code")),
-            lambda acc, x: F.when(
-                (x["dist"] < acc["dist"])
-                | ((x["dist"] == acc["dist"]) & (x["code"] < acc["code"])),
-                x).otherwise(acc))
-        per_sub.append(best["code"])
-    return emb.withColumn("codes", F.array(*per_sub))
-
-
-def _pq_encode_arrow(emb: DataFrame,
-                     codebooks: list[list[tuple[int, list[float]]]], *,
-                     vec_col: str = "embedding") -> DataFrame:
-    """numpy mapInPandas encode: per batch and subspace, one
-    broadcasted (batch, k, d) subtract + argmin.  Codebook rides in
-    the task closure (m*k*d doubles — a few KB).  Still a narrow map:
-    no shuffle, O(batch) memory, payload columns pass through."""
+    numpy over Arrow batches (mapInPandas): per batch and subspace,
+    one broadcasted (batch, k, d) subtract + argmin.  The m*k distance
+    argmin is exactly the shape Catalyst handles worst — a 64-way
+    literal fold blows past the codegen method limit and drops to
+    interpreted eval (measured ~50x slower).  The codebook rides in
+    the task closure (m*k*d doubles — a few KB); O(batch) memory,
+    payload columns pass through."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -366,8 +289,8 @@ def pq_topk(emb: DataFrame, query: DataFrame, *, id_col: str = "vec_id",
     q = query.select(F.col("qemb").cast("array<double>")).first()[0]
     d = len(codebooks[0][0][1])
     # driver-side LUT: lut[j][code] = ||q_sub_j - codeword||^2, 6dp
-    # positional rows over the id-SORTED book — the same order both
-    # encode impls emit their codes in
+    # positional rows over the id-SORTED book — the same order
+    # pq_encode emits its codes in
     lut = [[round(sum((float(q[j * d + i]) - cw[i]) ** 2
                       for i in range(d)), 6)
             for _, cw in sorted(book)] for j, book in enumerate(codebooks)]
@@ -397,8 +320,8 @@ def cell_blocked_neardup(emb: DataFrame, *, id_col: str = "vec_id",
     (b1 <= b2) block-pair grid instead of the whole cell with itself:
     a hot cell of H rows becomes sub_blocks*(sub_blocks+1)/2 tasks of
     ~(H/sub_blocks)^2 comparisons instead of ONE task doing H^2 — the
-    skew remedy for the 'hot cell is a hot partition' limit (same idea
-    as skew.salted_join applied to a self-join).  Results are
+    skew remedy for the 'hot cell is a hot partition' limit (salting
+    applied to a self-join).  Results are
     identical for any sub_blocks (every pair meets in exactly one
     block pair: (block(d1), block(d2)) ordered).
 

@@ -1,67 +1,17 @@
-"""Skew-mitigation operators: salted join and salted distinct
-aggregation.
+"""Skew mitigation: salted distinct aggregation.
 
-AQE's skew-join splitting (enabled in session.py) handles most skew at
-runtime by splitting oversized shuffle blocks.  Salting is the manual
-complement for the cases AQE can't fix:
-
-- a broadcast-ineligible join where ONE key's rows exceed a single
-  task's memory even after AQE splits (AQE splits the partition, but
-  every split of the left side must still join the full right-side
-  key group);
-- a count-distinct whose hot group funnels every distinct value
-  through one reducer.
-
-Both operators keep exact semantics: the salt only changes WHERE rows
-meet, never WHICH rows meet.
+AQE's skew-join splitting (enabled in session.py) handles skewed joins
+at runtime by splitting oversized shuffle blocks.  Salting is the
+manual complement for the case AQE can't fix: a count-distinct whose
+hot group funnels every distinct value through one reducer (b22 runs
+it).  The salt only changes WHERE rows meet, never WHICH rows meet,
+so the result is exact.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(left: DataFrame, right: DataFrame, *, on: list[str],
-                salt_buckets: int = 8, how: str = "inner",
-                left_salt_source: str | Column | None = None) -> DataFrame:
-    """Equi-join where the left side's hot keys are spread over
-    `salt_buckets` partitions and the (smaller) right side is
-    replicated once per bucket.
-
-    left_salt_source: column whose hash spreads left rows within a
-    key (default: a deterministic hash of ALL left columns).  The salt
-    is derived, not random, so the plan stays deterministic and
-    re-runnable.
-
-    Cost model: right side is exploded x salt_buckets before its
-    shuffle — use when |right| * salt_buckets << |left's hot keys|.
-
-    Only left-preserving join types are allowed: the right side is
-    replicated per salt bucket, so right/full outer joins would emit
-    salt_buckets null-extended rows for each unmatched right row —
-    those semantics cannot be patched up after the drop('_salt').
-    """
-    allowed = {"inner", "left", "left_outer", "leftouter",
-               "left_semi", "leftsemi", "semi",
-               "left_anti", "leftanti", "anti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join supports left-preserving joins only "
-            f"({sorted(allowed)}); got how={how!r} — an unmatched right "
-            f"row would be duplicated once per salt bucket")
-    if left_salt_source is None:
-        src = F.xxhash64(*[F.col(c) for c in left.columns])
-    else:
-        src = F.xxhash64(F.col(left_salt_source)
-                         if isinstance(left_salt_source, str)
-                         else left_salt_source)
-    lhs = left.withColumn("_salt", F.pmod(src, F.lit(salt_buckets)))
-    rhs = right.withColumn(
-        "_salt",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))))
-    out = lhs.join(rhs, on + ["_salt"], how)
-    return out.drop("_salt")
 
 
 def salted_count_distinct(df: DataFrame, *, group_cols: list[str],

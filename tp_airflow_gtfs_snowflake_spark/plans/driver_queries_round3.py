@@ -698,10 +698,9 @@ def b48_listagg_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     "n_p/(k+1) undercount bound, but a pure function of the input "
     "multiset, so DuckDB reproduces every count bit-for-bit.  Each "
     "item lives in exactly one shard, so its lower bound is "
-    "global-count minus one shard's m.  The order-dependent one-pass "
-    "operator (operators/heavy_hitters.py, mapInPandas) remains the "
-    "streaming form; its bounds stay pinned in "
-    "tests/test_operators_extra.py",
+    "global-count minus one shard's m.  This is the engine's one "
+    "Misra-Gries: a one-pass, arrival-order-dependent form could not "
+    "be value-oracled",
 )
 def c38_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W

@@ -820,10 +820,7 @@ def b108_excess_wait_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the window, the rule refreshed crawls and re-sent telemetry "
     "need (c01's exact dedup suppresses forever).  Spacing of "
     "occurrences alone decides, so ONE per-key lag window is the "
-    "whole batch spec, and the incremental twin (dedup_increment) "
-    "carries only (key, last_day) state bounded by the horizon — "
-    "pytest proves slice-by-slice == whole-history.  Output: kept "
-    "observations per day",
+    "whole spec.  Output: kept observations per day",
 )
 def c88_lookback_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tp_airflow_gtfs_snowflake_spark.operators.dedup import (

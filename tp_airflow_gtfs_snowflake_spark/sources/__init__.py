@@ -1,2 +1,6 @@
-"""Sources & sinks: CSV-with-COPY-options scan, GTFS static zip ingest,
-GTFS-RT feed flattening, idempotent file loader."""
+"""Sources: CSV-with-COPY-options scan, GTFS static fetch and ingest,
+GTFS-RT feed flattening (JSON and protobuf), the streaming
+landing-directory reader and multi-format table I/O.
+tests/test_engine_conventions.py::test_operators_and_sources_have_consumers
+fails on a public name no non-test code reaches unless its allowlist
+gives the reason."""

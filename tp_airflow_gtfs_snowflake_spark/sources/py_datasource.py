@@ -4,9 +4,10 @@ reference: dags/gtfs_rt_minutely.py:71-176 fetches feed snapshots and
 lands them as timestamped files; every consumer then re-implements the
 listing/parse glue.  Spark 4's Python DataSource API (public:
 pyspark.sql.datasource, SPARK-44076) lets that glue live INSIDE the
-engine as a named format, so consumers just say
-``spark.read.format("gtfs_rt_snapshots").option("path", dir).load()``
-— with the same format usable as readStream for incremental tailing.
+engine as a named streaming format, so consumers just say
+``spark.readStream.format("gtfs_rt_snapshots").option("path", dir)``
+to tail the landing directory incrementally (b155).  Snapshots are
+written with Spark's own text sink; this source only reads.
 
 Design for scale:
 - one InputPartition per snapshot file: listing happens once on the
@@ -25,11 +26,9 @@ Design for scale:
 from __future__ import annotations
 
 import os
-import uuid
 
-from pyspark.sql.datasource import (DataSource, DataSourceReader,
-                                    DataSourceStreamReader, DataSourceWriter,
-                                    InputPartition, WriterCommitMessage)
+from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
+                                    InputPartition)
 
 SCHEMA = "path string, mtime_epoch long, feed_json string"
 
@@ -52,19 +51,6 @@ def _read_file(filepath: str):
     with open(filepath, encoding="utf-8") as fh:
         body = fh.read()
     yield (filepath, int(os.path.getmtime(filepath)), body)
-
-
-class GtfsRtSnapshotReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.path = options["path"]
-        self.suffix = options.get("suffix", ".json")
-
-    def partitions(self):
-        return [_SnapshotPartition(f)
-                for f in _list_snapshots(self.path, self.suffix)]
-
-    def read(self, partition: _SnapshotPartition):
-        yield from _read_file(partition.filepath)
 
 
 class GtfsRtSnapshotStreamReader(DataSourceStreamReader):
@@ -134,8 +120,8 @@ class GtfsRtSnapshotStreamReader(DataSourceStreamReader):
 
 
 class GtfsRtSnapshotDataSource(DataSource):
-    """format("gtfs_rt_snapshots"): batch + streaming reader over a
-    landing directory of feed-snapshot JSON files."""
+    """format("gtfs_rt_snapshots"): streaming reader over a landing
+    directory of feed-snapshot JSON files."""
 
     @classmethod
     def name(cls) -> str:
@@ -144,224 +130,10 @@ class GtfsRtSnapshotDataSource(DataSource):
     def schema(self) -> str:
         return SCHEMA
 
-    def reader(self, schema) -> GtfsRtSnapshotReader:
-        return GtfsRtSnapshotReader(self.options)
-
     def streamReader(self, schema) -> GtfsRtSnapshotStreamReader:
         return GtfsRtSnapshotStreamReader(self.options)
-
-    def writer(self, schema, overwrite: bool) -> "SnapshotExportWriter":
-        return SnapshotExportWriter(self.options, overwrite=overwrite)
-
-
-class _ExportCommit(WriterCommitMessage):
-    def __init__(self, filename: str, n_rows: int):
-        self.filename = filename
-        self.n_rows = n_rows
-
-
-class SnapshotExportWriter(DataSourceWriter):
-    """df.write.format("gtfs_rt_snapshots") sink: one JSON-lines file
-    per input partition plus a _MANIFEST written atomically at COMMIT
-    time — the export-directory contract of the reference's
-    scripts/export_rt_text.py (files land, then a marker flips the
-    directory visible).  Executor tasks write part files (renamed
-    into place so readers never see partials); the driver-side
-    commit() writes the manifest listing every part + row count, and
-    abort() removes orphans — the two-phase protocol that makes the
-    export idempotent under task retries."""
-
-    def __init__(self, options: dict, overwrite: bool = True):
-        self.path = options["path"]
-        self.overwrite = overwrite
-
-    def write(self, iterator) -> _ExportCommit:
-        import json as _json
-        import uuid
-
-        from pyspark import TaskContext
-
-        os.makedirs(self.path, exist_ok=True)
-        pid = TaskContext.get().partitionId()
-        name = f"part-{pid:05d}-{uuid.uuid4().hex}.jsonl"
-        tmp = os.path.join(self.path, "." + name + ".tmp")
-        n = 0
-        with open(tmp, "w", encoding="utf-8") as fh:
-            for row in iterator:
-                fh.write(_json.dumps(row.asDict()) + "\n")
-                n += 1
-        os.rename(tmp, os.path.join(self.path, name))
-        return _ExportCommit(name, n)
-
-    def commit(self, messages) -> None:
-        import json as _json
-        # Spark passes None slots for tasks that failed before their
-        # commit message reached the driver (and then calls abort
-        # instead; the guard also protects abort-after-partial-commit
-        # interleavings).
-        msgs = [m for m in messages if m is not None]
-        own_files = sorted(m.filename for m in msgs)
-        own_rows = sum(m.n_rows for m in msgs)
-
-        def _snapshot(version: int) -> str:
-            files, n_rows = own_files, own_rows
-            if not self.overwrite and version > 1:
-                # true append: the new snapshot's visibility = previous
-                # snapshot's files plus this job's parts
-                prev = load_export_manifest(self.path, version - 1)
-                files = sorted(set(prev["files"]) | set(files))
-                n_rows += prev["n_rows"]
-            return _json.dumps(
-                {"version": version, "files": files, "n_rows": n_rows})
-
-        # The versioned manifest is the durable snapshot record.  It
-        # is claimed with an EXCLUSIVE link (os.link fails with EEXIST
-        # if the version exists) of a fully-written tmp file, so two
-        # concurrent writers to the same export dir can never both
-        # land on _MANIFEST.v{N}: the loser re-reads the winner's
-        # manifest (re-merging it in append mode, so its rows are not
-        # lost from the lineage) and retries with N+1.  Old part files
-        # are never touched — visibility is defined entirely by
-        # manifests (MVCC-style), which is what makes time travel and
-        # concurrent readers safe under overwrite.
-        version = latest_export_version(self.path) + 1
-        # pid alone is not unique enough: two concurrent writers in
-        # the SAME driver process (two threads exporting to one dir)
-        # would share the tmp path and one open('w') could truncate
-        # the other's fully-written tmp between write and link.  A
-        # uuid4 gives every commit attempt a private tmp file.
-        tmp = os.path.join(
-            self.path,
-            f".manifest-commit-{os.getpid()}-{uuid.uuid4().hex}.tmp")
-        while True:
-            with open(tmp, "w", encoding="utf-8") as fh:
-                fh.write(_snapshot(version))
-            target = os.path.join(self.path, f"_MANIFEST.v{version}")
-            try:
-                os.link(tmp, target)
-                break
-            except FileExistsError:
-                version += 1
-        os.remove(tmp)
-        # _MANIFEST is a best-effort latest pointer for pre-versioning
-        # consumers (readers and vacuum resolve 'latest' from the
-        # versioned files, so a crash before this rename cannot strand
-        # the pointer on vacuumed files).
-        tmp = os.path.join(self.path, "._MANIFEST.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(_snapshot(version))
-        os.rename(tmp, os.path.join(self.path, "_MANIFEST"))
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is None:  # failed task -> no part file to clean
-                continue
-            try:
-                os.remove(os.path.join(self.path, m.filename))
-            except OSError:
-                pass
 
 
 def register(spark) -> None:
     """Idempotent format registration for the current session."""
     spark.dataSource.register(GtfsRtSnapshotDataSource)
-
-
-# ---------------------------------------------------------------------
-# Time travel + vacuum over the versioned export manifests.
-#
-# The writer never deletes part files; each commit publishes a new
-# _MANIFEST.v{N} naming exactly the parts visible at that version
-# (plus the _MANIFEST latest pointer).  That gives the lakehouse trio
-# for free: snapshot-isolated reads (a reader resolves ONE manifest
-# and only ever opens its files, regardless of concurrent writes),
-# reproducible time travel (version=N pins the training snapshot),
-# and an explicit vacuum with a documented retention contract —
-# the reproducibility story a 100 TB training-data export needs.
-# ---------------------------------------------------------------------
-
-def latest_export_version(path: str) -> int:
-    """Highest committed manifest version (0 = none yet)."""
-    if not os.path.isdir(path):
-        return 0
-    versions = [int(f.rsplit(".v", 1)[1]) for f in os.listdir(path)
-                if f.startswith("_MANIFEST.v")]
-    return max(versions, default=0)
-
-
-def load_export_manifest(path: str, version: int | None = None) -> dict:
-    """Parsed manifest for `version` (default: latest).  Raises
-    FileNotFoundError for a never-committed or vacuumed version.
-
-    'Latest' resolves through the VERSIONED manifests (the durable
-    record), not the _MANIFEST pointer — a crash between commit's two
-    renames can leave the pointer one version stale, and vacuum
-    decisions must never hang off it.  The pointer remains only as a
-    fallback for pre-versioning directories."""
-    import json as _json
-    if version is None:
-        latest = latest_export_version(path)
-        name = f"_MANIFEST.v{latest}" if latest > 0 else "_MANIFEST"
-    else:
-        name = f"_MANIFEST.v{version}"
-    with open(os.path.join(path, name), encoding="utf-8") as fh:
-        return _json.loads(fh.read())
-
-
-def read_export(spark, path: str, schema,
-                version: int | None = None):
-    """Snapshot-isolated read of an export directory: resolve ONE
-    manifest, read exactly its part files (explicit schema — house
-    rule, no inference pass).  `version=N` time-travels."""
-    m = load_export_manifest(path, version)
-    files = [os.path.join(path, f) for f in m["files"]]
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).json(files)
-
-
-def vacuum_export(path: str, keep_versions: int = 2) -> dict:
-    """Delete part files referenced ONLY by manifests older than the
-    last `keep_versions`, plus those manifests.  Returns accounting
-    {"removed_files": n, "removed_versions": [...]}.  Readers of kept
-    versions are unaffected (their files survive); vacuumed versions
-    raise FileNotFoundError on access — the standard lakehouse
-    retention contract.
-
-    keep_versions must be >= 1: allowing 0 would delete every
-    snapshot including the current one (total data loss from a
-    single bad argument).  Known limitation, as in real lakehouses:
-    a part file renamed into place by a task whose commit message
-    never reached the driver (speculative/retried task) belongs to
-    NO manifest and is not removed here — manifests define
-    visibility, so such orphans cost disk but never correctness;
-    remove them with any unreferenced-file sweep run while no write
-    is in flight."""
-    if keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1 "
-                         "(0 would delete the current snapshot)")
-    latest = latest_export_version(path)
-    if latest == 0:
-        return {"removed_files": 0, "removed_versions": []}
-    keep = set(range(max(1, latest - keep_versions + 1), latest + 1))
-    all_versions = [int(f.rsplit(".v", 1)[1]) for f in os.listdir(path)
-                    if f.startswith("_MANIFEST.v")]
-    doomed_versions = sorted(v for v in all_versions if v not in keep)
-    referenced = set()
-    for v in sorted(keep):
-        try:
-            referenced |= set(load_export_manifest(path, v)["files"])
-        except FileNotFoundError:
-            pass
-    removed = 0
-    for v in doomed_versions:
-        for f in load_export_manifest(path, v)["files"]:
-            if f not in referenced:
-                try:
-                    os.remove(os.path.join(path, f))
-                    removed += 1
-                except OSError:
-                    pass
-        os.remove(os.path.join(path, f"_MANIFEST.v{v}"))
-    return {"removed_files": removed,
-            "removed_versions": doomed_versions}
