@@ -1,10 +1,16 @@
 """Benchmark: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line {"metric", "value", "unit", "queries", "sf"}.
+line {"metric", "value", "unit", "queries", "jobs", "sf"}.
 
 Each query executes with a count() action (full plan, no driver-side
 collect of payloads).  A warm-up action runs first so JVM/codegen
-startup is not billed to the first query.
+startup is not billed to the first query.  `jobs` is the number of
+Spark jobs the last timed run of each query started.
+
+$SPARK_GRAFT_BENCH_QUERIES (comma-separated registry names) times those
+queries instead of HEADLINE; an unknown name ends the run before the
+session starts (sf1 hot-tail runs use this).  $SPARK_GRAFT_BENCH_OUT
+sets the artifact path.
 """
 
 from __future__ import annotations
@@ -154,20 +160,22 @@ HEADLINE = [
 # steady cost at sf0.1 would dominate the suite without adding plan
 # coverage.  Its perf record: NOTES.md r10 (measured 17.6 s exploded
 # join vs 47.7 s array-intersect variant — the shape decision).
+# SPARK_GRAFT_BENCH_QUERIES=c145_char5_minhash_neardup times it alone.
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    # Optional subset mode (r12, VERDICT task 5): comma-separated query
-    # names restrict the timed sweep — used for the committed sf1
-    # hot-tail evidence runs.  Default (env unset) is the full HEADLINE,
-    # byte-identical behavior to r11.
     subset_env = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
     subset = [n.strip() for n in subset_env.split(",") if n.strip()]
-    headline = [n for n in HEADLINE if n in subset] if subset else HEADLINE
+    unknown = [n for n in subset if n not in REGISTRY]
+    if unknown:
+        raise SystemExit("SPARK_GRAFT_BENCH_QUERIES: unknown query "
+                         f"name(s): {', '.join(unknown)}")
+    headline = subset or HEADLINE
     spark = get_spark("bench")
+    sc = spark.sparkContext
 
     # warm-up: JVM + parquet footer caches
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
@@ -209,8 +217,11 @@ def main() -> None:
     # warmup that is per-process, not per-query, cost).  A JVM GC
     # between queries keeps one query's garbage from billing a GC
     # storm to the next (measured: single-query swings of 2-4 s at
-    # sf0.1 without it, rotating across the suite run to run).
+    # sf0.1 without it, rotating across the suite run to run).  The
+    # last run goes in the query's own job group, so its job count is
+    # exact (wall ~ jobs x job floor + data time).
     per_query: dict[str, float] = {}
+    jobs: dict[str, int] = {}
     for name in headline:
         if name in errors:
             continue
@@ -220,12 +231,16 @@ def main() -> None:
         # failure per-query and keep going (round 2 lost its entire
         # BENCH to a single NameError).
         try:
-            spark.sparkContext._jvm.System.gc()  # noqa: SLF001
-            for _ in range(3):
+            sc._jvm.System.gc()  # noqa: SLF001
+            for i in range(3):
+                if i == 2:
+                    sc.setJobGroup(f"bench_{name}", name)
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).count()
                 times.append(time.perf_counter() - t0)
             per_query[name] = round(min(times), 3)
+            jobs[name] = len(
+                sc.statusTracker().getJobIdsForGroup(f"bench_{name}"))
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
 
@@ -256,12 +271,9 @@ def main() -> None:
         "job_floor_seconds": job_floor,
         "job_floor_median_seconds": job_floor_median,
         "queries": per_query,
+        "jobs": jobs,
         "sf": sf,
     }
-    try:
-        out["streaming"] = _stream_slo(spark)
-    except Exception as exc:  # noqa: BLE001
-        errors["_streaming"] = f"{type(exc).__name__}: {exc}"[:300]
     # b174 is a STREAMING query (availableNow file stream + foreachBatch
     # sink); it gets one timed end-to-end run here instead of a 4x
     # HEADLINE slot — the number includes source materialization +
@@ -315,41 +327,6 @@ def main() -> None:
     if errors:
         summary["n_errors"] = len(errors)
     print(json.dumps(summary))
-
-
-def _stream_slo(spark) -> dict:
-    """Measured RT micro-batch durations (one file per trigger over the
-    GTFS fixture snapshots) vs the reference's 120 s trigger budget
-    (gtfs_rt_minutely.py:262).  Round-over-round regression signal for
-    the streaming path."""
-    import tempfile
-
-    from tests import fixtures_gtfs
-    from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
-    from tp_airflow_gtfs_snowflake_spark.streaming.rt_stream import (
-        batch_durations, start_bronze_ingest)
-
-    with tempfile.TemporaryDirectory() as td:
-        landing = os.path.join(td, "landing")
-        os.makedirs(landing)
-        for i, s in enumerate(fixtures_gtfs.make_feed_snapshots(5)):
-            with open(os.path.join(landing, f"snap_06{i:02d}.json"), "w") as f:
-                f.write(s)
-        wh = Warehouse(spark, os.path.join(td, "wh"))
-        for t in ("trip_updates_raw", "trip_stop_times",
-                  "vehicle_positions_raw"):
-            wh.create_if_not_exists("bronze", t)
-        q = start_bronze_ingest(spark, landing, wh,
-                                os.path.join(td, "ckpt"),
-                                available_now=True, max_files_per_trigger=1)
-        q.awaitTermination(300)
-        durs = batch_durations(q)
-    return {
-        "n_batches": len(durs),
-        "batch_seconds_mean": round(sum(durs) / max(len(durs), 1), 3),
-        "batch_seconds_max": round(max(durs), 3) if durs else None,
-        "slo_trigger_seconds": 120,
-    }
 
 
 if __name__ == "__main__":

@@ -10,6 +10,8 @@ OLD / NEW each accept either
 - a driver BENCH_r{N}.json artifact, whose "tail" is the LAST 2000
   stdout characters — per-query pairs are recovered by regex, so the
   overlap is whatever survived the truncation (printed as such).
+When both runs carry bench.py's per-query `jobs`, each flagged query
+also shows its job count old -> new.
 
 Classification per BASELINE.md's documented environment band: a
 delta is REGRESSION/IMPROVED only if BOTH the absolute delta exceeds
@@ -47,8 +49,9 @@ def load_floor(path: str) -> float | None:
     return float(m.group(1)) if m else None
 
 
-def load_queries(path: str) -> tuple[dict[str, float], str]:
-    """Returns (name -> seconds, provenance-note)."""
+def load_queries(path: str) -> tuple[dict[str, float], dict[str, int], str]:
+    """Returns (name -> seconds, name -> jobs, provenance-note); the
+    jobs map is empty for runs that predate bench.py's job counts."""
     text = open(path).read()
     # driver artifact?
     try:
@@ -57,9 +60,10 @@ def load_queries(path: str) -> tuple[dict[str, float], str]:
             pairs = re.findall(r'"([a-z][a-z0-9_]+)": ([0-9]+\.[0-9]+)',
                                d["tail"])
             q = {k: float(v) for k, v in pairs if k not in _META_KEYS}
-            return q, f"driver artifact (truncated tail: {len(q)} queries)"
+            return q, {}, \
+                f"driver artifact (truncated tail: {len(q)} queries)"
         if isinstance(d, dict) and "queries" in d:
-            return dict(d["queries"]), "summary JSON"
+            return dict(d["queries"]), d.get("jobs", {}), "summary JSON"
     except ValueError:
         pass
     # stdout file: first line holding a queries map wins
@@ -69,7 +73,7 @@ def load_queries(path: str) -> tuple[dict[str, float], str]:
         except ValueError:
             continue
         if isinstance(d, dict) and "queries" in d:
-            return dict(d["queries"]), "bench stdout"
+            return dict(d["queries"]), d.get("jobs", {}), "bench stdout"
     raise SystemExit(f"{path}: no per-query data found")
 
 
@@ -84,8 +88,8 @@ def main() -> None:
     ap.add_argument("--top", type=int, default=8)
     a = ap.parse_args()
 
-    qo, po = load_queries(a.old)
-    qn, pn = load_queries(a.new)
+    qo, jo, po = load_queries(a.old)
+    qn, jn, pn = load_queries(a.new)
     common = sorted(set(qo) & set(qn))
     if not common:
         raise SystemExit("no overlapping queries")
@@ -126,8 +130,10 @@ def main() -> None:
         # same zero guard as classify(): an old time parsed as 0.00
         # would otherwise raise ZeroDivisionError here
         pct = f"{d / qo[k]:+.0%}" if qo[k] > 0 else "n/a"
+        # added jobs cost job floors; equal jobs point at data time
+        jobs = f", jobs {jo[k]} -> {jn[k]}" if k in jo and k in jn else ""
         print(f"  {classify(k):10s} {k}: {qo[k]:.2f} -> {qn[k]:.2f} "
-              f"({d:+.2f}s, {pct})")
+              f"({d:+.2f}s, {pct}{jobs})")
     if not flagged:
         print("  no per-query deltas beyond the "
               f"{a.abs_floor}s/{a.rel:.0%} band")

@@ -61,10 +61,10 @@ def _module_gc():
 # DEFAULT run (`pytest tests/`, what the driver executes) keeps every
 # gate the driver's verdict depends on: the 378-query oracle-parity
 # sweep, the registry-wide plan-quality gates, the entry contract,
-# engine conventions, streaming, GTFS pipeline, formats and the
-# operator edge-case tests (~17 min idle).  The FULL tier adds the
-# pandas/pure-python reference recomputations, randomized property
-# suites and partition-invariance sweeps — redundant with the oracle
+# engine conventions, streaming, GTFS pipeline and its protobuf
+# decoder, reader formats and the operator edge-case tests.  The FULL
+# tier adds the pandas/pure-python reference recomputations, randomized
+# property suites and partition-invariance sweeps — redundant with the oracle
 # checks for regression DETECTION (they recompute the same answers a
 # third way) but kept for operator-development depth.  Run it with
 #   SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/ -q
@@ -74,7 +74,7 @@ def _module_gc():
 _FULL_ONLY_MODULES = {
     "test_properties", "test_qdigest_properties",
     "test_round13_properties", "test_round15_properties",
-    "test_partition_invariance", "test_gtfs_pb",
+    "test_partition_invariance",
     "test_window_references", "test_r07_window_references",
     "test_r08_window_references", "test_sketch_references",
     "test_curation_references", "test_lsh_banding_references",

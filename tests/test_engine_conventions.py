@@ -129,12 +129,6 @@ _NO_CONSUMER_OK = {
         "test-fixture protobuf encoder",
     (f"{_PKG}.sources.gtfs_rt_pb", "encode_feed_message"):
         "test-fixture protobuf encoder",
-    # No step reads or writes ORC/JSONL/CSV tables through these yet;
-    # whether they stay is open (see CHANGES.md).
-    (f"{_PKG}.sources.formats", "read_table"):
-        "non-parquet table I/O with no consumer yet; decision pending",
-    (f"{_PKG}.sources.formats", "write_table"):
-        "non-parquet table I/O with no consumer yet; decision pending",
 }
 
 

@@ -1,68 +1,9 @@
-"""Multi-format I/O: lossless round-trips through ORC/JSONL/CSV with
-explicit schemas, ORC predicate pushdown parity with parquet."""
+"""Reader behaviour the pipeline relies on: parquet schema merging,
+CSV malformed-row modes, and file-stream offsets."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
-
-from tests.conftest import SF_SMALL
-from tp_airflow_gtfs_snowflake_spark.sources.formats import (
-    read_table, write_table)
-
-
-@pytest.fixture(scope="module")
-def sample(spark):
-    return (spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-            .select("o_orderkey", "o_orderstatus", "o_totalprice",
-                    "o_orderdate").limit(500).cache())
-
-
-@pytest.mark.parametrize("fmt", ["orc", "json", "csv"])
-def test_round_trip_is_lossless(spark, tmp_path, sample, fmt):
-    path = str(tmp_path / fmt)
-    write_table(sample, path, fmt)
-    schema = ("o_orderkey long, o_orderstatus string, "
-              "o_totalprice double, o_orderdate timestamp_ntz")
-    back = read_table(spark, path, fmt, schema=schema)
-    want = {tuple(r) for r in sample.collect()}
-    got = {tuple(r) for r in back.collect()}
-    assert got == want, f"{fmt} round-trip lost data"
-
-
-def test_row_formats_require_schema(spark, tmp_path, sample):
-    write_table(sample, str(tmp_path / "j"), "json")
-    with pytest.raises(ValueError, match="explicit schema"):
-        read_table(spark, str(tmp_path / "j"), "json")
-
-
-def test_orc_keeps_predicate_pushdown(spark, tmp_path, sample):
-    path = str(tmp_path / "orc_pushdown")
-    write_table(sample, path, "orc")
-    df = (read_table(spark, path, "orc")
-          .filter(F.col("o_totalprice") > 100000.0)
-          .select("o_orderkey", "o_totalprice"))
-    p = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        .fromString("formatted"))
-    assert "PushedFilters: [IsNotNull(o_totalprice), " \
-           "GreaterThan(o_totalprice,100000.0)]" in p, \
-        f"ORC scan lost pushdown:\n{p[:1000]}"
-    read = next(l for l in p.splitlines() if "ReadSchema" in l)
-    assert read.split("struct<")[1].count(":") == 2, \
-        f"ORC scan reads extra columns: {read}"
-
-
-def test_partitioned_write_prunes(spark, tmp_path, sample):
-    path = str(tmp_path / "by_status")
-    write_table(sample, path, "orc", partition_cols=["o_orderstatus"])
-    df = (read_table(spark, path, "orc")
-          .filter(F.col("o_orderstatus") == "F"))
-    p = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        .fromString("formatted"))
-    pf = next((l for l in p.splitlines() if "PartitionFilters" in l), "")
-    assert "o_orderstatus" in pf, f"no partition pruning:\n{p[:800]}"
 
 
 def test_merge_schema_across_evolving_parquet(spark, tmp_path):

@@ -1182,3 +1182,71 @@ def test_merge_upsert_returns_rows_the_table_holds(spark, tmp_path):
     table = spark.read.parquet(parted)
     assert table.filter("day = 1").count() == 3
     assert table.count() == 4
+
+
+def test_merge_upsert_first_build_reads_nothing(spark, tmp_path,
+                                                monkeypatch):
+    """A first build is decided by listing the path, not by a read
+    that fails: the missing table is never read."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from tp_airflow_gtfs_snowflake_spark.operators.incremental import (
+        merge_upsert)
+    base = spark.createDataFrame(
+        [(1, 10, 1), (2, 20, 1), (3, 30, 1)], "id long, v long, ingest long")
+    read = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        read.extend(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    path = str(tmp_path / "t")
+    assert merge_upsert(spark, base, path, key_cols=["id"],
+                        order_col="ingest") == 3
+    assert path not in read
+
+
+@pytest.mark.parametrize("partition_col", [None, "day"])
+def test_merge_upsert_after_zero_row_first_build(spark, tmp_path,
+                                                 partition_col):
+    """A first build from zero rows leaves a table the next upsert
+    builds on (partitioned, it holds no data file at all)."""
+    from tp_airflow_gtfs_snowflake_spark.operators.incremental import (
+        merge_upsert)
+    schema = "id long, v long, ingest long, day long"
+    path = str(tmp_path / "t")
+    kw = dict(key_cols=["id"], order_col="ingest",
+              partition_col=partition_col)
+    assert merge_upsert(spark, spark.createDataFrame([], schema),
+                        path, **kw) == 0
+    rows = [(1, 10, 1, 1), (2, 20, 1, 2)]
+    assert merge_upsert(spark, spark.createDataFrame(rows, schema),
+                        path, **kw) == 2
+    got = spark.read.parquet(path).select("id", "v", "ingest", "day")
+    assert sorted(tuple(r) for r in got.collect()) == rows
+
+
+def test_retraction_rejects_state_with_other_schema(spark, tmp_path):
+    """A user state that exists but does not resolve is an error, not
+    a first batch: the call raises before writing any adjustment-log
+    epoch (a first-batch reading would add without retracting, and the
+    served view would double-count)."""
+    from pyspark.errors import AnalysisException
+
+    from tp_airflow_gtfs_snowflake_spark.operators.incremental import (
+        retraction_apply_batch)
+    ustate = str(tmp_path / "ustate")
+    adj = str(tmp_path / "adj")
+    spark.createDataFrame(
+        [(1, "a", 100, "a")],
+        "user_id long, kind string, value_cents long, ord string",
+    ).write.parquet(ustate)
+    batch = spark.createDataFrame(
+        [(1, "b", 50, "b")],
+        "user_id long, event_type string, value_cents long, ord string")
+    with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
+        retraction_apply_batch(spark, batch, ustate_path=ustate,
+                               adj_path=adj, epoch_id=0)
+    assert not (tmp_path / "adj").exists()

@@ -26,7 +26,6 @@ from __future__ import annotations
 import datetime as dt
 from typing import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -80,6 +79,30 @@ def incremental_append(
     return wh.append("silver", dst_name, out)
 
 
+def _holds_parquet(spark, path: str) -> bool:
+    """`path` holds a parquet data file at some partition depth: the
+    keyed merges' first-build test.  Lists through the Hadoop
+    FileSystem API, as `Warehouse.exists` does, and reads nothing, so
+    a failed read or analysis of a table that exists propagates
+    instead of passing for a first build (which would overwrite the
+    table, or skip retractions).  A table written from zero rows with
+    partitionBy holds no data file, so it counts as not built yet."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def holds(d) -> bool:
+        for st in fs.listStatus(d):
+            name = st.getPath().getName()
+            if name.startswith(("_", ".")):  # _SUCCESS, _temporary, .crc
+                continue
+            if (holds(st.getPath()) if st.isDirectory()
+                    else name.endswith(".parquet")):
+                return True
+        return False
+
+    return fs.isDirectory(p) and holds(p)
+
+
 def merge_upsert(
     spark,
     updates: DataFrame,
@@ -109,23 +132,15 @@ def merge_upsert(
     rows written (with `partition_col`, the rows of the touched
     partitions), counted by the write job itself.
     """
-    try:
+    if _holds_parquet(spark, table_path):
         existing = spark.read.parquet(table_path)
-        first_build = False
-    except AnalysisException:
-        # missing path = first build; any OTHER failure must propagate
-        # (a transient read error mistaken for first-build would
-        # OVERWRITE the table with only this batch's keys)
-        existing = None
-        first_build = True
-
-    if partition_col and not first_build:
-        touched = [r[0] for r in
-                   updates.select(partition_col).distinct().collect()]
-        existing = existing.filter(F.col(partition_col).isin(touched))
-
-    combined = updates if first_build \
-        else existing.unionByName(updates)
+        if partition_col:
+            touched = [r[0] for r in
+                       updates.select(partition_col).distinct().collect()]
+            existing = existing.filter(F.col(partition_col).isin(touched))
+        combined = existing.unionByName(updates)
+    else:  # first build
+        combined = updates
     payload = [c for c in combined.columns if c not in key_cols]
     merged, obs = _observe_rows(
         combined.groupBy(*key_cols)
@@ -186,23 +201,16 @@ def retraction_apply_batch(
             .select(key_col, order_col,
                     F.col(f"_n.{group_col}").alias("new_grp"),
                     F.col(f"_n.{value_col}").alias("new_val")))
-    try:
+    if _holds_parquet(spark, ustate_path):
         old = (spark.read.parquet(ustate_path)
                .select(key_col,
                        F.col(group_col).alias("old_grp"),
                        F.col(value_col).alias("old_val"),
                        F.col(order_col).alias("old_ord")))
-    except AnalysisException:
-        # missing path = first batch; any OTHER failure must propagate
-        # (old=None on a transient error would re-add every batch key
-        # without retracting its previous contribution — the served
-        # adjustment log would double-count permanently)
-        old = None
-    if old is not None:
         winners = (blat.join(old, key_col, "left")
                    .filter(F.col("old_ord").isNull()
                            | (F.col(order_col) > F.col("old_ord"))))
-    else:
+    else:  # first batch
         winners = (blat
                    .withColumn("old_grp", F.lit(None).cast("string"))
                    .withColumn("old_val", F.lit(None).cast("long")))

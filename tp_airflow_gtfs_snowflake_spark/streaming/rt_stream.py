@@ -95,25 +95,6 @@ def start_bronze_ingest(spark: SparkSession, landing_dir: str, wh: Warehouse,
     return writer.start()
 
 
-def batch_durations(query: StreamingQuery) -> list[float]:
-    """Measured wall-clock seconds of the query's micro-batches that
-    read data, from its progress history — the engine's SLO evidence
-    against the reference's cadence contract (one batch per 2-minute
-    trigger, gtfs_rt_minutely.py:262: batch duration must stay well
-    under the 120 s trigger or the pipeline falls behind)."""
-    import json as _json
-
-    out = []
-    for p in query.recentProgress:
-        prog = _json.loads(p) if isinstance(p, str) else p
-        if not prog.get("numInputRows", 0):
-            continue
-        dur = prog.get("durationMs", {}).get("triggerExecution")
-        if dur is not None:
-            out.append(dur / 1000.0)
-    return out
-
-
 def windowed_position_counts(feed_stream: DataFrame, *,
                              window: str = "5 minutes",
                              watermark: str = "10 minutes") -> DataFrame:
