@@ -265,15 +265,19 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "n_queries": len(per_query),
-        "baseline_r01_subset_seconds": round(
-            sum(per_query.get(n, 0.0) for n in r01_suite), 3),
-        "baseline_r01_subset_n": sum(1 for n in r01_suite if n in per_query),
         "job_floor_seconds": job_floor,
         "job_floor_median_seconds": job_floor_median,
         "queries": per_query,
         "jobs": jobs,
         "sf": sf,
     }
+    # only the full HEADLINE holds the r01 suite; a subset's sum over
+    # whichever r01 names it happens to contain compares with nothing
+    if not subset:
+        out["baseline_r01_subset_seconds"] = round(
+            sum(per_query.get(n, 0.0) for n in r01_suite), 3)
+        out["baseline_r01_subset_n"] = sum(
+            1 for n in r01_suite if n in per_query)
     # b174 is a STREAMING query (availableNow file stream + foreachBatch
     # sink); it gets one timed end-to-end run here instead of a 4x
     # HEADLINE slot — the number includes source materialization +

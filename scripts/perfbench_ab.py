@@ -14,7 +14,11 @@ Prints one line per pair as it completes, then per end-to-end metric
 (names, units, `better` and `bound` from the parent's BENCHMARK.json):
 - each side's q1 / median / q3;
 - the change's wins out of the pairs (ties count for neither side);
-- whether the gap between the medians exceeds the parent's IQR;
+- the gap between the medians against the parent's IQR: better by
+  more than it, worse by more than it, or within it;
+- whether a gain could be claimed: the change won at least 9 of
+  every 10 pairs and its median is better by more than the parent's
+  IQR;
 - the change of the median against the metric's bound: "ok",
   "WORSE past bound", or "unresolved" when the parent's IQR alone
   exceeds the bound and not every change run beats every parent run.
@@ -34,6 +38,8 @@ import os
 import statistics
 import subprocess
 import sys
+
+CLAIM_WIN_SHARE = 0.9  # a claimed gain wins at least 9 pairs in 10
 
 
 def parse_seeds(spec: str) -> list[int]:
@@ -82,7 +88,13 @@ def summarize(metric: dict, parent: list[float],
     pq, cq = quartiles(parent), quartiles(change)
     wins = sum((c < p) if lower else (c > p) for p, c in zip(parent, change))
     iqr = pq[2] - pq[0]
-    gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])
+    gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])  # > 0: better
+    if gap > iqr:
+        vs_iqr = "better"
+    elif -gap > iqr:
+        vs_iqr = "worse"
+    else:
+        vs_iqr = "within"
     worse = -gap / pq[1] if pq[1] else 0.0  # > 0: the change is worse
     all_better = (max(change) < min(parent)) if lower \
         else (min(change) > max(parent))
@@ -93,9 +105,16 @@ def summarize(metric: dict, parent: list[float],
     else:
         verdict = "ok"
     return {"parent_q": pq, "change_q": cq, "wins": wins,
-            "pairs": len(parent), "gap_exceeds_parent_iqr": gap > iqr,
+            "pairs": len(parent), "gap_vs_parent_iqr": vs_iqr,
+            "claim_holds": (vs_iqr == "better"
+                            and wins >= CLAIM_WIN_SHARE * len(parent)),
             "worse_frac": worse, "bound": metric["bound"],
             "verdict": verdict}
+
+
+_VS_IQR = {"better": "better by more than the parent IQR",
+           "worse": "worse by more than the parent IQR",
+           "within": "within the parent IQR"}
 
 
 def main() -> int:
@@ -147,9 +166,10 @@ def main() -> int:
         print(f"  {name} [{m['unit']}, {m['better']} is better]: "
               f"{fmt(f'{v:.3f}' for v in s['parent_q'])} -> "
               f"{fmt(f'{v:.3f}' for v in s['change_q'])}; "
-              f"change won {s['wins']}/{s['pairs']}; median gap "
-              f"{'exceeds' if s['gap_exceeds_parent_iqr'] else 'within'} "
-              f"parent IQR; median {-s['worse_frac']:+.1%} (+ is better; "
+              f"change won {s['wins']}/{s['pairs']}; median "
+              f"{_VS_IQR[s['gap_vs_parent_iqr']]}; claim "
+              f"{'holds' if s['claim_holds'] else 'does not hold'}; "
+              f"median {-s['worse_frac']:+.1%} (+ is better; "
               f"may worsen by {s['bound']:.0%}): {s['verdict']}")
     print(json.dumps({"workload": args.workload, "runs": runs,
                       "summary": summary}))

@@ -48,3 +48,6 @@ def test_subset_times_a_non_headline_query_and_counts_jobs(tmp_path):
     assert got["subset_names"] == [name]
     assert got["queries"][name] > 0
     assert got["jobs"][name] >= 1
+    # the r01 comparator only means something over the full HEADLINE
+    assert "baseline_r01_subset_seconds" not in got
+    assert "baseline_r01_subset_n" not in got

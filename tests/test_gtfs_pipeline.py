@@ -18,7 +18,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from tp_airflow_gtfs_snowflake_spark import silver
-from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse, concurrently
+from tp_airflow_gtfs_snowflake_spark.catalog import (
+    Warehouse, concurrently, list_dir)
 from tp_airflow_gtfs_snowflake_spark.silver import refresh_silver
 from tp_airflow_gtfs_snowflake_spark.sources.gtfs_rt import (
     flatten_trip_updates, flatten_vehicle_positions, parse_feed_json,
@@ -272,6 +273,18 @@ def test_noop_refresh_writes_no_silver_files_under_a_uri_root(
     append_rt_snapshots(spark, wh)
     assert wh.exists("bronze", "routes_static")
     assert_noop_refresh_writes_no_files(wh, str(tmp_path))
+
+
+def test_list_dir_lists_one_level_of_a_directory_only(spark, tmp_path):
+    (tmp_path / "t" / "ingest_epoch=1").mkdir(parents=True)
+    (tmp_path / "t" / "part-0.parquet").write_bytes(b"12345")
+    for root in (str(tmp_path), f"file://{tmp_path}"):
+        got = list_dir(spark, f"{root}/t")
+        assert [(n, d) for n, d, *_ in got] == [
+            ("ingest_epoch=1", True), ("part-0.parquet", False)]
+        assert got[1][2] == 5
+        assert list_dir(spark, f"{root}/t/part-0.parquet") is None
+        assert list_dir(spark, f"{root}/missing") is None
 
 
 # ------------------------------------------- independent writes at once

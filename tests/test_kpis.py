@@ -3,7 +3,9 @@
 
 from __future__ import annotations
 
+import calendar
 import os
+import re
 import shutil
 import uuid
 
@@ -11,8 +13,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests import fixtures_gtfs
+from tp_airflow_gtfs_snowflake_spark import silver
 from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
 from tp_airflow_gtfs_snowflake_spark.functions.gtfs_time import gtfs_time_to_seconds
+from tp_airflow_gtfs_snowflake_spark.operators import incremental
 from tp_airflow_gtfs_snowflake_spark.plans import kpis
 from tp_airflow_gtfs_snowflake_spark.silver import refresh_silver
 from tp_airflow_gtfs_snowflake_spark.sources.gtfs_rt import (
@@ -217,3 +221,131 @@ def test_silver_write_frees_the_cached_fact(own_wh, spark):
     own_wh.append("silver", "trip_stop_times_silver", spark.createDataFrame(
         [("6444367-0_R_99",)], "trip_id string"))
     assert not fact & persisted()
+
+
+def _python_fact(wh) -> list[tuple]:
+    """The delay fact as a nested-loop join over the silver rows: the
+    same (trip, seq) if RT has a seq, else the same (trip, stop)."""
+    midnight = calendar.timegm(SERVICE_DATE.timetuple())  # session UTC
+
+    def secs(t):
+        m = t is not None and re.fullmatch(r"(\d+):(\d{2}):(\d{2})", t)
+        return int(m[1]) * 3600 + int(m[2]) * 60 + int(m[3]) if m else None
+
+    sched = []
+    for r in wh.table("silver", "stop_times_static_silver").collect():
+        s = secs(r.arrival_time if r.arrival_time is not None
+                 else r.departure_time)
+        if s is not None:
+            sched.append((r.trip_id, r.stop_sequence, r.stop_id, midnight + s))
+    out = []
+    for r in wh.table("silver", "trip_stop_times_silver").collect():
+        observed = (r.arrival_time if r.arrival_time is not None
+                    else r.departure_time)
+        if observed is None or r.trip_id is None:
+            continue
+        for trip, seq, stop, sched_epoch in sched:
+            if trip != r.trip_id:
+                continue
+            if (seq == r.stop_sequence if r.stop_sequence is not None
+                    else r.stop_id is not None and stop == r.stop_id):
+                out.append((r.trip_id,
+                            r.stop_sequence if r.stop_sequence is not None
+                            else seq,
+                            r.stop_id if r.stop_id is not None else stop,
+                            observed, sched_epoch, observed - sched_epoch))
+    return sorted(out, key=repr)
+
+
+def test_delay_fact_equals_a_python_join(own_wh, spark):
+    trip, seq, stop = (own_wh.table("silver", "stop_times_static_silver")
+                       .where(F.col("arrival_time").isNotNull())
+                       .select("trip_id", "stop_sequence", "stop_id")
+                       .orderBy("trip_id", "stop_sequence").first())
+    epoch = 2_000_000_000  # after every fixture event
+    own_wh.append("silver", "trip_stop_times_silver", spark.createDataFrame(
+        [(trip, 999, stop, epoch),    # a seq that matches nothing:
+                                      # no fallback to the stop
+         (trip, None, stop, epoch + 1),  # no seq: joins on the stop
+         (trip, None, None, epoch + 2)],  # neither key: dropped
+        "trip_id string, stop_sequence long, stop_id string, "
+        "arrival_time long"))
+    fact = kpis.observed_vs_scheduled(own_wh, SERVICE_DATE)
+    got = sorted((tuple(r) for r in fact.collect()), key=repr)
+    want = _python_fact(own_wh)
+    assert got == want
+    mine = [r for r in got if r[0] == trip and r[3] >= epoch]
+    assert [(r[1], r[2], r[3]) for r in mine] == [(seq, stop, epoch + 1)]
+
+
+def test_delay_fact_on_unchanged_silver_is_the_same_frame(own_wh, spark):
+    sc = spark.sparkContext
+    first = kpis.observed_vs_scheduled(own_wh, SERVICE_DATE)
+    first.count()
+    again = []
+    assert _jobs(sc, lambda: again.append(
+        kpis.observed_vs_scheduled(own_wh, SERVICE_DATE))) == 0
+    assert again[0] is first
+
+
+def test_kpi_over_the_fact_is_one_job_with_no_exchange(own_wh, spark):
+    fact = kpis.observed_vs_scheduled(own_wh, SERVICE_DATE)
+    fact.count()  # build the cached fact
+    kpi = kpis.punctuality_rate(fact)
+    # the operators above the cached scan (below it, the printed
+    # InMemoryRelation is the fact's own build plan)
+    plan = kpi._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan
+    assert "Exchange" not in plan.split("InMemoryTableScan")[0]
+    assert _jobs(spark.sparkContext, kpi.collect) == 1
+
+
+def _counted_refresh(wh, monkeypatch, spark) -> tuple[dict, int, list]:
+    """refresh_silver's appends, its Spark jobs and the tables whose
+    watermark it scanned."""
+    scanned = []
+    inner = incremental.destination_watermark
+
+    def destination_watermark(wh, layer, name):
+        scanned.append(name)
+        return inner(wh, layer, name)
+    monkeypatch.setattr(incremental, "destination_watermark",
+                        destination_watermark)
+    out = {}
+    jobs = _jobs(spark.sparkContext, lambda: out.update(refresh_silver(wh)))
+    monkeypatch.setattr(incremental, "destination_watermark", inner)
+    return out, jobs, scanned
+
+
+def test_repeated_refresh_reuses_the_watermarks_its_loads_left(
+        own_wh, spark, monkeypatch):
+    # a copy is a new path: no load has handed it a watermark yet
+    appended, jobs, scanned = _counted_refresh(own_wh, monkeypatch, spark)
+    assert not any(appended.values())
+    assert sorted(scanned) == sorted(silver.TRANSFORMS)
+    assert jobs == 21  # 7 x (2 watermark jobs + isEmpty)
+    appended, jobs, scanned = _counted_refresh(own_wh, monkeypatch, spark)
+    assert not any(appended.values())
+    assert scanned == []
+    assert jobs == 7  # one isEmpty per load
+
+
+def test_silver_file_from_outside_makes_the_load_scan_again(
+        own_wh, spark, monkeypatch):
+    _counted_refresh(own_wh, monkeypatch, spark)  # hand over watermarks
+    name = "trip_stop_times_silver"
+    table = own_wh.path("silver", name)
+    part = max((f for f in os.listdir(table) if f.endswith(".parquet")),
+               key=lambda f: os.path.getsize(os.path.join(table, f)))
+    shutil.copy(os.path.join(table, part),
+                os.path.join(table, "part-99999-outside.parquet"))
+    held = own_wh.table("silver", name).count()
+    feed = parse_feed_json(spark.createDataFrame(
+        [(s,) for s in fixtures_gtfs.make_feed_snapshots(1)],
+        "feed_json string"))
+    _, stops = flatten_trip_updates(feed)
+    new = own_wh.append_epoch("bronze", "trip_stop_times", stops, 1)
+    appended, _, scanned = _counted_refresh(own_wh, monkeypatch, spark)
+    assert scanned == [name]
+    assert appended[name] == new
+    assert own_wh.table("silver", name).count() == held + new

@@ -20,7 +20,10 @@ unpartitioned.
 
 from __future__ import annotations
 
+import functools
 import os
+import posixpath
+import re
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Iterable
 
@@ -47,6 +50,51 @@ def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
     and the count cannot disagree with the files."""
     obs = Observation()
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+# one Hadoop FileStatus.toString(): path, isDirectory, length (files
+# only), ..., modification_time, ... (access_time is left out: a read
+# moves it)
+_STATUS = re.compile(r"path=(.*?); isDirectory=(true|false)"
+                     r"(?:; length=(\d+))?.*?; modification_time=(-?\d+)")
+
+
+@functools.cache
+def _hadoop_classes(jvm) -> tuple:
+    """Path and ArrayUtils, resolved once per JVM: each dotted lookup
+    through the py4j view is a round trip per name segment."""
+    return (jvm.org.apache.hadoop.fs.Path,
+            jvm.org.apache.commons.lang3.ArrayUtils)
+
+
+def list_dir(spark: SparkSession,
+             path: str) -> tuple[tuple[str, bool, int, int], ...] | None:
+    """The entries directly under directory `path` as sorted (name,
+    is_dir, length, modification_time) tuples, or None when `path` is
+    not a directory.
+
+    Goes through the Hadoop FileSystem API, so a file://, hdfs:// or
+    s3a:// root answers like a local path, and crosses into the JVM a
+    fixed number of times whatever the number of files: the whole
+    listing comes back as one string (FileStatus.toString of every
+    entry).  It reads no data and runs no Spark job, so comparing two
+    listings is the cheap "did anyone write here" check."""
+    path_cls, array_utils = _hadoop_classes(spark._jvm)
+    p = path_cls(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.isDirectory(p):
+        return None
+    statuses = fs.listStatus(p)
+    text = array_utils.toString(statuses)
+    entries = tuple(sorted(
+        (posixpath.basename(m[1]), m[2] == "true", int(m[3] or 0),
+         int(m[4]))
+        for m in _STATUS.finditer(text)))
+    # a FileStatus subclass printing another format would make a table
+    # look empty, and create_if_not_exists overwrite it
+    if len(entries) != len(statuses):
+        raise RuntimeError(f"cannot parse the listing of {path}: {text[:300]}")
+    return entries
 
 
 def concurrently(spark: SparkSession, fn: Callable,
@@ -109,15 +157,10 @@ class Warehouse:
 
     def exists(self, layer: str, name: str) -> bool:
         """The table directory holds a parquet file or a _SUCCESS
-        marker.  Goes through the Hadoop FileSystem API, so a
-        file://, hdfs:// or s3a:// root answers like a local path."""
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(self.path(layer, name))
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs.isDirectory(p) and any(
-            f.getPath().getName().endswith(".parquet")
-            or f.getPath().getName() == "_SUCCESS"
-            for f in fs.listStatus(p))
+        marker (one `list_dir`)."""
+        return any(f.endswith(".parquet") or f == "_SUCCESS"
+                   for f, *_ in list_dir(self.spark, self.path(layer, name))
+                   or ())
 
     def create_if_not_exists(self, layer: str, name: str) -> None:
         """CREATE TABLE IF NOT EXISTS: write an empty, fully-typed

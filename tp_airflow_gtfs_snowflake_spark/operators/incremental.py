@@ -6,15 +6,22 @@ reference: every silver load shares
                                    '1900-01-01'::TIMESTAMP_NTZ)
 (dags/gtfs_silver.py:125-213).
 
-Batch mode computes MAX(insert_date) on the destination, then appends
-only newer source rows (the filter pushes down to the source scan).
-The MAX reads the whole insert_date column: parquet is a V1 source
-here (spark.sql.sources.useV1SourceList) and
+A load appends only source rows newer than the destination's
+MAX(insert_date) watermark (the filter pushes down to the source
+scan).  Each load hands the next one its watermark: after its write it
+records the destination's file listing with max(old watermark,
+max insert_date written), the max observed by the write job itself.
+The next load lists the destination (no Spark job) and, when the
+listing is the recorded one, uses the recorded watermark.  Any other
+listing (a new process, a write from outside the session or straight
+into silver) falls back to destination_watermark, a scan of the whole
+insert_date column: parquet is a V1 source here
+(spark.sql.sources.useV1SourceList) and
 spark.sql.parquet.aggregatePushdown is off, so the plan is
 Scan parquet [insert_date] -> HashAggregate -> Exchange SinglePartition
--> HashAggregate, not a footer-statistics lookup.  Restart safety comes
-from the append-only watermark monotonicity: a crashed run re-appends
-nothing already visible, exactly like the reference.
+-> HashAggregate, two jobs, not a footer-statistics lookup.  Restart
+safety comes from the append-only watermark monotonicity: a crashed
+run re-appends nothing already visible, exactly like the reference.
 
 merge_upsert (latest-wins keyed MERGE) and retraction_apply_batch (a
 grouped aggregate maintained under upserts) back the registry's
@@ -26,19 +33,27 @@ from __future__ import annotations
 import datetime as dt
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse, _observe_rows
+from tp_airflow_gtfs_snowflake_spark.catalog import (
+    Warehouse, _observe_rows, list_dir)
 
 EPOCH_FLOOR = dt.datetime(1900, 1, 1)  # '1900-01-01'::TIMESTAMP_NTZ
+
+# destination path -> (its listing after the last load, the watermark
+# that load left).  Module-level: a Warehouse object lives no longer
+# than a refresh, the handover must outlive it.
+_handover: dict[str, tuple] = {}
 
 
 def destination_watermark(wh: Warehouse, layer: str,
                           name: str) -> dt.datetime:
     """(SELECT MAX(insert_date) FROM dst) — scalar agg over a scan of
     the destination's whole insert_date column (no aggregate pushdown
-    into parquet row-group statistics; see the module docstring)."""
+    into parquet row-group statistics; see the module docstring).
+    incremental_append runs it only when the destination's listing is
+    not the one its last load recorded."""
     if not wh.exists(layer, name):
         return EPOCH_FLOOR
     row = wh.table(layer, name).agg(
@@ -59,13 +74,25 @@ def incremental_append(
     `transform` is the declarative silver select-list; the watermark
     filter is applied on the *source* before the transform so Catalyst
     pushes it into the source scan.
+
+    The watermark is the one the last load into dst_name recorded when
+    the destination's file listing is still the one it recorded, and a
+    destination_watermark scan otherwise (module docstring).  That
+    relies on one writer per table, as merge_upsert states: a second
+    writer racing this load between its write and its listing would
+    have its rows taken for this load's.
     """
-    wm = destination_watermark(wh, "silver", dst_name)
+    path = wh.path("silver", dst_name)
+    listing = list_dir(wh.spark, path)
+    held = _handover.get(path)
+    wm = (held[1] if held is not None and held[0] == listing
+          else destination_watermark(wh, "silver", dst_name))
     out = transform(src.filter(F.col("insert_date") > F.lit(wm)))
     # an empty append still writes a schema-only part file into an
     # unpartitioned table, so a no-op refresh must not write at all;
     # isEmpty stops at the first row of the pushed-down scan
     if out.isEmpty():
+        _handover[path] = (listing, wm)
         return 0
     # DELIBERATE DEVIATION: carry the BRONZE insert_date into
     # silver (the transform keeps it, so append does not stamp).  The
@@ -76,31 +103,30 @@ def incremental_append(
     # advanced past it).  Keying the watermark on the carried bronze
     # timestamp removes that missed-row race; consumers reading silver
     # insert_date get bronze-ingest recency, not silver-load recency.
-    return wh.append("silver", dst_name, out)
+    written = Observation()  # observed after isEmpty: the write fills it
+    rows = wh.append("silver", dst_name, out.observe(
+        written, F.max("insert_date").alias("wm")))
+    _handover[path] = (list_dir(wh.spark, path),
+                       max(wm, written.get["wm"] or wm))
+    return rows
 
 
 def _holds_parquet(spark, path: str) -> bool:
     """`path` holds a parquet data file at some partition depth: the
-    keyed merges' first-build test.  Lists through the Hadoop
-    FileSystem API, as `Warehouse.exists` does, and reads nothing, so
-    a failed read or analysis of a table that exists propagates
-    instead of passing for a first build (which would overwrite the
-    table, or skip retractions).  A table written from zero rows with
-    partitionBy holds no data file, so it counts as not built yet."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def holds(d) -> bool:
-        for st in fs.listStatus(d):
-            name = st.getPath().getName()
-            if name.startswith(("_", ".")):  # _SUCCESS, _temporary, .crc
-                continue
-            if (holds(st.getPath()) if st.isDirectory()
-                    else name.endswith(".parquet")):
-                return True
-        return False
-
-    return fs.isDirectory(p) and holds(p)
+    keyed merges' first-build test.  Lists through `list_dir` (one
+    listing per directory level), as `Warehouse.exists` does, and
+    reads nothing, so a failed read or analysis of a table that exists
+    propagates instead of passing for a first build (which would
+    overwrite the table, or skip retractions).  A table written from
+    zero rows with partitionBy holds no data file, so it counts as not
+    built yet."""
+    for name, is_dir, *_ in list_dir(spark, path) or ():
+        if name.startswith(("_", ".")):  # _SUCCESS, _temporary, .crc
+            continue
+        if (_holds_parquet(spark, f"{path.rstrip('/')}/{name}") if is_dir
+                else name.endswith(".parquet")):
+            return True
+    return False
 
 
 def merge_upsert(

@@ -17,76 +17,105 @@ or stop_id (gtfs_rt_minutely.py:104-105, README.md:138) -> fall back
 to (trip_id, stop_id) for rows without a sequence (SURVEY §7).
 
 Scale: the static schedule is a small dimension (10^5-10^6 rows even
-for a huge network) -> broadcast it; the RT fact is the big side and
-arrives date-partitioned, so every KPI takes a recency filter that
-prunes partitions (B13, README.md:139).
+for a huge network) -> broadcast it; the RT fact is the big side.
+Silver is unpartitioned, so only stop_service_state takes a recency
+filter (`since_epoch`, B13, README.md:139); the fact-based KPIs read
+the whole fact.  The fact is one broadcast hash join on trip_id whose
+residual picks the stop: the same stop_sequence, or, for an RT row
+without one, the same stop_id.  It is cached coalesced to
+ceil(trip_stop_times_silver bytes / spark.sql.files.maxPartitionBytes)
+partitions, one below 128 MB: then every aggregation, window, distinct
+and top-k over it plans no Exchange and runs as one Spark job.
 
 Cached delay fact: the dashboard reads its KPIs over one silver state
 and eight of them share the delay fact, so observed_vs_scheduled
-returns it cached, built once per silver state.  Spark matches cached
-data by plan: later calls with the same warehouse and service date
-read the in-memory fact instead of re-scanning and re-joining
-parquet.  Any write to either input, from this session or from
-outside it, invalidates the fact (contract in observed_vs_scheduled).
-Callers do not cache it themselves.
+builds it once per silver state and hands every later call the same
+cached DataFrame while the files of both inputs are unchanged.  Any
+write to either input, from this session or from outside it,
+invalidates the fact (contract in observed_vs_scheduled).  Callers do
+not cache it themselves.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import math
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
+from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse, list_dir
 from tp_airflow_gtfs_snowflake_spark.functions.gtfs_time import (
     gtfs_time_to_seconds, service_seconds_to_epoch,
 )
 
 PUNCTUAL_THRESHOLD_S = 180  # "on time" = observed within 3 min of schedule
 
-# input table path -> the files the delay fact last read from it.
-# Module-level, like the Spark cache it guards, which outlives any one
-# Warehouse object.
-_input_listings: dict[str, frozenset[str]] = {}
+_FACT_INPUTS = ("trip_stop_times_silver", "stop_times_static_silver")
 
-
-def _fresh_input(wh: Warehouse, name: str) -> DataFrame:
-    """A new read of silver table `name`; when its files differ from
-    the last read, a writer outside this session changed it, so the
-    cached data over its path is dropped and rebuilt on the next read.
-    The read has already listed the directory: no Spark job."""
-    df = wh.table("silver", name)
-    path = wh.path("silver", name)
-    files = frozenset(df.inputFiles())
-    if _input_listings.get(path, files) != files:
-        wh.spark.catalog.refreshByPath(path)
-    _input_listings[path] = files
-    return df
+# (session, warehouse root, service date) -> (listings of the
+# _FACT_INPUTS when the fact was built, the cached fact).  Module-level,
+# like the Spark cache it indexes, which outlives any one Warehouse.
+_facts: dict[tuple, tuple] = {}
 
 
 def observed_vs_scheduled(wh: Warehouse, service_date: dt.date) -> DataFrame:
     """B1+B2+B3: the delay fact — one row per observed stop event with
     its scheduled counterpart and delay_s.
 
-    Returns a CACHED DataFrame, built once per silver state: calls
-    with the same warehouse and service date share one in-memory fact.
-    It always reflects the current files of both inputs:
+    Returns a CACHED DataFrame, built once per silver state: while the
+    file listings of both inputs are unchanged, every call with the
+    same session, warehouse and service date returns the same frame,
+    and the check builds no plan and runs no Spark job.  It always
+    reflects the current files of both inputs:
     - a write through this session (`df.write.parquet` over an input's
-      path, e.g. refresh_silver) makes Spark drop the cached buffers
-      and rebuild them lazily on the next read;
-    - a write from outside the session changes the input's file
-      listing, which the next call compares with the listing recorded
-      when it last read the input, and refreshes the path on a change.
+      path, e.g. refresh_silver) makes Spark drop the cached buffers;
+    - any write, from this session or from outside it, changes the
+      input's listing, so the call refreshes that path
+      (`refreshByPath`) and builds the fact again.
     Memory stays bounded: invalidation frees the old buffers, so only
     facts read since the last write to their inputs hold memory."""
-    rt = _fresh_input(wh, "trip_stop_times_silver").select(
+    spark = wh.spark
+    paths = [wh.path("silver", name) for name in _FACT_INPUTS]
+    listings = tuple(list_dir(spark, p) for p in paths)
+    key = (spark, wh.root, service_date)
+    held = _facts.get(key)
+    if held is not None and held[0] == listings:
+        fact = held[1]
+    else:
+        for path, old, new in zip(paths, held[0] if held else listings,
+                                  listings):
+            if old != new:
+                spark.catalog.refreshByPath(path)
+        fact = _delay_fact(wh, service_date).coalesce(
+            _width(spark, listings[0]))
+        _facts[key] = (listings, fact)
+    # cache() on an already-cached plan would only log a warning; a
+    # frame held here loses its cache only to clearCache/unpersist
+    if not fact.storageLevel.useMemory:
+        fact.cache()
+    return fact
+
+
+def _width(spark, listing) -> int:
+    """Partitions for a fact read from `listing`'s data files: one per
+    spark.sql.files.maxPartitionBytes of parquet, at least one."""
+    data = sum(size for name, is_dir, size, _ in listing or ()
+               if not is_dir and not name.startswith(("_", ".")))
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(1, math.ceil(data / split))
+
+
+def _delay_fact(wh: Warehouse, service_date: dt.date) -> DataFrame:
+    rt = wh.table("silver", "trip_stop_times_silver").select(
         "trip_id", "stop_sequence", "stop_id",
         F.coalesce("arrival_time", "departure_time").alias("observed_epoch"),
     ).where(F.col("observed_epoch").isNotNull())
 
-    sched = _fresh_input(wh, "stop_times_static_silver").select(
-        "trip_id", "stop_sequence", "stop_id",
+    sched = wh.table("silver", "stop_times_static_silver").select(
+        F.col("trip_id").alias("sched_trip_id"),
+        F.col("stop_sequence").alias("sched_seq"),
+        F.col("stop_id").alias("sched_stop_id"),
         gtfs_time_to_seconds(F.coalesce("arrival_time", "departure_time"))
         .alias("sched_s"),
     ).where(F.col("sched_s").isNotNull())
@@ -94,32 +123,19 @@ def observed_vs_scheduled(wh: Warehouse, service_date: dt.date) -> DataFrame:
         "sched_epoch",
         service_seconds_to_epoch(F.lit(service_date.isoformat()), F.col("sched_s")))
 
-    # primary key join; fall back to (trip, stop) when RT lacks the seq
-    with_seq = rt.where(F.col("stop_sequence").isNotNull()).join(
-        F.broadcast(sched.select("trip_id", "stop_sequence",
-                                 F.col("stop_id").alias("sched_stop_id"),
-                                 "sched_epoch")),
-        ["trip_id", "stop_sequence"], "inner",
-    ).select("trip_id", "stop_sequence",
-             F.coalesce("stop_id", "sched_stop_id").alias("stop_id"),
-             "observed_epoch", "sched_epoch")
-
-    no_seq = rt.where(F.col("stop_sequence").isNull()
-                      & F.col("stop_id").isNotNull()).join(
-        F.broadcast(sched.select("trip_id", "stop_id",
-                                 F.col("stop_sequence").alias("sched_seq"),
-                                 "sched_epoch")),
-        ["trip_id", "stop_id"], "inner",
-    ).select("trip_id", F.col("sched_seq").alias("stop_sequence"), "stop_id",
-             "observed_epoch", "sched_epoch")
-
-    delays = (with_seq.unionByName(no_seq)
-              .withColumn("delay_s",
-                          F.col("observed_epoch") - F.col("sched_epoch")))
-    # cache() on an already-cached plan would only log a warning
-    if not delays.storageLevel.useMemory:
-        delays.cache()
-    return delays
+    # primary key (trip, seq); fall back to (trip, stop) when RT lacks
+    # the seq.  A set seq that matches nothing does not fall back.
+    seq = F.col("stop_sequence")
+    on = ((F.col("trip_id") == F.col("sched_trip_id"))
+          & ((seq == F.col("sched_seq"))
+             | (seq.isNull() & (F.col("stop_id") == F.col("sched_stop_id")))))
+    return (rt.join(F.broadcast(sched), on, "inner")
+            .select("trip_id",
+                    F.coalesce(seq, "sched_seq").alias("stop_sequence"),
+                    F.coalesce("stop_id", "sched_stop_id").alias("stop_id"),
+                    "observed_epoch", "sched_epoch",
+                    (F.col("observed_epoch") - F.col("sched_epoch"))
+                    .alias("delay_s")))
 
 
 def avg_delay_over_time(delays: DataFrame, bucket: str = "5 minutes") -> DataFrame:
