@@ -8,6 +8,11 @@ import pytest
 
 from tp_airflow_gtfs_snowflake_spark.session import get_spark
 
+# One tier: `pytest tests/` runs every test in this directory, and no
+# configuration skips any.  The registry is built once per run, by the
+# sweep in test_driver_queries.py (plan gates, oracle, rows-only
+# count).
+
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
@@ -52,65 +57,3 @@ def _module_gc():
     unrecoverable heartbeat death spiral (see session.py)."""
     yield
     gc.collect()
-
-
-# ---------------------------------------------------------------------
-# Two-tier suite (r12, VERDICT r11 task 2b).  The full suite is 1040
-# tests / ~43 min idle and the external driver's verify window cut the
-# r11 run off at 62% — an unfinished gate is an unverified gate.  The
-# DEFAULT run (`pytest tests/`, what the driver executes) keeps every
-# gate the driver's verdict depends on: the 378-query oracle-parity
-# sweep, the registry-wide plan-quality gates, the entry contract,
-# engine conventions, streaming, GTFS pipeline and its protobuf
-# decoder, reader formats and the operator edge-case tests.  The FULL
-# tier adds the pandas/pure-python reference recomputations, randomized
-# property suites and partition-invariance sweeps — redundant with the oracle
-# checks for regression DETECTION (they recompute the same answers a
-# third way) but kept for operator-development depth.  Run it with
-#   SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/ -q
-# (the builder's round-close gate; its result is logged in
-# OPTIMIZATION_r12.md).  New test modules run in the DEFAULT tier
-# unless explicitly listed here.
-_FULL_ONLY_MODULES = {
-    "test_properties", "test_qdigest_properties",
-    "test_round13_properties", "test_round15_properties",
-    "test_partition_invariance",
-    "test_window_references", "test_r07_window_references",
-    "test_r08_window_references", "test_sketch_references",
-    "test_curation_references", "test_lsh_banding_references",
-    "test_round10_references", "test_round11_references",
-    "test_round12_references", "test_round13_references",
-    "test_round14_references", "test_round15_references",
-    "test_round16_references", "test_round17_references",
-    "test_round18_references", "test_round19_references",
-    "test_round2c", "test_round5", "test_round8", "test_round10",
-    "test_round11", "test_round12", "test_incremental_rollup",
-    "test_hierarchy", "test_spatial", "test_kmv",
-}
-# Individually gated slow members of default-tier modules (measured
-# --durations r12): redundant-with-oracle brute-force recomputations.
-_FULL_ONLY_TESTS = {
-    "tests/test_operators_extra.py::test_pq_full_refine_equals_brute_force",
-    "tests/test_streaming.py::"
-    "test_watermark_jump_emits_stale_session_instead_of_crashing",
-}
-
-
-def full_tier_only(nodeid: str) -> bool:
-    """True when the default tier skips the test `nodeid`
-    (`tests/<module>.py::<test>`)."""
-    mod = nodeid.split("::")[0].rsplit("/", 1)[-1].removesuffix(".py")
-    return mod in _FULL_ONLY_MODULES or nodeid in _FULL_ONLY_TESTS
-
-
-def pytest_collection_modifyitems(config, items):
-    import os
-
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
-        return
-    skip = pytest.mark.skip(
-        reason="full-tier (SPARK_GRAFT_FULL_TESTS=1 runs it; round-close "
-               "gate — see tests/conftest.py)")
-    for item in items:
-        if full_tier_only(item.nodeid):
-            item.add_marker(skip)

@@ -1,5 +1,8 @@
-"""Every registry query with an oracle must hash-match DuckDB at
-sf0.001 — the local mirror of the driver's t2 correctness gate."""
+"""The registry sweep: every registry query is built once at sf0.001,
+its physical plan passes the raw-scan plan gates of
+tests/test_plan_quality.py, and it hash-matches its DuckDB oracle (the
+local mirror of the driver's t2 correctness gate) or, rows-only, runs
+to a count."""
 
 from __future__ import annotations
 
@@ -8,8 +11,7 @@ import pytest
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import REGISTRY
 from tests.conftest import SF_SMALL
 from tests.oracle_harness import compare, duck_connection
-
-WITH_ORACLE = [n for n, s in REGISTRY.items() if s.oracle is not None]
+from tests.test_plan_quality import raw_scan_findings
 
 
 @pytest.fixture(scope="module")
@@ -17,26 +19,6 @@ def duck():
     con = duck_connection(SF_SMALL)
     yield con
     con.close()
-
-
-@pytest.mark.parametrize("name", WITH_ORACLE)
-def test_query_matches_oracle(spark, duck, name):
-    spec = REGISTRY[name]
-    sdf = spec.fn(spark, SF_SMALL)
-    ddf = duck.sql(spec.oracle).df()
-    compare(sdf, ddf, name)
-
-
-def test_all_queries_return_rows(spark):
-    # Redundancy cut (r12): every oracled query is already EXECUTED at
-    # SF_SMALL by its test_query_matches_oracle[...] parameter above —
-    # re-running all 393 here made this the suite's single most
-    # expensive test (405.7 s of the 43-min wall, measured
-    # --durations) while adding coverage only for the rows-only
-    # names.  Sweep exactly those.
-    for name, spec in REGISTRY.items():
-        if spec.oracle is None:
-            assert spec.fn(spark, SF_SMALL).count() >= 0, name
 
 
 # Queries whose oracle legitimately returns zero rows on this
@@ -49,19 +31,21 @@ _KNOWN_EMPTY_ORACLES = {
 }
 
 
-def test_oracles_are_not_vacuously_empty(duck):
-    """A 0-row oracle makes the value-hash check pass without testing
-    anything (the b36/c62/c106/c25 lesson, four separate times) —
-    every oracle must produce rows at sf0.001 unless it is on the
-    documented-empty allowlist.  DuckDB-only, so the whole registry
-    sweeps in seconds."""
-    empty = []
-    for name, spec in REGISTRY.items():
-        if spec.oracle is None or name in _KNOWN_EMPTY_ORACLES:
-            continue
-        if len(duck.sql(spec.oracle).df()) == 0:
-            empty.append(name)
-    assert not empty, f"vacuously-empty oracles: {empty}"
+@pytest.mark.parametrize("name", list(REGISTRY))
+def test_query_matches_oracle(spark, duck, name):
+    spec = REGISTRY[name]
+    sdf = spec.fn(spark, SF_SMALL)
+    bad = raw_scan_findings(name, sdf)
+    assert not bad, f"{name}: raw-scan global collapse: {bad[0][:120]}"
+    if spec.oracle is None:  # rows-only: see test_rows_only_set_is_pinned
+        assert sdf.count() >= 0
+        return
+    ddf = duck.sql(spec.oracle).df()
+    # a 0-row oracle passes the value-hash check without testing
+    # anything (the b36/c62/c106/c25 lesson)
+    assert len(ddf) or name in _KNOWN_EMPTY_ORACLES, \
+        f"{name}: vacuously-empty oracle"
+    compare(sdf, ddf, name)
 
 
 def test_entry_smoke(spark):

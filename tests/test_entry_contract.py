@@ -5,13 +5,9 @@ not-yet-verified queries first is load-bearing — pin it."""
 
 from __future__ import annotations
 
-import ast
-import os
 import re
 
 import __spark_entry__ as entry
-from tests.conftest import (_FULL_ONLY_MODULES, _FULL_ONLY_TESTS,
-                            full_tier_only)
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import REGISTRY
 
 
@@ -136,8 +132,8 @@ def test_rows_only_set_is_pinned():
                 assert REGISTRY[tok].oracle, \
                     f"declared twin {tok} is itself rows-only"
     # every pytest reference (`tests/<module>.py[::<test>]`; a bare
-    # module means all its tests) is collected and runs in the default
-    # tier — a reference that only the full tier runs checks nothing
+    # module means all its tests) exists and is not marked to skip — a
+    # reference that does not run checks nothing
     refs = re.findall(r"tests/(test_\w+)\.py(?:::(test_\w+))?",
                       " ".join(vr.ROWS_ONLY_TWINS.values()))
     assert refs
@@ -150,7 +146,6 @@ def test_rows_only_set_is_pinned():
             nodeid = f"tests/{mod_name}.py::{name}"
             fn = getattr(mod, name, None)
             assert callable(fn), f"{nodeid} does not exist"
-            assert not full_tier_only(nodeid), f"{nodeid} is full-tier only"
             marks = [m for obj in (mod, fn)
                      for m in _as_list(getattr(obj, "pytestmark", []))]
             assert not any(m.name in ("skip", "skipif", "xfail")
@@ -178,21 +173,3 @@ def test_back_bucket_is_staleness_ordered():
     for r in set(rounds):
         idxs = [reg[n] for n in back if last_rnd[n] == r]
         assert idxs == sorted(idxs)
-
-
-def test_full_tier_lists_name_existing_tests():
-    """Every full-tier module is a file under tests/ and every
-    full-tier node id names a test function that exists, so deleting
-    or renaming a test cannot leave a stale tier entry behind.  Parses
-    files only."""
-    tests_dir = os.path.dirname(os.path.abspath(__file__))
-    assert not sorted(m for m in _FULL_ONLY_MODULES if not os.path.isfile(
-        os.path.join(tests_dir, f"{m}.py")))
-    for nodeid in _FULL_ONLY_TESTS:
-        path, name = nodeid.split("::")
-        file = os.path.join(os.path.dirname(tests_dir), path)
-        assert os.path.isfile(file), nodeid
-        with open(file) as f:
-            tree = ast.parse(f.read())
-        assert name in {node.name for node in tree.body
-                        if isinstance(node, ast.FunctionDef)}, nodeid

@@ -27,6 +27,7 @@ from tp_airflow_gtfs_snowflake_spark.sources.gtfs_rt import (
 from tp_airflow_gtfs_snowflake_spark.sources.gtfs_static import (
     check_static_files, download_static_zip, ingest_static, unzip_static)
 from tests import fixtures_gtfs
+from tests.test_kpis import _jobs
 
 
 @pytest.fixture(scope="module")
@@ -375,6 +376,51 @@ def test_refresh_before_the_first_rt_snapshot(spark, tmp_path, gtfs_dir):
         "trip_updates_silver": rt["trip_updates_raw"],
         "trip_stop_times_silver": rt["trip_stop_times"],
         "vehicle_positions_silver": rt["vehicle_positions_raw"]}
+
+
+def test_replayed_epoch_is_loaded_into_silver_once(spark, tmp_path):
+    """foreachBatch is at-least-once, and the silver DAG runs on its
+    own schedule: a refresh can land between an epoch's first attempt
+    and its replay.  The replay keeps the first attempt's insert_date,
+    so the refresh after it has nothing new to load."""
+    wh = Warehouse(spark, str(tmp_path))
+    feed = parse_feed_json(spark.createDataFrame(
+        [(fixtures_gtfs.make_feed_snapshots(1)[0],)], "feed_json string"))
+    _, stops = flatten_trip_updates(feed)
+    written = []
+    # a new epoch runs its write and nothing else
+    assert _jobs(spark.sparkContext, lambda: written.append(wh.append_epoch(
+        "bronze", "trip_stop_times", stops, 0))) == 1
+    n = written[0]
+    assert n > 0
+    assert refresh_silver(wh)["trip_stop_times_silver"] == n
+    assert wh.append_epoch("bronze", "trip_stop_times", stops, 0) == n
+    assert refresh_silver(wh)["trip_stop_times_silver"] == 0
+    assert wh.table("bronze", "trip_stop_times").count() == n
+    assert wh.table("silver", "trip_stop_times_silver").count() == n
+
+
+def test_refresh_before_the_first_rt_snapshot_reads_no_rt_path(
+        spark, tmp_path, gtfs_dir, monkeypatch):
+    """A bronze source with no files is told by its listing, not by a
+    read that fails."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    wh = Warehouse(spark, str(tmp_path))
+    ingest_static(spark, gtfs_dir, wh)
+    read = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        read.extend(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    assert not any(refresh_silver(wh)[f"{t}_silver"]
+                   for t in ("trip_updates", "trip_stop_times",
+                             "vehicle_positions"))
+    assert read
+    assert not set(read) & {wh.path("bronze", t) for t in RT_BRONZE}
 
 
 # ------------------------------------------------------ the demo script

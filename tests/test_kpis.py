@@ -327,7 +327,9 @@ def test_repeated_refresh_reuses_the_watermarks_its_loads_left(
     appended, jobs, scanned = _counted_refresh(own_wh, monkeypatch, spark)
     assert not any(appended.values())
     assert scanned == []
-    assert jobs == 7  # one isEmpty per load
+    # one isEmpty per RT load; a static load whose bronze listing is
+    # the recorded one runs none
+    assert jobs == 3
 
 
 def test_silver_file_from_outside_makes_the_load_scan_again(

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_ORACLE, SF_SMALL
+from tests.conftest import SF_ORACLE
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import REGISTRY
 
 
@@ -745,8 +745,9 @@ def _unbounded_nested_loop_builds(df, allow_filtered_build=False):
 # relation being SMALL — but the structural gate can only see "there
 # is an Aggregate below", not the group-key cardinality.  This dict
 # is the per-query judgment: each entry names WHAT bounds the
-# collapsed relation at 100 TB.  The registry sweep fails any query
-# that gains this shape without an entry here.
+# collapsed relation at 100 TB.  The registry sweep
+# (tests/test_driver_queries.py) fails any query that gains this shape
+# without an entry here.
 _SP_ORDERING_REVIEWED = {
     "b46_period_over_period": "|periods| — calendar-bounded",
     "b47_equidepth_histogram": "block-offset table (two-pass form)",
@@ -877,9 +878,9 @@ def test_sp_ordering_review_names_are_live():
     assert not missing, f"reviewed names not in registry: {missing}"
 
 
-def test_no_registry_query_collapses_a_raw_scan(spark):
-    """Registry-wide sweep of the headline scale properties: NO query
-    may (a) put a SinglePartition exchange over a raw file scan (only
+def raw_scan_findings(name, df) -> list[str]:
+    """The headline scale properties, read off the plan: NO query may
+    (a) put a SinglePartition exchange over a raw file scan (only
     post-aggregate block/bucket tables may collapse — they are tiny
     by construction), (b) run a grouped-Arrow (applyInPandas) task
     directly over a raw file scan (grouped Python state must be
@@ -887,32 +888,21 @@ def test_no_registry_query_collapses_a_raw_scan(spark):
     nested-loop join without a structurally bounded broadcast side
     (outside the reviewed literal-filter ANN allowlist), or (d) sort
     or window a SinglePartition-collapsed relation without a
-    group-key-cardinality entry in _SP_ORDERING_REVIEWED (the r08
-    widening of the Aggregate lenience).  ~4 min at sf0.001;
-    this is the one test that asserts the 100 TB story for every
-    query at once, so it earns the wall-clock."""
-    bad = {}
-    for i, (name, spec) in enumerate(REGISTRY.items()):
-        if i % 50 == 0:
-            # a long suite accumulates driver-heap state; keep the
-            # 277-plan sweep from tipping the JVM over
-            spark.sparkContext._jvm.System.gc()  # noqa: SLF001
-        df = spec.fn(spark, SF_SMALL)
-        b = (_single_partition_exchanges_over_raw_scans(df)
+    group-key-cardinality entry in _SP_ORDERING_REVIEWED.  The
+    registry sweep (tests/test_driver_queries.py) runs it on every
+    query it builds."""
+    found = (_single_partition_exchanges_over_raw_scans(df)
              + _grouped_arrow_over_raw_scans(df)
              + _unbounded_nested_loop_builds(
-                 df, allow_filtered_build=(
-                     name in _BNLJ_FILTERED_BUILD_OK)))
-        if name not in _SP_ORDERING_REVIEWED:
-            b += ["unreviewed SP-ordering: " + s
+                 df, allow_filtered_build=name in _BNLJ_FILTERED_BUILD_OK))
+    if name not in _SP_ORDERING_REVIEWED:
+        found += ["unreviewed SP-ordering: " + s
                   for s in _sp_ordering_exchanges(df)]
-        if b:
-            bad[name] = b[0][:120]
-    assert not bad, f"raw-scan global collapses: {bad}"
+    return found
 
 
 def test_nested_loop_gate_catches_raw_cross_join(spark):
-    """Negative control for the nested-loop half of the sweep: a
+    """Negative control for the nested-loop half of the registry sweep: a
     crossJoin of two raw fact scans (no bounded side anywhere) must
     be flagged, and a crossJoin against a broadcast aggregate must
     pass."""
@@ -928,7 +918,7 @@ def test_grouped_arrow_gate_catches_raw_scan_group_apply(spark):
     """Negative control: applyInPandas directly over a parquet scan
     (whole source groups funneled into Python with no bounding
     aggregate) must be flagged, or the grouped-Arrow half of the
-    sweep above proves nothing."""
+    registry sweep proves nothing."""
     import pandas as pd
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")

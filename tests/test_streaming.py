@@ -101,9 +101,8 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
                            epoch_id=7) == 2
     assert wh.table("bronze", "vehicle_positions_raw").count() == 2
 
-    # partial-crash replay: epoch 7 replays with MORE rows (e.g. the
-    # first attempt died after writing a subset) -> end state is the
-    # replay's rows, not the union
+    # a replay with FEWER rows than the first attempt wrote: the end
+    # state is the replay's rows, not the union
     assert wh.append_epoch("bronze", "vehicle_positions_raw",
                            rows.limit(1), epoch_id=7) == 1
     assert wh.table("bronze", "vehicle_positions_raw").count() == 1

@@ -221,17 +221,32 @@ class Warehouse:
         `ingest_epoch` and written with DYNAMIC partition overwrite, so
         a replayed epoch (foreachBatch is at-least-once after a crash
         mid-batch) overwrites exactly its own `ingest_epoch=N`
-        directory instead of duplicating rows.  Requires ingest_epoch
-        in the table's schema.  Returns the rows written, counted by
-        the write job; an empty frame writes no file."""
+        directory instead of duplicating rows.  A replay also keeps the
+        insert_date its epoch's first attempt stamped (read back from
+        the epoch's files, the one extra job a replay runs), so a
+        silver load that ran between the two attempts does not load
+        the epoch again; rows that bring their own insert_date keep
+        it.  Requires ingest_epoch in the table's schema.  Returns the
+        rows written, counted by the write job; an empty frame writes
+        no file."""
         parts = self._parts(layer, name)
         if not parts:
             raise ValueError(
                 f"append_epoch needs an ingest_epoch column in the "
                 f"schema of {name!r}")
+        epoch = F.lit(int(epoch_id)).cast("long")
+        if "insert_date" not in df.columns and any(
+                is_dir and f == f"ingest_epoch={int(epoch_id)}"
+                for f, is_dir, *_ in list_dir(
+                    self.spark, self.path(layer, name)) or ()):
+            stamped = (self.table(layer, name)
+                       .filter(F.col("ingest_epoch") == epoch)
+                       .agg(F.max("insert_date")).collect()[0][0])
+            if stamped is not None:  # a zone-free string cast
+                df = df.withColumn("insert_date", F.lit(
+                    stamped.isoformat(" ")).cast(T.TimestampNTZType()))
         out, obs = _observe_rows(self._aligned(
-            layer, name,
-            df.withColumn("ingest_epoch", F.lit(int(epoch_id)).cast("long"))))
+            layer, name, df.withColumn("ingest_epoch", epoch)))
         (out.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy(*parts)

@@ -12,10 +12,12 @@ scan).  Each load hands the next one its watermark: after its write it
 records the destination's file listing with max(old watermark,
 max insert_date written), the max observed by the write job itself.
 The next load lists the destination (no Spark job) and, when the
-listing is the recorded one, uses the recorded watermark.  Any other
-listing (a new process, a write from outside the session or straight
-into silver) falls back to destination_watermark, a scan of the whole
-insert_date column: parquet is a V1 source here
+listing is the recorded one, uses the recorded watermark; when an
+unpartitioned source's listing is also the one recorded with it, the
+load appends 0 without reading the source at all.  Any other
+destination listing (a new process, a write from outside the session
+or straight into silver) falls back to destination_watermark, a scan
+of the whole insert_date column: parquet is a V1 source here
 (spark.sql.sources.useV1SourceList) and
 spark.sql.parquet.aggregatePushdown is off, so the plan is
 Scan parquet [insert_date] -> HashAggregate -> Exchange SinglePartition
@@ -42,8 +44,9 @@ from tp_airflow_gtfs_snowflake_spark.catalog import (
 EPOCH_FLOOR = dt.datetime(1900, 1, 1)  # '1900-01-01'::TIMESTAMP_NTZ
 
 # destination path -> (its listing after the last load, the watermark
-# that load left).  Module-level: a Warehouse object lives no longer
-# than a refresh, the handover must outlive it.
+# that load left, its source's listing when unpartitioned, else None).
+# Module-level: a Warehouse object lives no longer than a refresh, the
+# handover must outlive it.
 _handover: dict[str, tuple] = {}
 
 
@@ -63,17 +66,28 @@ def destination_watermark(wh: Warehouse, layer: str,
 
 def incremental_append(
     wh: Warehouse,
-    src: DataFrame,
+    src_name: str,
     dst_name: str,
-    transform: Callable[[DataFrame], DataFrame],
+    transform: Callable[[DataFrame], DataFrame] | None,
 ) -> int:
-    """Append transform(src rows newer than the silver dst's
-    insert_date watermark) to silver dst_name.
+    """Append transform(rows of bronze src_name newer than the silver
+    dst's insert_date watermark) to silver dst_name.
 
     Returns the number of appended rows, counted by the write job.
-    `transform` is the declarative silver select-list; the watermark
-    filter is applied on the *source* before the transform so Catalyst
-    pushes it into the source scan.
+    `transform` is the declarative silver select-list, or None to
+    append the source's columns (the append keeps the ones the
+    destination's schema declares); the watermark filter is applied
+    on the *source* before the transform so Catalyst pushes it into
+    the source scan.
+
+    The source's listing, taken before it is read, decides two things
+    without a read.  A source with no files yet (no RT snapshot has
+    landed) appends 0.  An unpartitioned source's listing (the static
+    tables) is recorded with the watermark, and when both it and the
+    destination's listing are the recorded ones the load appends 0
+    without a job.  A partitioned source (RT bronze, by ingest_epoch)
+    is always probed: its root lists epoch directories, which a
+    replay rewrites inside without changing the root listing.
 
     The watermark is the one the last load into dst_name recorded when
     the destination's file listing is still the one it recorded, and a
@@ -82,17 +96,29 @@ def incremental_append(
     writer racing this load between its write and its listing would
     have its rows taken for this load's.
     """
+    src_listing = list_dir(wh.spark, wh.path("bronze", src_name))
+    if not src_listing:
+        return 0
+    if wh._parts("bronze", src_name):
+        src_listing = None
     path = wh.path("silver", dst_name)
     listing = list_dir(wh.spark, path)
     held = _handover.get(path)
-    wm = (held[1] if held is not None and held[0] == listing
-          else destination_watermark(wh, "silver", dst_name))
-    out = transform(src.filter(F.col("insert_date") > F.lit(wm)))
+    if held is not None and held[0] == listing:
+        wm = held[1]
+        if src_listing is not None and held[2] == src_listing:
+            return 0
+    else:
+        wm = destination_watermark(wh, "silver", dst_name)
+    out = wh.table("bronze", src_name).filter(
+        F.col("insert_date") > F.lit(wm))
+    if transform is not None:
+        out = transform(out)
     # an empty append still writes a schema-only part file into an
     # unpartitioned table, so a no-op refresh must not write at all;
     # isEmpty stops at the first row of the pushed-down scan
     if out.isEmpty():
-        _handover[path] = (listing, wm)
+        _handover[path] = (listing, wm, src_listing)
         return 0
     # DELIBERATE DEVIATION: carry the BRONZE insert_date into
     # silver (the transform keeps it, so append does not stamp).  The
@@ -107,7 +133,7 @@ def incremental_append(
     rows = wh.append("silver", dst_name, out.observe(
         written, F.max("insert_date").alias("wm")))
     _handover[path] = (list_dir(wh.spark, path),
-                       max(wm, written.get["wm"] or wm))
+                       max(wm, written.get["wm"] or wm), src_listing)
     return rows
 
 

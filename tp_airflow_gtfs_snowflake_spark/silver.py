@@ -2,38 +2,18 @@
 
 reference: dags/gtfs_silver.py:125-213 — each silver load is a
 projection (+ small derivations) over the bronze table, applied
-incrementally on the insert_date high-watermark.  The transforms are
-declarative select-lists; the loader is operators/incremental.py.
+incrementally on the insert_date high-watermark.  Four of the seven
+are projections onto the silver schema, which the append applies; the
+three below derive a column.  The loader is operators/incremental.py.
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse, concurrently
 from tp_airflow_gtfs_snowflake_spark.operators.incremental import incremental_append
-
-
-def routes_silver(df: DataFrame) -> DataFrame:
-    # gtfs_silver.py:125-134 — 4/8 columns kept
-    return df.select("route_id", "agency_id", "route_long_name",
-                     "route_type", "insert_date")
-
-
-def trips_silver(df: DataFrame) -> DataFrame:
-    # gtfs_silver.py:136-149 — drop trip_short_name
-    return df.select("route_id", "service_id", "trip_id", "trip_headsign",
-                     "direction_id", "shape_id", "wheelchair_accessible",
-                     "bike_allowed", "insert_date")
-
-
-def stops_silver(df: DataFrame) -> DataFrame:
-    # gtfs_silver.py:151-163 — drop zone_id, location_type, stop_timezone
-    return df.select("stop_id", "stop_code", "stop_name", "stop_lat",
-                     "stop_lon", "parent_station", "wheelchair_boarding",
-                     "insert_date")
 
 
 def stop_times_silver(df: DataFrame) -> DataFrame:
@@ -66,37 +46,30 @@ def trip_stop_times_silver(df: DataFrame) -> DataFrame:
         "insert_date")
 
 
-def vehicle_positions_silver(df: DataFrame) -> DataFrame:
-    # gtfs_silver.py:200-213 — identity projection
-    return df.select("trip_id", "route_id", "vehicle_id", "latitude",
-                     "longitude", "bearing", "stop_id", "timestamp_epoch",
-                     "insert_date")
-
-
+# silver table -> (its bronze source, its derivation).  None: the load
+# appends the source's columns and Warehouse.append keeps the ones the
+# silver schema declares (schemas.SILVER), which is the whole
+# transform of routes (gtfs_silver.py:125-134, 4/8 columns), trips
+# (:136-149, drop trip_short_name), stops (:151-163, drop zone_id,
+# location_type, stop_timezone) and vehicle positions (:200-213,
+# identity).
 TRANSFORMS = {
-    "routes_static_silver": ("routes_static", routes_silver),
-    "trips_static_silver": ("trips_static", trips_silver),
-    "stops_static_silver": ("stops_static", stops_silver),
+    "routes_static_silver": ("routes_static", None),
+    "trips_static_silver": ("trips_static", None),
+    "stops_static_silver": ("stops_static", None),
     "stop_times_static_silver": ("stop_times_static", stop_times_silver),
     "trip_updates_silver": ("trip_updates_raw", trip_updates_silver),
     "trip_stop_times_silver": ("trip_stop_times", trip_stop_times_silver),
-    "vehicle_positions_silver": ("vehicle_positions_raw", vehicle_positions_silver),
+    "vehicle_positions_silver": ("vehicle_positions_raw", None),
 }
 
 
 def _load(wh: Warehouse, dst: str) -> int:
     """One silver load: create the table, then append its bronze
-    source's rows newer than its watermark.  A bronze source not
-    written yet (no RT snapshot has landed) appends 0."""
+    source's rows newer than its watermark."""
     src_name, transform = TRANSFORMS[dst]
     wh.create_if_not_exists("silver", dst)
-    try:
-        src = wh.table("bronze", src_name)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        return 0
-    return incremental_append(wh, src, dst, transform)
+    return incremental_append(wh, src_name, dst, transform)
 
 
 def refresh_silver(wh: Warehouse) -> dict[str, int]:

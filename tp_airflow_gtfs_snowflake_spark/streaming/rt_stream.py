@@ -62,7 +62,9 @@ def start_bronze_ingest(spark: SparkSession, landing_dir: str, wh: Warehouse,
     whole epoch.  Replay is made idempotent by append_epoch: every
     write lands under the epoch's own partition directories via dynamic
     partition overwrite, so the replay overwrites its previous
-    (possibly partial) output instead of appending duplicates.  This is
+    (possibly partial) output instead of appending duplicates, and
+    keeps the insert_date the first attempt stamped, so a silver load
+    between the two attempts does not load the epoch twice.  This is
     the engine's equivalent of the reference's per-file COPY INTO load
     history + PURGE=TRUE one-shot loads.
     """
