@@ -11,7 +11,6 @@ this module only adapts them to the driver contract.
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,147 +23,12 @@ def entry(spark: SparkSession) -> DataFrame:
     return _dq.flagship_span_topk(spark, "/root/testdata/sf0.001")
 
 
-# The driver's per-round correctness check covers ~50 queries in
-# registry order.  To accumulate hard driver signal across rounds we
-# surface queries the driver has NOT yet verified first.  The verified
-# set is DERIVED from the committed driver artifacts
-# (CORRECTNESS_r*.json: every hash-green row, plus rows-only names the
-# driver has already exercised — they can never produce a green hash
-# and must not burn window slots twice), so the per-round rotation
-# refresh is self-maintaining: once the driver commits round N's
-# artifact, round N+1's window automatically excludes its greens —
-# and a later RED row re-opens the name's slot (latest-row-wins).
-# (r07 verified the derivation reproduces the r01-r06 hand-maintained
-# list name-for-name before deleting it.)
-
-@functools.lru_cache(maxsize=1)
-def _latest_rows() -> tuple:
-    """(name -> green?, name -> round of its latest driver row), both
-    latest-row-wins over the committed CORRECTNESS artifacts."""
-    import json
-    import pathlib
-    green: dict = {}
-    rnd: dict = {}
-    root = pathlib.Path(__file__).resolve().parent
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            recs = json.loads(path.read_text())
-            n = int(path.stem.split("_r")[1])
-        except (OSError, ValueError):
-            continue  # one corrupt artifact must not sink the others
-        for name, rec in recs.items():
-            green[name] = bool(
-                rec.get("hash_match")
-                or (rec.get("err") == "no_oracle"
-                    and rec.get("spark_rows") is not None))
-            rnd[name] = n
-    return green, rnd
-
-
-def _driver_verified() -> frozenset:
-    """Names whose MOST RECENT driver record is green (hash-match, or
-    an exercised rows-only row for no-oracle names).  Latest-row-wins:
-    a name that later regresses to a red row re-opens its window slot
-    automatically (r02's c09/c10 errored, then went green in r03 —
-    the r03 row wins).  If no artifact parses the set is empty and the
-    rotation degrades to plain registry order — wasted signal, never
-    wrong answers; the repo gate pins the expected count."""
-    green, _ = _latest_rows()
-    return frozenset(n for n, ok in green.items() if ok)
-
-
-
-# Queries ADDED this round go first inside the unverified window:
-# driver hash rows on brand-new code are worth more than on queries
-# already green in the local mirror for several rounds.  Names that
-# gain a green driver row drop out of this pin AUTOMATICALLY (the
-# prio bucket excludes the derived verified set), so a stale list
-# wastes no window slots.  The r08 window (per VERDICT r07 tasks
-# 1+2): this round's 5 brand-new additions first, then the 45
-# never-checked oracle-able names fill the 50-slot window exactly in
-# registry order via the `front` bucket of _rotated() — closing the
-# oracle-able backlog to ZERO.  The 10 never-windowed rows-only
-# names are deferred to r09 (documented in COVERAGE.md): the
-# rows_only bucket sorts ahead of verified names, so r09's window
-# picks them up automatically once `front` is empty.
-_NEW_THIS_ROUND: list = [
-    # brand-new this round (r11); names are appended as each query
-    # goes oracle-green at three SFs.  Registry provenance closed in
-    # r09 (every name has a driver row), so all remaining window
-    # slots sweep the staleness-ordered `back` bucket.
-    "b184_watermark_delay_audit",
-    "b185_column_profile",
-    "b186_hll_hierarchy_rollup",
-    "c150_dedup_threshold_curve",
-    "c151_context_packing_audit",
-    "c152_stratified_split_audit",
-    "c153_vocab_coverage_curve",
-    "b187_scd2_late_arrival_repair",
-    "c154_temperature_mixture_weights",
-]
-
-
-# Already-green names whose IMPLEMENTATION changed since their last
-# driver row — the one case where burning a window slot on a verified
-# name is the right call (r06 precedent: the b153/b154 HLL clamp).
-# Populate explicitly per round; empty when no verified query changed.
-_REVERIFY_CHANGED: list = [
-    # r11 changes, all re-validated hash-green at sf0.01 locally:
-    # c144 single-pass zip_with scoring rewrite (VERDICT r10 task 2);
-    # the lazy-checkpoint job-count diet (VERDICT r10 task 1b);
-    # the four advisory hardenings (c146/c147/b181/b182).
-    "c144_sq8_quantization_audit",
-    "b153_hll_portable_sketch",
-    "b154_sliding_hll_distinct",
-    "b156_mips_norm_pruned_topk",
-    "b157_skew_salt_audit",
-    "b158_incremental_agg_retraction",
-    "b159_qdigest_quantiles",
-    "b160_sliding_qdigest",
-    "c132_average_precision",
-    "c146_heaps_law_vocab_growth",
-    "c147_pmi_collocations",
-    "b181_t_closeness_audit",
-    "b182_session_threshold_audit",
-    "b150_simpson_reversal_audit",
-    "c130_jsd_lang_divergence",
-    "c131_cluster_purity_mi",
-    "b155_streaming_datasource_restart",
-    "b161_streaming_retraction_restart",
-]
-
-
-def _rotated(d: dict) -> dict:
-    """Order the registry so the driver's ~50-slot correctness window
-    lands on maximal hard signal: changed-code re-verifications and
-    new/never-checked pins first, then never-driver-checked names in
-    registry order, then rows-only (no-oracle) names — which can
-    never produce a green hash row and must not burn window slots —
-    and finally already-verified names.
-    """
-    oracled = set(_dq.oracle_sql())
-    seen = _driver_verified() - set(_REVERIFY_CHANGED)
-    prio = {k: d[k] for k in _NEW_THIS_ROUND + _REVERIFY_CHANGED
-            if k in d and k in oracled and k not in seen}
-    front = {k: v for k, v in d.items()
-             if k not in seen and k not in prio and k in oracled}
-    rows_only = {k: v for k, v in d.items()
-                 if k not in seen and k not in prio and k not in oracled}
-    # Free window slots spill into `back`, so order it by STALENESS
-    # (oldest latest-driver-row round first, registry order within a
-    # round; VERDICT r08 task 4): registry order alone would re-confirm
-    # the same early names every round, while ~250 names' latest
-    # driver signal dates from r01-r03.
-    _, last_rnd = _latest_rows()
-    back = {k: d[k] for k in sorted(
-        (k for k in d if k in seen and k not in prio),
-        key=lambda k: last_rnd.get(k, 0))}
-    return {**prio, **front, **rows_only, **back}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _rotated(_dq.queries())
+    """Every registry query, in registry order."""
+    return _dq.queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    return _rotated(_dq.oracle_sql())
+    """The DuckDB oracle of every value-oracled query, in registry
+    order."""
+    return _dq.oracle_sql()

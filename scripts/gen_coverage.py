@@ -32,18 +32,9 @@ entry the driver cross-checks against DuckDB at sf0.01:
 - **driver** — `hash rNN` = first round with a green value-hash row in
   CORRECTNESS_rNN.json; `rows rNN` = first rows-only driver record
   (no-oracle names can never hash-match); `pending` = not yet inside
-  a driver window (the rotation in `__spark_entry__.py` surfaces
-  these first).  Local-mirror status for pending names: the full
+  a driver window.  Local-mirror status for pending names: the full
   registry is green under `scripts/validate_registry.py` at sf0.01
   and sf0.1 (see NOTES.md round records).
-
-Window plan (r10): registry provenance is COMPLETE as of r09 (every
-name has a driver row; latest-row-wins, 0 red), so the window is:
-slots 1-N the r10 additions (hash-oracled at three SFs before
-registration, pinned via `_NEW_THIS_ROUND`), then every remaining
-slot sweeps the `back` bucket in STALENESS order (oldest
-latest-driver-row round first — VERDICT r08 task 4), re-confirming
-the r01/r02-era cohort whose latest driver signal is oldest.
 
 **Rows-only retirement policy** (VERDICT r09 task 8 — the rule the
 repo has followed in practice since r03, now binding): a rows-only
@@ -70,9 +61,8 @@ COVERAGE_MD = ROOT / "COVERAGE.md"
 def driver_status() -> dict[str, str]:
     """First-green provenance, latest-row-wins validity (ADVICE r07):
     the round shown is the FIRST green driver row, but a name whose
-    MOST RECENT row is red is labelled REGRESSED — matching
-    __spark_entry__._driver_verified(), which re-opens that slot —
-    so the doc can never claim 'verified' for a regressed query."""
+    MOST RECENT row is red is labelled REGRESSED, so the doc can
+    never claim 'verified' for a regressed query."""
     first_green: dict[str, str] = {}
     latest_green: dict[str, bool] = {}
     latest_rnd: dict[str, str] = {}

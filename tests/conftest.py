@@ -23,7 +23,8 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 def md5_48(s: str) -> int:
     """First 12 md5 hex chars as a 48-bit int — matches the engine's
-    operators.kmv.portable_hash48 and the oracle's _H48 SQL."""
+    operators.kmv.portable_hash48 and its oracle SQL,
+    PORTABLE_HASH48_SQL."""
     return int(hashlib.md5(s.encode()).hexdigest()[:12], 16)
 
 

@@ -109,12 +109,13 @@ def test_round6_known_boundaries(spark):
 
 
 # ---------------------------------------------------------------------
-# One implementation per operator: every public name in operators/ and
-# sources/ must have a consumer outside tests/.  A twin that only its
-# own test calls is the code this guard exists to keep out.
+# No code without a consumer: every public name in a guarded package
+# (operators/, sources/, streaming/, functions/) must have a consumer
+# outside tests/.  A twin that only its own test calls is the code
+# this guard exists to keep out.
 
 _PKG = "tp_airflow_gtfs_snowflake_spark"
-_GUARDED = ("operators", "sources")
+_GUARDED = ("operators", "sources", "streaming", "functions")
 # Public names with no non-test consumer, kept on purpose.
 _NO_CONSUMER_OK = {
     # A1/A2 of the paper's static fetch; the pipeline entry points run
@@ -171,12 +172,12 @@ def _references(node: ast.AST, module: str, mods, names, own: set[str]):
     return refs
 
 
-def test_operators_and_sources_have_consumers():
-    """Every public top-level function or class in operators/ and
-    sources/ is reachable from non-test code: named by plans/, the
-    pipeline modules, scripts/, perfbench/, bench.py or
-    __spark_entry__.py, or named inside the body of a reachable
-    operator or source.  Parses files only."""
+def test_guarded_packages_have_consumers():
+    """Every public top-level function or class in a guarded package
+    is reachable from non-test code: named by plans/, the pipeline
+    modules, scripts/, perfbench/, bench.py or __spark_entry__.py, or
+    named inside the body of a reachable guarded name.  Parses files
+    only."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     consumer_files, guarded_files = [], {}
     for dirpath, dirs, files in os.walk(root):
@@ -229,5 +230,5 @@ def test_operators_and_sources_have_consumers():
     orphans = sorted(f"{m}.{n}" for m, n in public - reached
                      if (m, n) not in _NO_CONSUMER_OK)
     assert not orphans, (
-        "public operators/sources names no non-test code reaches "
+        "public names in guarded packages that no non-test code reaches "
         f"(delete them, or allowlist with a reason): {orphans}")

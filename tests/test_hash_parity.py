@@ -21,7 +21,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from tp_airflow_gtfs_snowflake_spark.operators.kmv import portable_hash48
+from tp_airflow_gtfs_snowflake_spark.operators.kmv import (
+    PORTABLE_HASH48_SQL, portable_hash48)
 
 EDGE_STRINGS = ["", " ", "  ", "0", "-0", "1.0", "nan", "NULL", "None",
                 "a" * 4096, "\t\n", "'quote'", '"dq"', "背景モデル",
@@ -44,16 +45,11 @@ def _spark_hashes(spark, values, spark_type):
 
 
 def _duck_hashes(values, duck_cast):
-    # mirrors the oracles' _H48 template: the hashed value is ALWAYS
-    # stringified first (md5 takes VARCHAR), typed keys included
+    # the oracles' template: the hashed value is ALWAYS stringified
+    # first (md5 takes VARCHAR), typed keys included
     con = duckdb.connect()
-    got = []
-    for v in values:
-        got.append(con.execute(
-            "SELECT CAST('0x' || substr(md5(CAST(CAST(? AS "
-            + duck_cast
-            + ") AS VARCHAR)), 1, 12) AS BIGINT)", [v]).fetchone()[0])
-    return got
+    sql = "SELECT " + PORTABLE_HASH48_SQL.format(c=f"CAST(? AS {duck_cast})")
+    return [con.execute(sql, [v]).fetchone()[0] for v in values]
 
 
 def test_edge_strings_three_way(spark):

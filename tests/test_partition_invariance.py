@@ -38,9 +38,8 @@ def spark7(spark):
     spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-# The gated queries: one fixed list, so editing the driver rotation
-# in __spark_entry__ never changes this gate.  Each name is
-# value-oracled.
+# The gated queries: one fixed list, independent of registry order.
+# Each name is value-oracled.
 _INVARIANCE_GATED = (
     "b184_watermark_delay_audit", "b185_column_profile",
     "b186_hll_hierarchy_rollup", "c150_dedup_threshold_curve",

@@ -1,8 +1,8 @@
 """Snowflake-dialect parity: the SQL surface the reference's DAGs
 emit (gtfs_silver.py / gtfs_static_daily.py) runs on spark.sql with
 at most a table-name change — native equivalences verified value-
-level, the gaps filled by functions/snowflake_compat.py's SQL UDFs
-(pure Catalyst expressions, no Python workers)."""
+level, and the one rewrite the reference needs: 1-arg TO_VARCHAR(x)
+becomes CAST(x AS STRING)."""
 
 from __future__ import annotations
 
@@ -10,8 +10,6 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from tp_airflow_gtfs_snowflake_spark.functions.snowflake_compat import (
-    register_snowflake_compat)
 from tp_airflow_gtfs_snowflake_spark.silver import trip_updates_silver
 
 
@@ -39,17 +37,6 @@ def test_native_snowflake_equivalences(spark):
     assert row["zi"] == 0.0
 
 
-def test_compat_shims_fill_the_gaps(spark):
-    register_snowflake_compat(spark)
-    row = spark.sql("""
-        SELECT IFF(1 = 1, 'y', 'n') AS i,
-               IFF_NUM(1 = 2, 1.5D, 2.5D) AS inm,
-               TO_TIMESTAMP_NTZ_EPOCH(1709532000) AS tn
-    """).first()
-    assert (row["i"], row["inm"]) == ("y", 2.5)
-    assert row["tn"] == dt.datetime(2024, 3, 4, 6, 0)
-
-
 def test_reference_silver_sql_runs_verbatim_shape(spark):
     """A Snowflake-dialect silver statement in the reference's idiom
     (CASE WHEN ... direction label, COALESCE projection,
@@ -57,7 +44,6 @@ def test_reference_silver_sql_runs_verbatim_shape(spark):
     transform.  The single documented rewrite applies: 1-arg
     TO_VARCHAR(x) -> CAST(x AS STRING) (Spark's to_varchar builtin
     demands a format and cannot be shadowed)."""
-    register_snowflake_compat(spark)
     src = spark.createDataFrame(
         [("t1", "r1", 0, dt.datetime(2024, 3, 4, 6)),
          ("t2", "r1", None, dt.datetime(2024, 3, 4, 6)),

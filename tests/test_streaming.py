@@ -1,6 +1,7 @@
 """Streaming RT path: exactly-once file ingest across restarts (A7
-semantics via checkpoint), watermarked windowed aggregation, and
-late/duplicate micro-batch behavior (SURVEY §5.2 item 4)."""
+semantics via checkpoint), late/duplicate micro-batch behavior
+(SURVEY §5.2 item 4), the timer-driven gap sessionizer and streaming
+KMV state."""
 
 from __future__ import annotations
 
@@ -12,8 +13,7 @@ from pyspark.sql import functions as F
 from tests import fixtures_gtfs
 from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse
 from tp_airflow_gtfs_snowflake_spark.streaming.rt_stream import (
-    read_feed_stream, start_bronze_ingest, windowed_position_counts,
-)
+    read_feed_stream, start_bronze_ingest)
 
 
 @pytest.fixture()
@@ -134,111 +134,6 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
         "ingest_epoch=7", "ingest_epoch=8", "ingest_epoch=9"}
 
 
-def test_windowed_counts_with_watermark(spark, landing, tmp_path):
-    snaps = fixtures_gtfs.make_feed_snapshots(3)
-    for i, s in enumerate(snaps):
-        _write_snapshot(landing, f"vp_20240304060{i}.json", s)
-    stream = read_feed_stream(spark, str(landing))
-    agg = windowed_position_counts(stream, window="5 minutes",
-                                   watermark="10 minutes")
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName("vp_windows")
-         .option("checkpointLocation", str(tmp_path / "ckpt2")).start())
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT * FROM vp_windows")
-    rows = out.collect()
-    assert rows and all(r.n_reports >= r.n_vehicles >= 1 for r in rows)
-    # fixture snapshots include out-of-order timestamps (up to 4 min
-    # early) -> they still land in their event-time window
-    total = sum(r.n_reports for r in rows)
-    assert total == 36  # 12 vehicles x 3 snapshots
-
-
-def test_session_windows_per_vehicle(spark, landing, tmp_path):
-    snaps = fixtures_gtfs.make_feed_snapshots(3)  # 2 min apart
-    for i, s in enumerate(snaps):
-        _write_snapshot(landing, f"vp_20240304060{i}.json", s)
-    from tp_airflow_gtfs_snowflake_spark.streaming.stateful import (
-        sessionized_vehicle_activity)
-    stream = read_feed_stream(spark, str(landing))
-    agg = sessionized_vehicle_activity(stream, gap="10 minutes",
-                                       watermark="15 minutes")
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName("vp_sessions")
-         .option("checkpointLocation", str(tmp_path / "ckpt_s")).start())
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM vp_sessions").collect()
-    # 6 distinct vehicle ids (V0..V5), reports 2 min apart with a 10 min
-    # gap -> exactly ONE session per vehicle spanning all its reports
-    assert len(rows) == 6
-    assert sum(r.n_reports for r in rows) == 36
-    assert all(r.session_end > r.session_start for r in rows)
-
-
-def test_stream_dedup_within_watermark(spark, landing, tmp_path):
-    snaps = fixtures_gtfs.make_feed_snapshots(1)
-    # same snapshot content re-delivered as two different files
-    _write_snapshot(landing, "vp_202403040600.json", snaps[0])
-    _write_snapshot(landing, "vp_202403040600_redelivery.json", snaps[0])
-    from tp_airflow_gtfs_snowflake_spark.streaming.stateful import (
-        deduped_position_reports)
-    stream = read_feed_stream(spark, str(landing))
-    dedup = deduped_position_reports(stream, watermark="15 minutes")
-    q = (dedup.writeStream.outputMode("append").format("memory")
-         .queryName("vp_dedup")
-         .option("checkpointLocation", str(tmp_path / "ckpt_d")).start())
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT vehicle_id, timestamp_epoch FROM vp_dedup")
-    total = out.count()
-    distinct = out.distinct().count()
-    assert total == distinct  # re-delivered reports dropped
-    # one snapshot has 12 reports but duplicate (vehicle,ts) pairs can
-    # occur within it too; dedup keeps exactly the distinct set
-    assert 1 <= total <= 12
-
-
-def test_vehicle_odometer_state_across_batches(spark, landing, tmp_path):
-    from tp_airflow_gtfs_snowflake_spark.streaming.stateful import (
-        vehicle_odometer)
-    snaps = fixtures_gtfs.make_feed_snapshots(2)
-
-    # One continuous query; files landed between processAllAvailable()
-    # calls arrive as separate micro-batches, so per-vehicle state must
-    # carry across them.  (The memory sink cannot restart from a
-    # checkpoint, so cross-restart recovery is covered by
-    # test_exactly_once_across_restart instead.)
-    stream = read_feed_stream(spark, str(landing))
-    q = (vehicle_odometer(stream).writeStream
-         .outputMode("update").format("memory").queryName("vp_odo")
-         .option("checkpointLocation", str(tmp_path / "ckpt_o")).start())
-
-    def snapshot_state():
-        # update-mode memory sink appends each batch's updated rows;
-        # the latest state per vehicle is the max report count.
-        rows = spark.sql(
-            "SELECT vehicle_id, max(n_reports) AS n_reports, "
-            "max(path_degrees) AS path_degrees "
-            "FROM vp_odo GROUP BY vehicle_id").collect()
-        return {r.vehicle_id: r for r in rows}
-
-    _write_snapshot(landing, "vp_202403040600.json", snaps[0])
-    q.processAllAvailable()
-    first = snapshot_state()
-    assert len(first) == 6  # V0..V5
-    assert all(r.n_reports >= 1 for r in first.values())
-
-    _write_snapshot(landing, "vp_202403040602.json", snaps[1])
-    q.processAllAvailable()
-    q.stop()
-    second = snapshot_state()
-    for vid, r in second.items():
-        assert r.n_reports > first[vid].n_reports
-        assert r.path_degrees >= first[vid].path_degrees
-
-
 def test_stream_static_dimension_join(spark, landing, tmp_path):
     """A24's sensor barrier disappears in the engine: a stream-static
     join against the routes dimension enriches RT rows as soon as the
@@ -266,161 +161,89 @@ def test_stream_static_dimension_join(spark, landing, tmp_path):
     assert all(r.route_long_name == f"Ligne {r.route_id[1:]}" for r in rows)
 
 
-def test_stream_stream_join_within_window(spark, landing, tmp_path):
+T0_US = 1_709_532_000_000_000  # 2024-03-04 06:00:00 UTC
+S_US = 1_000_000
+
+
+def _land_user_events(spark, landing: str, rows) -> None:
+    """Land one parquet file of ``(user_id, ts)`` events; ``rows`` are
+    ``(user_id, ts_us)`` pairs."""
+    (spark.createDataFrame(rows, "user_id long, ts_us long")
+     .select("user_id", F.timestamp_micros("ts_us").alias("ts"))
+     .coalesce(1).write.mode("append").parquet(landing))
+
+
+def _user_sessions_to_memory(spark, landing: str, name: str, ckpt: str):
+    """timed_out_user_sessions (gap 300 s) over the parquet files in
+    ``landing``, appended to the memory table ``name``."""
     from tp_airflow_gtfs_snowflake_spark.streaming.stateful import (
-        trip_position_attribution)
-    snaps = fixtures_gtfs.make_feed_snapshots(3)  # 2 min apart
-    for i, s in enumerate(snaps):
-        _write_snapshot(landing, f"vp_20240304060{i}.json", s)
-    stream = read_feed_stream(spark, str(landing))
-    joined = trip_position_attribution(stream, join_window_seconds=300)
-    q = (joined.writeStream.outputMode("append").format("memory")
-         .queryName("vp_attrib")
-         .option("checkpointLocation", str(tmp_path / "ckpt_ss")).start())
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM vp_attrib").collect()
-    assert rows, "expected matches: same vehicles report 2 min apart"
-    for r in rows:
-        delta = (r.cur_ts - r.prev_ts).total_seconds()
-        assert 0 < delta <= 300
+        timed_out_user_sessions)
+    stream = (spark.readStream.schema("user_id long, ts timestamp")
+              .parquet(landing))
+    out = timed_out_user_sessions(stream, gap_seconds=300,
+                                  watermark="5 seconds")
+    return (out.writeStream.outputMode("append").format("memory")
+            .queryName(name).option("checkpointLocation", ckpt).start())
 
 
-def test_stream_stream_left_outer_emits_after_watermark(
-        spark, landing, tmp_path):
-    """Left-outer stream-stream join: reports with no prior fix inside
-    the join window must surface with NULL prior columns — but only
-    once the watermark proves no match can still arrive.  Files feed
-    one per micro-batch so the watermark advances between batches and
-    the eviction actually happens inside the test."""
-    from tp_airflow_gtfs_snowflake_spark.streaming.stateful import (
-        trip_position_attribution)
-    snaps = fixtures_gtfs.make_feed_snapshots(3)  # 2 min apart
-    for i, s in enumerate(snaps):
-        _write_snapshot(landing, f"vp_20240304060{i}.json", s)
-    stream = read_feed_stream(spark, str(landing), max_files_per_trigger=1)
-    # 60 s window < 120 s snapshot cadence: cross-snapshot reports
-    # mostly miss (per-vehicle jitter lets a few land inside), so
-    # null-extended rows MUST appear once evictable
-    joined = trip_position_attribution(
-        stream, join_window_seconds=60, watermark="1 minute",
-        how="left_outer")
-    q = (joined.writeStream.outputMode("append").format("memory")
-         .queryName("vp_outer")
-         .option("checkpointLocation", str(tmp_path / "ckpt_so")).start())
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM vp_outer").collect()
-    assert rows, "watermark advanced past early batches; expected emissions"
-    nulls = [r for r in rows if r.prev_ts is None]
-    assert nulls, "unmatched reports must surface null-extended"
-    for r in rows:
-        if r.prev_ts is not None:
-            assert 0 < (r.cur_ts - r.prev_ts).total_seconds() <= 60
-
-
-def test_timed_out_session_emission(spark, landing, tmp_path):
+def test_timed_out_session_emission(spark, tmp_path):
     """EventTimeTimeout timers: sessions are emitted exactly once,
     when the watermark crosses last_event+gap — idle keys are closed
     by OTHER traffic advancing the watermark."""
-    import json
-
-    from tp_airflow_gtfs_snowflake_spark.streaming.stateful import (
-        timed_out_sessions)
-
-    t0 = 1709532000  # 2024-03-04 06:00:00 UTC
-
-    def snap(entities):
-        return json.dumps({"entity": entities})
-
-    def veh(eid, vid, epoch):
-        return {"id": eid, "vehicle": {
-            "trip": {"trip_id": "t", "route_id": "R0"},
-            "position": {"latitude": 43.7, "longitude": 7.27},
-            "vehicle": {"id": vid}, "timestamp": epoch}}
-
-    stream = read_feed_stream(spark, str(landing))
-    out = timed_out_sessions(stream, gap_seconds=300,
-                             watermark="5 seconds")
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("vp_timeout_sessions")
-         .option("checkpointLocation", str(tmp_path / "ckpt_t")).start())
-
-    # batch 1: V0 twice, V1 once
-    _write_snapshot(landing, "vp_1.json", snap(
-        [veh("a", "V0", t0), veh("b", "V0", t0 + 60),
-         veh("c", "V1", t0)]))
+    landing = str(tmp_path / "landing")
+    # batch 1: user 0 twice, user 1 once
+    _land_user_events(spark, landing, [
+        (0, T0_US), (0, T0_US + 60 * S_US), (1, T0_US)])
+    q = _user_sessions_to_memory(spark, landing, "timeout_sessions",
+                                 str(tmp_path / "ckpt_t"))
     q.processAllAvailable()
-    # batch 2: unrelated V9 an hour later -> advances the watermark
-    _write_snapshot(landing, "vp_2.json",
-                    snap([veh("d", "V9", t0 + 3600)]))
+    # batch 2: unrelated user 9 an hour later -> advances the watermark
+    _land_user_events(spark, landing, [(9, T0_US + 3600 * S_US)])
     q.processAllAvailable()
     # batch 3: timers fire with the batch-2 watermark (event-time
     # timeouts use the watermark computed from the PREVIOUS batch)
-    _write_snapshot(landing, "vp_3.json",
-                    snap([veh("e", "V9", t0 + 3700)]))
+    _land_user_events(spark, landing, [(9, T0_US + 3700 * S_US)])
     q.processAllAvailable()
     q.stop()
 
-    rows = {r.vehicle_id: r for r in
-            spark.sql("SELECT * FROM vp_timeout_sessions").collect()}
-    assert set(rows) == {"V0", "V1"}  # V9's session still open
-    assert rows["V0"].session_start == t0
-    assert rows["V0"].session_end == t0 + 60
-    assert rows["V0"].n_reports == 2
-    assert rows["V1"].n_reports == 1
+    rows = {r.user_id: r for r in
+            spark.sql("SELECT * FROM timeout_sessions").collect()}
+    assert set(rows) == {0, 1}  # user 9's session still open
+    assert rows[0].session_start_us == T0_US
+    assert rows[0].session_end_us == T0_US + 60 * S_US
+    assert rows[0].n_events == 2
+    assert rows[1].n_events == 1
 
 
-def test_timed_out_session_intra_batch_gap_split(spark, landing, tmp_path):
+def test_timed_out_session_intra_batch_gap_split(spark, tmp_path):
     """Events for one key arriving in the SAME micro-batch but > gap
     apart (the availableNow/backlog catch-up shape) must yield two
     sessions — the first closed by in-batch data, not silently merged
     into the carried state (round-3 advice regression)."""
-    import json
-
-    from tp_airflow_gtfs_snowflake_spark.streaming.stateful import (
-        timed_out_sessions)
-
-    t0 = 1709532000
-
-    def snap(entities):
-        return json.dumps({"entity": entities})
-
-    def veh(eid, vid, epoch):
-        return {"id": eid, "vehicle": {
-            "trip": {"trip_id": "t", "route_id": "R0"},
-            "position": {"latitude": 43.7, "longitude": 7.27},
-            "vehicle": {"id": vid}, "timestamp": epoch}}
-
-    stream = read_feed_stream(spark, str(landing))
-    out = timed_out_sessions(stream, gap_seconds=300,
-                             watermark="5 seconds")
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("vp_gap_split")
-         .option("checkpointLocation", str(tmp_path / "ckpt_g")).start())
-
-    # ONE batch: V0 has a burst at t0..t0+60, then a second burst a
-    # full hour later (>> gap) — backlog catch-up in a single batch.
-    _write_snapshot(landing, "vp_1.json", snap(
-        [veh("a", "V0", t0), veh("b", "V0", t0 + 60),
-         veh("c", "V0", t0 + 3600), veh("d", "V0", t0 + 3660)]))
+    landing = str(tmp_path / "landing")
+    # ONE batch: user 0 has a burst at t0..t0+60, then a second burst
+    # a full hour later (>> gap) — backlog catch-up in a single batch.
+    _land_user_events(spark, landing, [
+        (0, T0_US), (0, T0_US + 60 * S_US),
+        (0, T0_US + 3600 * S_US), (0, T0_US + 3660 * S_US)])
+    q = _user_sessions_to_memory(spark, landing, "gap_split",
+                                 str(tmp_path / "ckpt_g"))
     q.processAllAvailable()
     # advance the watermark so the SECOND session's timer fires too
-    _write_snapshot(landing, "vp_2.json",
-                    snap([veh("e", "V9", t0 + 8000)]))
+    _land_user_events(spark, landing, [(9, T0_US + 8000 * S_US)])
     q.processAllAvailable()
-    _write_snapshot(landing, "vp_3.json",
-                    snap([veh("f", "V9", t0 + 8100)]))
+    _land_user_events(spark, landing, [(9, T0_US + 8100 * S_US)])
     q.processAllAvailable()
     q.stop()
 
     rows = sorted(
-        (r for r in spark.sql("SELECT * FROM vp_gap_split").collect()
-         if r.vehicle_id == "V0"),
-        key=lambda r: r.session_start)
-    assert [(r.session_start, r.session_end, r.n_reports)
-            for r in rows] == [(t0, t0 + 60, 2),
-                               (t0 + 3600, t0 + 3660, 2)]
+        (r for r in spark.sql("SELECT * FROM gap_split").collect()
+         if r.user_id == 0),
+        key=lambda r: r.session_start_us)
+    assert [(r.session_start_us, r.session_end_us, r.n_events)
+            for r in rows] == [
+        (T0_US, T0_US + 60 * S_US, 2),
+        (T0_US + 3600 * S_US, T0_US + 3660 * S_US, 2)]
 
 
 def test_streaming_kmv_accumulation_equals_batch(spark, landing, tmp_path):
@@ -595,7 +418,7 @@ def test_max_files_per_trigger_bounds_batches(spark, landing, tmp_path):
 
 
 def test_merge_gap_intervals_shared_helper():
-    """The extracted gap-merge used by both timeout sessionizers:
+    """The gap merge of the timeout sessionizer:
     adjacency at exactly the gap merges, one past it splits; counts
     accumulate; input order does not matter."""
     from tp_airflow_gtfs_snowflake_spark.streaming.stateful import (
@@ -620,21 +443,17 @@ def test_watermark_jump_emits_stale_session_instead_of_crashing(
     the query dies (observed in the b136 driver when a sentinel and
     phase-2 files landed in adjacent polls).  The sessionizer must
     instead emit the provably-closed trailing session eagerly."""
-    from pyspark.sql import functions as F
-
     from tp_airflow_gtfs_snowflake_spark.streaming.stateful import (
         timed_out_user_sessions)
 
-    t0_us = 1_709_532_000_000_000
-    gap_us = 300 * 1_000_000
+    t0_us = T0_US
+    gap_us = 300 * S_US
     landing = str(tmp_path / "landing")
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
 
     def land(rows):
-        (spark.createDataFrame(rows, "user_id long, ts_us long")
-         .select("user_id", F.timestamp_micros("ts_us").alias("ts"))
-         .coalesce(1).write.mode("append").parquet(landing))
+        _land_user_events(spark, landing, rows)
 
     def drain(max_files=None):
         reader = spark.readStream.schema("user_id long, ts timestamp")
@@ -691,8 +510,8 @@ def test_timer_at_watermark_equality_is_legal():
     must stay armed, because a next-batch event at ts == end + gap
     passes the lagging late filter and extends the session under the
     gap<= merge rule.  If a future PySpark makes equality illegal,
-    this fails first and the clamp in stateful._gap_sessions must
-    revert to `<=`."""
+    this fails first and the clamp in
+    stateful.timed_out_user_sessions must revert to `<=`."""
     import pytest
     from pyspark.sql import Row
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout

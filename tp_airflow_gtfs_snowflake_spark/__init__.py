@@ -16,7 +16,8 @@ Layout:
                multimodal binary columns
   plans/     - KPI queries (SURVEY 2.3 B1-B13) + driver-table query
                registry backing __spark_entry__.py
-  streaming/ - Structured Streaming RT path (watermarks, foreachBatch)
+  streaming/ - Structured Streaming RT path: file-source ingest via
+               foreachBatch, timer-driven gap sessionizer, KMV state
 """
 
 __version__ = "0.1.0"

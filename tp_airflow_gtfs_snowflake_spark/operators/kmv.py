@@ -49,6 +49,12 @@ def portable_hash48(col: Column) -> Column:
             .cast("long"))
 
 
+# portable_hash48 in DuckDB SQL, for oracles: format ``{c}`` with the
+# SQL expression to hash.
+PORTABLE_HASH48_SQL = ("CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), "
+                       "1, 12) AS BIGINT)")
+
+
 def kmv_partials(df: DataFrame, group_col: str, hash_col: str,
                  k: int = 128) -> DataFrame:
     """Per-partition partial sketches: <= k smallest distinct hashes

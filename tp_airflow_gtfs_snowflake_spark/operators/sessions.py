@@ -3,9 +3,10 @@
 A session breaks where the gap between a user's consecutive events
 exceeds ``gap_seconds``.  One per-user shuffle does the work (window
 lag, running sum of break flags, one aggregate per session); the
-registry's batch session query (b115) runs it.  The incremental sessionizer
-is streaming/stateful.py's GroupState gap sessionizer (b136), which
-closes a session when the event-time watermark passes its gap.
+registry's batch session query (b115) runs it.  The incremental
+sessionizer is streaming/stateful.timed_out_user_sessions (b136), a
+GroupState operator that closes a session when the event-time
+watermark passes its gap.
 """
 
 from __future__ import annotations

@@ -919,10 +919,8 @@ def c11_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
     FROM events GROUP BY 1, 2
     """,
-    "B5 tumbling event-time windows in batch mode (F.window; the "
-    "streaming flavor with watermarks is windowed_position_counts in "
-    "streaming/rt_stream.py) — hour buckets align on the epoch in "
-    "both engines",
+    "B5 tumbling event-time windows in batch mode (F.window) — hour "
+    "buckets align on the epoch in both engines",
 )
 def b25_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -1768,9 +1766,9 @@ def q22_dormant_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch sessionization (gaps-and-islands): 30-minute-gap sessions "
     "via lag + running sum of session starts, then one aggregate per "
     "session.  ONE shuffle on user_id serves both window passes and "
-    "pre-partitions the final groupBy; the streaming twin (native "
-    "session_window with watermark) is sessionized_vehicle_activity "
-    "in streaming/stateful.py",
+    "pre-partitions the final groupBy; the streaming twin (GroupState "
+    "timers closing a session once the watermark passes its gap) is "
+    "b136's timed_out_user_sessions in streaming/stateful.py",
 )
 def b29_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")

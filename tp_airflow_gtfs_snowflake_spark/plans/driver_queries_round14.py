@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from tp_airflow_gtfs_snowflake_spark.operators.kmv import (
+    PORTABLE_HASH48_SQL as _H48)
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import (
     _register, _t)
 
@@ -470,8 +472,6 @@ _RF_K = 4          # salted portable hashes (independent, not affine:
 _RF_LO = "1997-01-01"
 _RF_HI = "1998-01-01"
 
-_RF_H48 = "CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), 1, 12) AS BIGINT)"
-
 
 @_register(
     "b170_runtime_filter_reduction_audit",
@@ -487,13 +487,13 @@ _RF_H48 = "CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), 1, 12) AS BIGINT)"
     ), js AS (SELECT unnest(range(0, {_RF_K})) AS j),
     bits AS (
       SELECT DISTINCT
-             {_RF_H48.format(c="CAST(j AS VARCHAR) || '#' || key")}
+             {_H48.format(c="CAST(j AS VARCHAR) || '#' || key")}
                % {_RF_M} AS pos
       FROM build CROSS JOIN js
     ), pm AS (
       SELECT key, min(nrows) AS nrows,
              sum(CASE WHEN
-                 {_RF_H48.format(c="CAST(j AS VARCHAR) || '#' || key")}
+                 {_H48.format(c="CAST(j AS VARCHAR) || '#' || key")}
                    % {_RF_M} IN (SELECT pos FROM bits)
                  THEN 1 ELSE 0 END) AS nset
       FROM probe CROSS JOIN js GROUP BY key

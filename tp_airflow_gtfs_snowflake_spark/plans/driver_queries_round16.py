@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from tp_airflow_gtfs_snowflake_spark.operators.kmv import (
+    PORTABLE_HASH48_SQL as _H48, portable_hash48)
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import (
     _register, _t)
 
@@ -175,10 +177,6 @@ _FB_M = 1024               # bloom bits per file
 _FB_K = 3                  # salted portable hashes
 _FB_PROBES = 20
 
-_FB_H48 = ("CAST(conv(substring(md5(CAST({c} AS STRING)), 1, 12), "
-           "16, 10) AS BIGINT)")
-_FB_H48_DUCK = "CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), 1, 12) AS BIGINT)"
-
 
 @_register(
     "b175_file_bloom_index_audit",
@@ -192,7 +190,7 @@ _FB_H48_DUCK = "CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), 1, 12) AS BIGINT)
       FROM keys GROUP BY 1
     ), bits AS (
       SELECT DISTINCT fid,
-             {_FB_H48_DUCK.format(c="j || '#' || key")} % {_FB_M} AS pos
+             {_H48.format(c="j || '#' || key")} % {_FB_M} AS pos
       FROM keys CROSS JOIN (SELECT unnest([0, 1, 2]) AS j)
     ), probes AS (
       SELECT i AS probe_id,
@@ -201,7 +199,7 @@ _FB_H48_DUCK = "CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), 1, 12) AS BIGINT)
       FROM (SELECT unnest(range(1, {_FB_PROBES + 1})) AS i)
     ), ppos AS (
       SELECT DISTINCT probe_id, key,
-             {_FB_H48_DUCK.format(c="j || '#' || key")} % {_FB_M} AS pos
+             {_H48.format(c="j || '#' || key")} % {_FB_M} AS pos
       FROM probes CROSS JOIN (SELECT unnest([0, 1, 2]) AS j)
     ), pneed AS (
       SELECT probe_id, count(*) AS n_pos FROM ppos GROUP BY 1
@@ -252,7 +250,7 @@ def b175_file_bloom_index_audit(spark: SparkSession,
                                    F.max("key").alias("mx"))
 
     def positions(df: DataFrame, extra: list) -> DataFrame:
-        pos = [F.expr(_FB_H48.format(c=f"concat('{j}', '#', key)"))
+        pos = [portable_hash48(F.concat(F.lit(f"{j}#"), F.col("key")))
                % _FB_M for j in range(_FB_K)]
         return (df.select(*extra, "key",
                           F.explode(F.array(*pos)).alias("pos"))

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from tp_airflow_gtfs_snowflake_spark.operators.kmv import (
+    PORTABLE_HASH48_SQL as _H48, portable_hash48)
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import (
     _register, _t)
 
@@ -264,10 +266,6 @@ def b177_merge_plan_execution_proof(spark: SparkSession,
 # ---------------------------------------------------------------------
 
 _LS_NULL_K = 5             # hash-null partition arity (~|label classes|)
-_LS_H48 = ("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 12), "
-           "16, 10) AS BIGINT)")
-_LS_H48_DUCK = ("CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), "
-                "1, 12) AS BIGINT)")
 
 
 @_register(
@@ -275,7 +273,7 @@ _LS_H48_DUCK = ("CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), "
     f"""
     WITH d AS (
       SELECT doc_id, lang,
-             'h' || CAST({_LS_H48_DUCK} % {_LS_NULL_K} AS VARCHAR)
+             'h' || CAST({_H48.format(c='doc_id')} % {_LS_NULL_K} AS VARCHAR)
                AS pseudo,
              string_split_regex(trim(lower(text)), ' +') AS toks
       FROM documents
@@ -341,7 +339,8 @@ def c142_label_signal_ceiling(spark: SparkSession,
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang",
         F.concat(F.lit("h"),
-                 (F.expr(_LS_H48) % _LS_NULL_K).cast("string"))
+                 (portable_hash48(F.col("doc_id")) % _LS_NULL_K)
+                 .cast("string"))
         .alias("pseudo"),
         F.split(F.trim(F.lower(F.col("text"))), " +").alias("toks"))
     docs_m = docs.groupBy("lang", "pseudo").agg(

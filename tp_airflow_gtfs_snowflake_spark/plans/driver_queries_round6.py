@@ -374,8 +374,8 @@ def c85_feature_hash_bow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("word"))
     return (w.filter(F.col("word") != "")
             .select("doc_id",
-                    (F.conv(F.substring(F.md5("word"), 1, 12), 16, 10)
-                     .cast("long") % 16).alias("dim"))
+                    (_kmv.portable_hash48(F.col("word")) % 16)
+                    .alias("dim"))
             .groupBy("doc_id", "dim")
             .agg(F.count("*").cast("long").alias("cnt"))
             .select(F.col("doc_id").cast("long").alias("doc_id"),
@@ -1568,9 +1568,8 @@ _POIS_CASE_SQL = ("CASE " + " ".join(
 def c95_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     reps = F.explode(F.sequence(F.lit(0), F.lit(15))).alias("r")
-    u_expr = (F.conv(F.substring(F.md5(
-        F.concat_ws("-", F.col("doc_id"), F.col("r"))), 1, 12), 16, 10)
-        .cast("long"))
+    u_expr = _kmv.portable_hash48(
+        F.concat_ws("-", F.col("doc_id"), F.col("r")))
     w_expr = F.lit(8)
     for k in range(len(_POIS_T) - 1, -1, -1):
         w_expr = F.when(F.col("u") < _POIS_T[k], k).otherwise(w_expr)

@@ -1286,9 +1286,9 @@ def b141_countmin_frequency(spark: SparkSession,
         F.explode(F.sequence(F.lit(0), F.lit(3))).alias("r"))
         .withColumn(
             "b",
-            F.pmod(F.conv(F.substring(F.md5(
-                F.concat_ws(":", F.col("r"), F.col("user_id"))), 1, 12),
-                16, 10).cast("long"), F.lit(256)).cast("long")))
+            F.pmod(_kmv.portable_hash48(
+                F.concat_ws(":", F.col("r"), F.col("user_id"))),
+                F.lit(256)).cast("long")))
     counters = (hashes.groupBy("r", "b")
                 .agg(F.sum("n").cast("long").alias("cnt")))
     est = (hashes.join(counters, ["r", "b"])

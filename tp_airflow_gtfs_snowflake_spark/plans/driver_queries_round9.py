@@ -37,14 +37,13 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from tp_airflow_gtfs_snowflake_spark.functions.vectors import cosine
-from tp_airflow_gtfs_snowflake_spark.operators.kmv import portable_hash48
+from tp_airflow_gtfs_snowflake_spark.operators.kmv import (
+    PORTABLE_HASH48_SQL as _H48, portable_hash48)
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries import (
     _register, _t)
 from tp_airflow_gtfs_snowflake_spark.plans.driver_queries_round8 import (
     _two_phase_stream)
 
-# Portable hash idiom shared by every oracle in this module.
-_H48 = "CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), 1, 12) AS BIGINT)"
 
 # ---------------------------------------------------------------------
 # b144: Bloom-filter membership sketch + false-positive audit

@@ -70,15 +70,16 @@ FEED_MESSAGE = T.StructType([
 ])
 
 
-def parse_feed_json(df: DataFrame, json_col: str = "feed_json") -> DataFrame:
-    """JSON feed snapshot -> nested FeedMessage rows (native from_json)."""
-    return df.withColumn("feed", F.from_json(F.col(json_col), FEED_MESSAGE))
+def parse_feed_json(df: DataFrame) -> DataFrame:
+    """JSON feed snapshots in column ``feed_json`` -> nested
+    FeedMessage rows in column ``feed`` (native from_json)."""
+    return df.withColumn("feed", F.from_json(F.col("feed_json"), FEED_MESSAGE))
 
 
-def parse_feed_protobuf(spark: SparkSession, df: DataFrame,
-                        pb_col: str = "content") -> DataFrame:
-    """Protobuf FeedMessage bytes -> nested rows (A4, the reference's
-    actual wire format: gtfs_rt_minutely.py:37-41,79,137).
+def parse_feed_protobuf(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Protobuf FeedMessage bytes in column ``content`` -> nested rows
+    (A4, the reference's actual wire format:
+    gtfs_rt_minutely.py:37-41,79,137).
 
     Decodes with the minimal pure-Python wire-format parser in
     sources/gtfs_rt_pb.py (public field numbers from
@@ -99,15 +100,13 @@ def parse_feed_protobuf(spark: SparkSession, df: DataFrame,
             decode_feed_message)
         for pdf in batches:
             msgs = [json.dumps(decode_feed_message(bytes(raw)))
-                    for raw in pdf[pb_col]]
+                    for raw in pdf["content"]]
             yield pd.DataFrame({"feed_json": msgs})
 
     return parse_feed_json(df.mapInPandas(decode, out_schema))
 
 
-def flatten_trip_updates(feed: DataFrame,
-                         snapshot_col: str | None = None
-                         ) -> tuple[DataFrame, DataFrame]:
+def flatten_trip_updates(feed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """One FeedMessage row -> (trip_updates_raw, trip_stop_times).
 
     reference: gtfs_rt_minutely.py:83-109 — the seen_trips guard gates
@@ -117,17 +116,15 @@ def flatten_trip_updates(feed: DataFrame,
     (`:103-109`) — duplicate-trip entities and entities whose trip_id
     is null/empty still contribute stop rows (`trip_id or None` at
     `:93` maps empty string to NULL).  Dedup is scoped per feed
-    snapshot (one FeedMessage = one snapshot), so a DataFrame holding
+    snapshot (one FeedMessage = one snapshot, told apart by a
+    monotonically_increasing_id per feed row), so a DataFrame holding
     several snapshots dedups headers within each, not across.
 
     dropDuplicates is nondeterministic across partitions (SURVEY §7
     hard parts) -> rank by the entity's position in the feed.
     """
-    if snapshot_col is None:
-        feed = feed.withColumn("_snap", F.monotonically_increasing_id())
-        snapshot_col = "_snap"
-    ent = feed.select(F.col(snapshot_col).alias("_snap"),
-                      F.posexplode("feed.entity").alias("_pos", "e"))
+    ent = (feed.withColumn("_snap", F.monotonically_increasing_id())
+           .select("_snap", F.posexplode("feed.entity").alias("_pos", "e")))
     tu = (ent.filter(F.col("e.trip_update").isNotNull())
           .withColumn("trip_id",
                       F.nullif(F.col("e.trip_update.trip.trip_id"),

@@ -14,14 +14,12 @@ Replaces the reference's 2-minute cron + PUT/COPY/PURGE loop
 
 Scale: file-source listing is O(files) per trigger — at production
 scale set `maxFilesPerTrigger` and archive consumed snapshots to keep
-the listing bounded; state-store size for the windowed aggs is bounded
-by the watermark horizon.
+the listing bounded.  The ingest is stateless: no state store.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tp_airflow_gtfs_snowflake_spark.catalog import Warehouse, concurrently
@@ -96,19 +94,3 @@ def start_bronze_ingest(spark: SparkSession, landing_dir: str, wh: Warehouse,
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
 
-
-def windowed_position_counts(feed_stream: DataFrame, *,
-                             window: str = "5 minutes",
-                             watermark: str = "10 minutes") -> DataFrame:
-    """B5 streaming flavor: per-route vehicle-report counts in tumbling
-    event-time windows with late-data watermarking (the reference only
-    acknowledges late/incomplete feeds, README.md:137-138; the engine
-    handles them natively)."""
-    vp = flatten_vehicle_positions(parse_feed_json(feed_stream))
-    return (vp.withColumn("ts", F.timestamp_seconds("timestamp_epoch"))
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window).alias("w"), "route_id")
-            .agg(F.count("*").alias("n_reports"),
-                 F.approx_count_distinct("vehicle_id").alias("n_vehicles"))
-            .select(F.col("w.start").alias("window_start"), "route_id",
-                    "n_reports", "n_vehicles"))

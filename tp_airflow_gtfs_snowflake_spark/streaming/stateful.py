@@ -1,184 +1,29 @@
-"""Stateful / advanced streaming operators (SURVEY M5 beyond the
-basics): session windows, in-stream dedup, a stream-stream join, and
-custom stateful operators via applyInPandasWithState.
+"""Timer-driven gap sessionization of an event stream (SURVEY M5
+beyond the basics), the stateful operator b136 runs.
 
-The reference never gets past permissive loads for late or duplicate
-feed data (README.md:137-138); these are the Structured-Streaming-
-native treatments:
+A session breaks where the gap between a user's consecutive events
+exceeds ``gap_seconds``, the streaming twin of the batch
+gaps-and-islands spec (operators/sessions.py, b29/b115).
+applyInPandasWithState holds each user's open session across
+micro-batches and closes it with an event-time timer
+(EventTimeTimeout) once the watermark passes its gap; it runs without
+the protobuf package that transformWithState needs.
 
-- session windows bound gap-based activity without a fixed grid;
-- dropDuplicatesWithinWatermark removes re-sent reports while keeping
-  dedup state bounded by the watermark horizon (a plain
-  dropDuplicates on a stream grows state forever);
-- applyInPandasWithState holds per-key state across micro-batches for
-  logic no built-in aggregate expresses: the per-vehicle odometer
-  (cumulative report count + path length from successive positions)
-  and one timer-driven gap sessionizer (EventTimeTimeout), keyed by
-  vehicle in seconds or by user in microseconds.
-
-Each operator has one implementation: applyInPandasWithState is
-Spark's keyed state update with event-time timeouts, and it runs
-without the protobuf package that transformWithState needs.
-
-Scale notes: each operator shuffles on its key exactly once per
+Scale notes: the operator shuffles on its key exactly once per
 micro-batch; state lives in the executor state store (RocksDB-backed
-in production) and is bounded by watermark/timeout, so a 1000-executor
+in production) and is bounded by the timeout, so a 1000-executor
 cluster shards state by key range with no driver involvement.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType,
-)
-
-from tp_airflow_gtfs_snowflake_spark.sources.gtfs_rt import (
-    flatten_vehicle_positions, parse_feed_json,
-)
-
-
-def _positions(feed_stream: DataFrame) -> DataFrame:
-    vp = flatten_vehicle_positions(parse_feed_json(feed_stream))
-    return vp.withColumn("ts", F.timestamp_seconds("timestamp_epoch"))
-
-
-def sessionized_vehicle_activity(feed_stream: DataFrame, *,
-                                 gap: str = "10 minutes",
-                                 watermark: str = "15 minutes") -> DataFrame:
-    """Per-vehicle activity sessions: reports closer than `gap` merge
-    into one session (dynamic-width windows — the 'trip burst' view a
-    fixed tumbling grid can't express)."""
-    return (_positions(feed_stream)
-            .withWatermark("ts", watermark)
-            .groupBy(F.session_window("ts", gap).alias("s"), "vehicle_id")
-            .agg(F.count("*").alias("n_reports"))
-            .select("vehicle_id",
-                    F.col("s.start").alias("session_start"),
-                    F.col("s.end").alias("session_end"),
-                    "n_reports"))
-
-
-def deduped_position_reports(feed_stream: DataFrame, *,
-                             watermark: str = "15 minutes") -> DataFrame:
-    """Drop re-delivered (vehicle_id, timestamp) reports with state
-    bounded by the watermark — the streaming analogue of the
-    reference's first-wins snapshot dedup (gtfs_rt_minutely.py:98-100),
-    which only deduped *within* one snapshot and silently kept
-    cross-snapshot duplicates."""
-    return (_positions(feed_stream)
-            .withWatermark("ts", watermark)
-            .dropDuplicatesWithinWatermark(["vehicle_id", "timestamp_epoch"]))
-
-
-ODOMETER_SCHEMA = StructType([
-    StructField("vehicle_id", StringType()),
-    StructField("n_reports", LongType()),
-    StructField("path_degrees", DoubleType()),
-    StructField("last_lat", DoubleType()),
-    StructField("last_lon", DoubleType()),
-])
-
-_ODO_STATE = StructType([
-    StructField("n", LongType()),
-    StructField("dist", DoubleType()),
-    StructField("lat", DoubleType()),
-    StructField("lon", DoubleType()),
-])
-
-
-def vehicle_odometer(feed_stream: DataFrame, *,
-                     watermark: str = "15 minutes") -> DataFrame:
-    """Custom stateful operator: per-vehicle cumulative report count
-    and coordinate-space path length across micro-batches.
-
-    No built-in streaming aggregate can reference the PREVIOUS row's
-    value (the position delta), so this is the applyInPandasWithState
-    slot: state = (n, dist, last position), updated in event order
-    within each batch.  Distance is in coordinate degrees — swap in a
-    haversine for meters; the state machinery is the point here.
-
-    Known limit of the one-pass state design (all pairwise-delta
-    streaming accumulators share it): a late event arriving in a
-    LATER batch — legal under the watermark — folds against the
-    already-advanced last position, so its delta is measured from
-    the newer point rather than its true neighbors.  Within a batch,
-    rows are sorted by event time first; exact late-data reordering
-    needs a buffer-until-watermark design (the session_window /
-    watermarked-aggregation route) rather than per-row folding.
-    """
-
-    def update(key: tuple[str], pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, dist, lat, lon = state.get
-        else:
-            n, dist, lat, lon = 0, 0.0, None, None
-        for pdf in pdfs:
-            pdf = pdf.sort_values("timestamp_epoch")
-            for _, row in pdf.iterrows():
-                if lat is not None:
-                    dist += float(((row.latitude - lat) ** 2
-                                   + (row.longitude - lon) ** 2) ** 0.5)
-                lat, lon = float(row.latitude), float(row.longitude)
-                n += 1
-        state.update((n, dist, lat, lon))
-        yield pd.DataFrame([{"vehicle_id": key[0], "n_reports": n,
-                             "path_degrees": dist,
-                             "last_lat": lat, "last_lon": lon}])
-
-    pos = _positions(feed_stream).select(
-        "vehicle_id", "timestamp_epoch", "latitude", "longitude", "ts")
-    return (pos.withWatermark("ts", watermark)
-            .groupBy("vehicle_id")
-            .applyInPandasWithState(
-                update, ODOMETER_SCHEMA, _ODO_STATE, "update",
-                GroupStateTimeout.NoTimeout))
-
-
-def trip_position_attribution(feed_stream: DataFrame, *,
-                              join_window_seconds: int = 300,
-                              watermark: str = "15 minutes",
-                              how: str = "inner") -> DataFrame:
-    """Watermarked stream-stream self-join: for each position report,
-    the SAME vehicle's earlier reports within the last
-    join_window_seconds (movement attribution — which prior fix does a
-    report follow).
-
-    Both sides carry a watermark and the join predicate bounds event
-    time on both ends, so each side's state store holds only the
-    window horizon — the required shape for an unbounded stream-stream
-    join (an unbounded predicate would grow state forever).
-
-    how='left_outer' additionally emits each report with NULL prior
-    columns once the watermark proves no match can arrive — the
-    streaming analogue of a batch left join, with emission delayed by
-    (window + watermark) event time.
-    """
-    base = _positions(feed_stream).withWatermark("ts", watermark)
-    cur = base.select(F.col("vehicle_id").alias("v"),
-                      F.col("ts").alias("cur_ts"),
-                      F.col("latitude").alias("cur_lat"),
-                      F.col("longitude").alias("cur_lon"))
-    prev = base.select(F.col("vehicle_id").alias("pv"),
-                       F.col("ts").alias("prev_ts"),
-                       F.col("latitude").alias("prev_lat"),
-                       F.col("longitude").alias("prev_lon"))
-    cond = ((F.col("v") == F.col("pv"))
-            & (F.col("prev_ts") < F.col("cur_ts"))
-            & (F.col("prev_ts") >= F.col("cur_ts")
-               - F.expr(f"INTERVAL {join_window_seconds} SECONDS")))
-    return (cur.join(prev, cond, how)
-            .select("v", "cur_ts", "prev_ts",
-                    (F.abs(F.col("cur_lat") - F.col("prev_lat"))
-                     + F.abs(F.col("cur_lon") - F.col("prev_lon")))
-                    .alias("l1_move")))
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def _merge_gap_intervals(intervals: list[list[int]],
@@ -203,17 +48,42 @@ _GAP_SESSION_STATE = StructType([
 ])
 
 
-def _gap_sessions(events: DataFrame, time_col: str,
-                  units_per_second: int, gap_seconds: int,
-                  watermark: str, schema: StructType) -> DataFrame:
-    """Timer-driven gap sessionization of ``events`` via
-    applyInPandasWithState with EventTimeTimeout.  Emits ``schema``'s
-    four columns: key, session start, session end, event count;
-    ``events`` carries the key column under the same name, integer
-    ``time_col`` in 1/units_per_second and the watermark column
-    ``ts``.  State per key is the open session, three longs."""
-    gap = gap_seconds * units_per_second
-    names = schema.fieldNames()
+USER_SESSION_SCHEMA = StructType([
+    StructField("user_id", LongType()),
+    StructField("session_start_us", LongType()),
+    StructField("session_end_us", LongType()),
+    StructField("n_events", LongType()),
+])
+
+
+def timed_out_user_sessions(events_stream: DataFrame, *,
+                            gap_seconds: int = 1800,
+                            watermark: str = "1 second") -> DataFrame:
+    """TIMER-driven sessionization of a ``(user_id long, ts
+    timestamp)`` event stream, at microsecond precision (so its output
+    is comparable against the batch gaps-and-islands spec, b29): emits
+    ``USER_SESSION_SCHEMA`` rows, one per session, exactly once.
+
+    Each user re-arms ``setTimeoutTimestamp(end + gap)`` on every
+    update; when the watermark crosses it, the callback runs with
+    ``state.hasTimedOut`` and NO input rows, emits the final session,
+    and clears state.  State per user is the open session, three
+    longs — bounded no matter how long the session runs — and expiry
+    is driven by the engine's watermark bookkeeping, not by data
+    arrival for that user (an idle user's session closes because
+    OTHER traffic advances the watermark, which needs a later batch
+    to advance it, then one more batch to run the timers).
+
+    Known limit (shared by every eager-emission GroupState
+    sessionizer): a session closed by an IN-BATCH gap is emitted
+    immediately, so a late event that would have bridged that gap —
+    arriving in a later batch but inside the watermark — starts a
+    new session instead of extending the emitted one.  When batches
+    arrive in event-time order the emitted session set equals the
+    batch gaps-and-islands sessionization exactly.
+    """
+    gap = gap_seconds * 1_000_000
+    names = USER_SESSION_SCHEMA.fieldNames()
 
     def emit(key_value, sessions) -> pd.DataFrame:
         return pd.DataFrame([dict(zip(names, (key_value, s, e, c)))
@@ -240,7 +110,7 @@ def _gap_sessions(events: DataFrame, time_col: str,
         times: list[int] = []
         for pdf in pdfs:
             if len(pdf):
-                times.extend(int(x) for x in pdf[time_col])
+                times.extend(int(x) for x in pdf["ts_us"])
         intervals.extend([t, t, 1] for t in sorted(times))
         merged = _merge_gap_intervals(intervals, gap)
         if not merged:
@@ -259,7 +129,7 @@ def _gap_sessions(events: DataFrame, time_col: str,
         # and must stay armed — a next-batch event at end + gap passes
         # the lagging late filter and extends the session under the
         # gap<= merge rule.
-        expiry_ms = -(-(end + gap) * 1000 // units_per_second)
+        expiry_ms = -(-(end + gap) // 1000)
         if expiry_ms < state.getCurrentWatermarkMs():
             closed.append((start, end, n))
             if state.exists:
@@ -270,83 +140,12 @@ def _gap_sessions(events: DataFrame, time_col: str,
         if closed:
             yield emit(key_value[0], closed)
 
-    return (events.withWatermark("ts", watermark)
-            .groupBy(names[0])
-            .applyInPandasWithState(
-                fn, schema, _GAP_SESSION_STATE, "append",
-                GroupStateTimeout.EventTimeTimeout))
-
-
-TIMEOUT_SESSION_SCHEMA = StructType([
-    StructField("vehicle_id", StringType()),
-    StructField("session_start", LongType()),
-    StructField("session_end", LongType()),
-    StructField("n_reports", LongType()),
-])
-
-
-def timed_out_sessions(feed_stream: DataFrame, *,
-                       gap_seconds: int = 600,
-                       watermark: str = "5 seconds") -> DataFrame:
-    """TIMER-driven sessionization: a session row is emitted exactly
-    once, when the event-time timer fires (watermark passes
-    last_event + gap) — not re-emitted on every update.  Sessions are
-    per vehicle, in epoch seconds.
-
-    This is the GroupState timeout facility that the built-in
-    session_window aggregation (sessionized_vehicle_activity) hides:
-    each key re-arms ``setTimeoutTimestamp(end + gap)`` on every
-    update; when the watermark crosses it, the callback runs with
-    ``state.hasTimedOut`` and NO input rows, emits the final session,
-    and clears state.  State per key is three longs — bounded no
-    matter how long the session runs — and expiry is driven by the
-    engine's watermark bookkeeping, not by data arrival for that key
-    (an idle vehicle's session closes because OTHER traffic advances
-    the watermark; a NoTimeout design would leak the key forever).
-
-    Known limit (shared by every eager-emission GroupState
-    sessionizer): a session closed by an IN-BATCH gap is emitted
-    immediately, so a late event that would have bridged that gap —
-    arriving in a later batch but inside the watermark — starts a
-    new session instead of extending the emitted one (a split pair
-    where ground truth is one session).  Emission is still
-    exactly-once per detected session; if bridged-gap exactness
-    matters more than eager output, use the built-in session_window
-    aggregation, which buffers until the watermark before emitting.
-    """
-    pos = _positions(feed_stream).select(
-        "vehicle_id", "timestamp_epoch", "ts")
-    return _gap_sessions(pos, "timestamp_epoch", 1, gap_seconds,
-                         watermark, TIMEOUT_SESSION_SCHEMA)
-
-
-USER_SESSION_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("session_start_us", LongType()),
-    StructField("session_end_us", LongType()),
-    StructField("n_events", LongType()),
-])
-
-
-def timed_out_user_sessions(events_stream: DataFrame, *,
-                            gap_seconds: int = 1800,
-                            watermark: str = "1 second") -> DataFrame:
-    """:func:`timed_out_sessions` keyed by user over a generic
-    ``(user_id long, ts timestamp)`` event stream, at microsecond
-    precision (so its output is comparable against the batch
-    gaps-and-islands spec, b29).
-
-    Same contract and the same known limit: sessions closed by
-    in-batch data are emitted eagerly and exactly once; the trailing
-    open session per key is emitted when the watermark passes
-    ``end + gap`` (which needs a later batch to advance the watermark,
-    then one more batch to run the timers).  When batches arrive in
-    event-time order the emitted session set equals the batch
-    gaps-and-islands sessionization exactly.
-    """
     rows = events_stream.select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("ts"),
         F.unix_micros("ts").alias("ts_us"))
-    return _gap_sessions(rows, "ts_us", 1_000_000, gap_seconds,
-                         watermark, USER_SESSION_SCHEMA)
+    return (rows.withWatermark("ts", watermark)
+            .groupBy("user_id")
+            .applyInPandasWithState(
+                fn, USER_SESSION_SCHEMA, _GAP_SESSION_STATE, "append",
+                GroupStateTimeout.EventTimeTimeout))
